@@ -1,6 +1,7 @@
 package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -82,23 +83,7 @@ object Merge {
   private val OpRankCol = "_op_rank"
   private val TieCol = "_tb"
   private val SrcCol = "_src" // 1 = from batch, 0 = carried from target
-  private val debugTiming = sys.env.contains("GRAFT_DEBUG_TIMING")
-
-  /** Pre-computed copy-on-write pre-pass stats for ONE batch: the touched
-    * buckets with per-bucket (rows, minLsn, maxLsn). A batch-mode replay
-    * computes these for ALL its slices in one pass over the event stream
-    * ([[CdcPipeline.replay]]) instead of paying one narrow pre-pass job per
-    * batch — N scans of the stream become 1 (guide §1.2: remove passes).
-    * Merge TRUSTS this only after revalidating its basis against the
-    * snapshot it actually merges into: the bucket layout (numBuckets + key
-    * columns) must match, and under orderedDelivery the snapshot watermark
-    * must sit BELOW the slice's min LSN (else the watermark filter would
-    * drop rows the precomputed counts include — a resumed replay falls back
-    * to the per-batch pre-pass for exactly the batches that straddle it). */
-  case class PreStats(numBuckets: Int, keys: Seq[String],
-      rows: Seq[(Int, Long, Long, Long)]) { // (bucket, n, minLsn, maxLsn)
-    def minLsn: Long = if (rows.isEmpty) Long.MaxValue else rows.map(_._3).min
-  }
+  private val ObservationTimeoutSec = 900L
 
   /** Bounded wait for an Observation's metrics. `Observation.get` blocks
     * FOREVER if the execution's metrics event is never delivered — the
@@ -110,26 +95,18 @@ object Merge {
     * Observation consumer — the CLI extract verb included — fails loudly
     * instead of hanging on a delivery bug. */
   private[graft] def awaitMetrics(obs: Observation): Map[String, Any] = {
-    val sec = sys.props.getOrElse("graft.observation.timeoutSec", "900").toLong
     try {
       val row = scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(sec, java.util.concurrent.TimeUnit.SECONDS))
+        scala.concurrent.duration.Duration(ObservationTimeoutSec, java.util.concurrent.TimeUnit.SECONDS))
       row.schema.fieldNames.zip(row.toSeq).toMap
     } catch {
       case _: java.util.concurrent.TimeoutException =>
         throw new IllegalStateException(
-          s"observation '${obs.name}' metrics not delivered within ${sec}s after the " +
+          s"observation '${obs.name}' metrics not delivered within ${ObservationTimeoutSec}s after the " +
           "merge job completed — inside foreachBatch this indicates more than one " +
           "CollectMetrics node on the write job (only one ever reports); failing " +
           "loudly instead of hanging the stream")
     }
-  }
-  private def phase[T](name: String, batchId: Long)(f: => T): T = {
-    val t = System.nanoTime()
-    val r = f
-    if (debugTiming)
-      System.err.println(f"[merge-timing] batch=$batchId $name%-10s ${(System.nanoTime() - t) / 1e9}%.2fs")
-    r
   }
 
   /** @param orderedDelivery caller guarantees every event LSN in this batch
@@ -161,12 +138,22 @@ object Merge {
       orderedDelivery: Boolean = false,
       mergeOnRead: Boolean = false,
       keyCols: Seq[String] = CdcModel.KeyCols,
-      metaCols: Set[String] = Set(CdcModel.LsnCol, CdcModel.OpCol, "eventTime"),
-      preStats: Option[PreStats] = None): MergeStats = {
+      metaCols: Set[String] = Set(CdcModel.LsnCol, CdcModel.OpCol, "eventTime")): MergeStats = {
     val t0 = System.nanoTime()
     val spark = events.sparkSession
     val snap = table.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"target table ${table.root} has no snapshot — bootstrap first"))
+    // a batch that applies nothing: fenced (already committed, so it reports
+    // no offsets of its own), or empty (a metadata-only commit that records
+    // the epoch — no schema evolution, watermark unchanged)
+    def appliedNothing(version: Long, fenced: Boolean) =
+      MergeStats(batchId, version, 0, 0, 0, 0, 0, 0, 0, -1, -1,
+        schemaEvolved = false, skippedFenced = fenced, (System.nanoTime() - t0) / 1000000,
+        sourceOffsets = if (fenced) Map.empty else sourceOffsets)
+    def metadataOnlyCommit(): MergeStats = appliedNothing(
+      table.replaceFiles(snap, Set.empty, Nil, None, appId, batchId,
+        snap.watermarkLsn, snap.sourceOffsets ++ sourceOffsets).version,
+      fenced = false)
 
     // --- commit-epoch fencing (replayed foreachBatch after restart).
     // >= not ==: batchIds are monotonic within an appId (the foreachBatch
@@ -183,8 +170,7 @@ object Merge {
         System.err.println(s"[merge] fencing batch $batchId of app '$appId': table " +
           s"${table.root} is already at batch ${snap.batchId} — if this is not a " +
           "zombie writer but a reset checkpoint, restart the stream under a NEW appId")
-      return MergeStats(batchId, snap.version, 0, 0, 0, 0, 0, 0, 0, -1, -1,
-        schemaEvolved = false, skippedFenced = true, (System.nanoTime() - t0) / 1000000)
+      return appliedNothing(snap.version, fenced = true)
     }
 
     val numBuckets = snap.numBuckets
@@ -263,35 +249,25 @@ object Merge {
     // so the bucket set (the only thing the pre-pass is FOR) is worthless
     // and the stats can ride the main job exactly like MOR's.
     val appendOnly = mergeOnRead || snap.files.isEmpty
-    // precomputed slice stats are trusted only on a matching bucket layout
-    // and (under orderedDelivery) a watermark strictly below the slice — see
-    // [[PreStats]]; a mismatch falls back to the per-batch pre-pass
-    val preGiven: Option[Seq[(Int, Long, Long, Long)]] = preStats.collect {
-      case ps if !appendOnly && ps.numBuckets == numBuckets && ps.keys == keys &&
-        (!orderedDelivery || snap.watermarkLsn < ps.minLsn) => ps.rows
-    }
+    // (bucket, n, minLsn, maxLsn) per touched bucket — always this batch's
+    // own pass over its own rows, after the watermark filter of the snapshot
+    // it commits against: stats learned anywhere else could disagree with
+    // what this merge actually applies
     val pre: Option[Seq[(Int, Long, Long, Long)]] =
       if (appendOnly) None
-      else preGiven.orElse(Some(phase("pre", batchId) { batchB
+      else Some(batchB
         .groupBy(col(LakeTable.BucketCol))
         .agg(count(lit(1)).as("n"), min(col(CdcModel.LsnCol)).as("mn"),
           max(col(CdcModel.LsnCol)).as("mx"))
         .collect().toSeq
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))) }))
-    // MOR deliberately runs NO emptiness probe: the take(1) probe this used
-    // to run was a full extra job per batch paid by EVERY batch, to save an
-    // empty-shuffle job only the RARE all-fenced/watermark-filtered batch
-    // needs — an empty batch now runs the (0-row, fast) merge job and is
-    // detected after it by (eventsIn == 0 && no files written), taking the
-    // same metadata-only commit as before.
-    if (pre.exists(_.map(_._2).sum == 0L)) {
-      // nothing to apply — metadata-only commit to record the epoch
-      val s = table.replaceFiles(snap, Set.empty, Nil, None, appId, batchId,
-        snap.watermarkLsn, snap.sourceOffsets ++ sourceOffsets)
-      return MergeStats(batchId, s.version, 0, 0, 0, 0, 0, 0, 0, -1, -1,
-        schemaEvolved = false, skippedFenced = false, (System.nanoTime() - t0) / 1000000,
-        sourceOffsets = sourceOffsets)
-    }
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))))
+    // An append-only batch runs NO emptiness probe: a probe would be a full
+    // extra job paid by EVERY batch, to save an empty-shuffle job only the
+    // RARE all-fenced/watermark-filtered batch needs — an empty batch runs
+    // the (0-row, fast) merge job and is detected after it by
+    // (eventsIn == 0 && no files written), taking the same metadata-only
+    // commit.
+    if (pre.exists(_.map(_._2).sum == 0L)) return metadataOnlyCommit()
     val buckets = pre.map(_.map(_._1).toSet).getOrElse(Set.empty)
 
     // --- affected-bucket pruning: read only target files that can match;
@@ -351,7 +327,7 @@ object Merge {
       .select(batchConformed.columns.map(col): _*) // align column order for union
       .unionByName(batchConformed)
       .withColumn(KeyHash, xxhash64(keys.map(col): _*))
-    val combined0 =
+    val combined =
       (if (salt <= 1) unioned
        else unioned.withColumn(SaltCol, pmod(col(KeyHash), lit(salt))))
       .repartition(shufflePartitions, shuffleKeys: _*)
@@ -360,7 +336,6 @@ object Merge {
       // content — identical values to computing them per-side pre-union
       .withColumn(OpRankCol, col(CdcModel.DeletedCol).cast("int"))
       .withColumn(TieCol, tieBreak)
-    val combined = combined0
 
     // --- job 2: merge + write. LWW winner per key via an explicit
     // sort-within-partitions + row_number window: the sort we provide is
@@ -386,14 +361,10 @@ object Merge {
        else Seq(col(LakeTable.BucketCol), col(SaltCol), col(KeyHash))) ++ keys.map(col)
     val sortKeys = partCols ++ Seq(
       col(CdcModel.RowLsnCol).desc, col(OpRankCol).desc, col(TieCol).desc)
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(partCols: _*)
       .orderBy(col(CdcModel.RowLsnCol).desc, col(OpRankCol).desc, col(TieCol).desc)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(partCols: _*)
-      .orderBy(col(CdcModel.RowLsnCol).desc, col(OpRankCol).desc, col(TieCol).desc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.unboundedFollowing)
+    val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     // ONE Observation for every lineage statistic, attached to the single
     // job (inside a streaming foreachBatch only ONE of two CollectMetrics
     // nodes on the write job ever reports — a second Observation.get
@@ -431,7 +402,7 @@ object Merge {
       .select((col(LakeTable.BucketCol) +: keys.map(col)) ++
         payloadCols.map(col): _*)
 
-    val added = phase("write", batchId) { table.writeDataFilesPrePartitioned(winners) }
+    val added = table.writeDataFilesPrePartitioned(winners)
     val m = awaitMetrics(obs)
     val distinctKeys =
       if (appendOnly) added.map(_.rows).sum // one winner row per key (footer-true)
@@ -447,14 +418,8 @@ object Merge {
     }
     // the all-fenced/watermark-filtered MOR batch (no probe ran — see above):
     // nothing was applied, so take the same metadata-only commit the CoW
-    // empty-pre path takes — no schema evolution, watermark unchanged
-    if (appendOnly && eventsIn == 0L && added.isEmpty) {
-      val s = table.replaceFiles(snap, Set.empty, Nil, None, appId, batchId,
-        snap.watermarkLsn, snap.sourceOffsets ++ sourceOffsets)
-      return MergeStats(batchId, s.version, 0, 0, 0, 0, 0, 0, 0, -1, -1,
-        schemaEvolved = false, skippedFenced = false, (System.nanoTime() - t0) / 1000000,
-        sourceOffsets = sourceOffsets)
-    }
+    // empty-pre path takes
+    if (appendOnly && eventsIn == 0L && added.isEmpty) return metadataOnlyCommit()
     val bucketsTouched = if (appendOnly) added.map(_.bucket).distinct.size else buckets.size
 
     val removed = targetFiles.map(_.path).toSet
@@ -463,7 +428,7 @@ object Merge {
     // which case its commit changes no schema and lineage must not record
     // an evolution point for it
     var committedEvolved = schemaEvolved
-    val committed = phase("commit", batchId) {
+    val committed =
       try {
         table.replaceFiles(snap, removed, added,
           if (schemaEvolved) Some(evolvedSchema.json) else None,
@@ -497,11 +462,8 @@ object Merge {
             // foreachBatch contract this engine mirrors); concurrent
             // unordered writers must use distinct appIds. The staged files
             // become orphans; vacuum collects them.
-            if (fresh.appId == appId && fresh.batchId >= batchId && batchId >= 0) {
-              return MergeStats(batchId, fresh.version, 0, 0, 0, 0, 0, 0, 0, -1, -1,
-                schemaEvolved = false, skippedFenced = true,
-                (System.nanoTime() - t0) / 1000000)
-            }
+            if (fresh.appId == appId && fresh.batchId >= batchId && batchId >= 0)
+              return appliedNothing(fresh.version, fenced = true)
             // a rebucket() (or any layout change) invalidates the staged
             // files — they are bucketed under the OLD numBuckets. Rethrow so
             // the outer applyBatch loop re-merges with the new layout.
@@ -522,7 +484,6 @@ object Merge {
           if (done == null) throw last
           done
       }
-    }
 
     MergeStats(batchId, committed.version, eventsIn, distinctKeys,
       eventsIn - distinctKeys, bucketsTouched, targetFiles.size,

@@ -300,8 +300,7 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
   def applyBatch(events: DataFrame, batchId: Long,
       sourceOffsets: Map[String, Long] = Map.empty,
       orderedDelivery: Boolean = false,
-      maxCommitRetries: Int = 5,
-      preStats: Option[Merge.PreStats] = None): MergeStats = {
+      maxCommitRetries: Int = 5): MergeStats = {
     // retry wraps ONLY the merge: a conflict from the post-merge compaction
     // must never re-run an already-committed batch (it would re-append every
     // row as duplicate generations and double-count lineage) — maintenance
@@ -311,7 +310,7 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
     while (stats == null) {
       try {
         stats = Merge(table, events, appId, batchId, sourceOffsets,
-          orderedDelivery, mergeOnRead, preStats = preStats)
+          orderedDelivery, mergeOnRead)
       } catch {
         case e: graft.lake.CommitConflictException if attempt < maxCommitRetries =>
           attempt += 1
@@ -394,50 +393,16 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
     if (bounds.isNullAt(0)) return Nil
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val width = math.max(1L, (hi - lo + numBatches) / numBatches)
-    // Copy-on-write pre-pass stats for EVERY slice in ONE pass over the
-    // stream (the per-batch pre-pass re-scanned the full event frame once
-    // per batch — N scans for an N-batch replay; guide §1.2 "remove
-    // passes"). Slice index = (lsn - lo) div width, exactly the range
-    // filters below. Merge revalidates the basis per batch (layout match +
-    // watermark below the slice) and falls back to its own pre-pass when it
-    // cannot trust a slice — so a resumed replay over a table whose
-    // watermark straddles a slice stays exact. The collect is bounded at
-    // numBatches × numBuckets rows; skip the precompute (old behavior) when
-    // that bound is driver-hostile.
-    val preBySlice: Map[Long, Seq[(Int, Long, Long, Long)]] = {
-      val snap = if (mergeOnRead) None else table.currentSnapshot
-      snap match {
-        case Some(s) if numBatches.toLong * s.numBuckets <= 1000000L =>
-          val keys = CdcPipeline.effectiveKeys(s)
-          LakeTable.withBucket(events, keys, s.numBuckets)
-            // integer `div`, NOT `/` (double division truncates above 2^53
-            // and can round a slice-boundary LSN into the next slice)
-            .groupBy(expr(s"(cast(${CdcModel.LsnCol} as bigint) - ${lo}L) div ${width}L")
-              .as("_slice"), col(LakeTable.BucketCol))
-            .agg(count(lit(1)).as("n"), min(col(CdcModel.LsnCol)).as("mn"),
-              max(col(CdcModel.LsnCol)).as("mx"))
-            .collect().toSeq
-            .groupBy(_.getLong(0))
-            .map { case (sl, rows) =>
-              sl -> rows.map(r => (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-            }
-        case _ => Map.empty
-      }
-    }
-    val preBasis = table.currentSnapshot
     (0 until numBatches).map { i =>
       val (b0, b1) = (lo + i * width, lo + (i + 1) * width)
       val slice = events.filter(col(CdcModel.LsnCol) >= b0 && col(CdcModel.LsnCol) < b1)
       // LSN-range slices ascend, so ordered delivery holds and the watermark
       // fast-path may skip already-applied prefixes on re-runs; empty slices
-      // still commit (fencing epoch advances uniformly)
-      val pre =
-        if (mergeOnRead || preBasis.isEmpty) None
-        else Some(Merge.PreStats(preBasis.get.numBuckets,
-          CdcPipeline.effectiveKeys(preBasis.get),
-          preBySlice.getOrElse(i.toLong, Nil)))
+      // still commit (fencing epoch advances uniformly). Each slice is a
+      // self-contained batch: its stats come from its own pre-pass against
+      // the snapshot it commits on, exactly as a streamed batch's do
       applyBatch(slice, startBatchId + i, Map("replay" -> (b1 - 1)),
-        orderedDelivery = true, preStats = pre)
+        orderedDelivery = true)
     }
   }
 

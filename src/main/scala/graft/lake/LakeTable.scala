@@ -446,23 +446,12 @@ final class LakeTable(val root: String, spark: SparkSession) {
     fs.mkdirs(dataDir)
     val staging = new HPath(dataDir, s".staging-${UUID.randomUUID()}")
     try {
-      timed("parquet-write") {
-        df.write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
-      }
-      timed("collect-staged") { collectStagedFiles(staging) }
+      df.write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
+      collectStagedFiles(staging)
     } finally {
       fs.delete(staging, true)
     }
   }
-
-  private def timed[T](name: String)(f: => T): T =
-    if (!LakeTable.debugTiming) f
-    else {
-      val t = System.nanoTime()
-      val r = f
-      System.err.println(f"[lake-timing] $name%-14s ${(System.nanoTime() - t) / 1e9}%.2fs")
-      r
-    }
 
   /** Move staged parquet out of `_bucket=N/part-*.parquet` layout into flat
     * uuid-named immutable files, recording (bucket, rows, bytes) per file.
@@ -818,8 +807,6 @@ final class LakeTable(val root: String, spark: SparkSession) {
 object LakeTable {
   /** Name of the physical bucket column carried inside data files. */
   val BucketCol = "_bucket"
-
-  private val debugTiming = sys.env.contains("GRAFT_DEBUG_TIMING")
 
   /** Shared daemon pool for driver-side metadata/footer IO fan-out. One
     * process-wide pool (not per call): a streaming driver does this fan-out

@@ -43,18 +43,43 @@ class CdcPipelineSpec extends SparkSuite {
   lazy val events = DerivedEvents.fromDocuments(
     spark.read.parquet(s"$sfDir/documents.parquet")).cache()
 
-  test("replayed final state matches LWW oracle (sha256 per row)") {
+  /** Replays `events` in `numBatches` into a fresh copy-on-write table of
+    * `numBuckets` buckets and compares the live state with the oracle. With
+    * `preload`, the lower half of the LSN range is first applied as one
+    * batch, so every replayed batch merges into a populated table. */
+  private def assertReplayMatchesOracle(events: DataFrame, numBuckets: Int,
+      numBatches: Int, preload: Boolean): Unit = {
     val root = SparkTestBase.tmpDir("cdc-e2e")
     val p = new CdcPipeline(LakeTable(root)(spark), "app-e2e")
-    p.bootstrap(numBuckets = 16)
-    val stats = p.replay(events, numBatches = 4)
-    assert(stats.nonEmpty)
+    p.bootstrap(numBuckets = numBuckets)
+    val rest =
+      if (!preload) events
+      else {
+        val b = events.agg(min("lsn"), max("lsn")).collect()(0)
+        val split = (b.getLong(0) + b.getLong(1) + 1) / 2
+        p.applyBatch(events.filter(col("lsn") < split), 0L)
+        events.filter(col("lsn") >= split)
+      }
+    val stats = p.replay(rest, numBatches, startBatchId = if (preload) 1L else 0L)
+    assert(stats.size === numBatches)
     val got = finalState(p)
     val want = oracle(events)
     assert(got.count() === want.count())
     assert(got.exceptAll(want).count() === 0)
     assert(want.exceptAll(got).count() === 0)
   }
+
+  test("replayed final state matches LWW oracle (sha256 per row)") {
+    assertReplayMatchesOracle(events, numBuckets = 16, numBatches = 4, preload = false)
+  }
+
+  // numBatches × numBuckets on both sides of 1e6: above it, a cross-batch
+  // stats precompute that replay used to run silently dropped every batch
+  for (numBuckets <- Seq(16, 250000))
+    test(s"copy-on-write replay into a populated table matches the LWW oracle ($numBuckets buckets)") {
+      assertReplayMatchesOracle(SyntheticEvents.generate(spark, 400), numBuckets,
+        numBatches = 5, preload = true)
+    }
 
   test("time-travel live state: liveState(table, v) reproduces each batch's committed state") {
     val root = SparkTestBase.tmpDir("cdc-tt")

@@ -195,6 +195,43 @@ class PlanSpec extends SparkSuite {
     assert(exchanges == 1, s"salted shape added a shuffle:\n$plan")
   }
 
+  test("MERGE stats path: one pre-pass per copy-on-write batch, none when append-only") {
+    val sc = spark.sparkContext
+    val counter = new MergeActionCounter
+    sc.addSparkListener(counter)
+    // listener delivery is async but ordered: once a tagged no-op job's start
+    // event arrives, every earlier job's has too
+    def drain(): Unit = {
+      val tag = java.util.UUID.randomUUID().toString
+      sc.setLocalProperty(MergeActionCounter.SentinelProp, tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(MergeActionCounter.SentinelProp, null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!counter.sentinels.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(counter.sentinels.contains(tag), "listener bus did not drain")
+    }
+    def prepasses(f: => Any): Int = {
+      drain(); counter.actions.set(0); f; drain(); counter.actions.get
+    }
+    try {
+      val ev = graft.model.SyntheticEvents.generate(spark, 400)
+      val (lower, upper) = (ev.filter(col("lsn") < 200), ev.filter(col("lsn") >= 200))
+      val cow = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-jobs-cow"))(spark),
+        "jobs-cow", lineage = false)
+      cow.bootstrap(numBuckets = 8)
+      assert(prepasses(cow.applyBatch(lower, 0L)) === 0,
+        "a batch into an empty target is append-only: no pre-pass")
+      assert(prepasses(cow.replay(upper, numBatches = 4, startBatchId = 1L)) === 4,
+        "a copy-on-write replay runs exactly one pre-pass per batch")
+      val mor = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-jobs-mor"))(spark),
+        "jobs-mor", lineage = false, mergeOnRead = true, compactEveryFiles = 0)
+      mor.bootstrap(numBuckets = 8)
+      mor.applyBatch(lower, 0L)
+      assert(prepasses(mor.applyBatch(upper, 1L)) === 0,
+        "merge-on-read never runs a pre-pass")
+    } finally sc.removeSparkListener(counter)
+  }
+
   test("generation-aware reads: single-generation tables plan no shuffle and no window") {
     val ev = DerivedEvents.fromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
     // copy-on-write: every bucket holds exactly one file after a merge —
@@ -372,4 +409,38 @@ class PlanSpec extends SparkSuite {
     } yield (a, b)).toSet
     assert(capped === expected)
   }
+}
+
+/** Counts the Spark actions whose innermost `graft` call-site frame is in
+  * Merge.scala: the copy-on-write pre-pass is the only action Merge runs
+  * itself — its write is issued from LakeTable. An action is a SQL
+  * execution (AQE runs one as several jobs: shuffle-map stages, then the
+  * result) or a job outside any SQL execution, such as an RDD action. AQE
+  * submits jobs from a pool thread, so a SQL execution's frame comes from
+  * its start event, which carries the call site of the thread that ran it. */
+private final class MergeActionCounter extends org.apache.spark.scheduler.SparkListener {
+  import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
+  private val GraftFrame = """\bgraft\.[\w.$]+\(([\w]+\.scala)""".r
+  private def fromMerge(callSite: String): Boolean =
+    GraftFrame.findFirstMatchIn(callSite).exists(_.group(1) == "Merge.scala")
+
+  val actions = new java.util.concurrent.atomic.AtomicInteger()
+  val sentinels: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+      if (fromMerge(s.details)) actions.incrementAndGet()
+    case _ =>
+  }
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = {
+    val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+    prop(MergeActionCounter.SentinelProp).foreach(sentinels.add)
+    if (prop("spark.sql.execution.id").isEmpty && e.stageInfos.exists(si => fromMerge(si.details)))
+      actions.incrementAndGet()
+  }
+}
+
+private object MergeActionCounter {
+  val SentinelProp = "graft.test.sentinel"
 }
