@@ -2,7 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.functions._
 
-import graft.lake.{LakeTable, DataFile}
+import graft.lake.LakeTable
 import graft.model.CdcModel
 
 /** Table maintenance: tombstone GC and small-file compaction.
@@ -89,21 +89,20 @@ object Compaction {
     val fragmented = filesPerBucket.filter(_._2.size > maxFilesPerBucket).keySet
 
     // find buckets holding expired tombstones (cheap scan of only the two
-    // relevant columns — parquet column pruning keeps this tiny). Row LSNs
-    // are non-negative, so a negative horizon (auto-compaction's -1 =
-    // "fragmentation only, GC nothing") can never match — skip even
-    // CONSTRUCTING the frame (reader setup lists every data file) rather
-    // than paying a per-maintenance-cycle listing for an unsatisfiable
-    // filter. The scan reads `snap`'s own buckets, not the current
-    // snapshot's, so every bucket id this run computes refers to one layout
-    // even if the table moves mid-run.
+    // relevant columns — parquet column pruning keeps this tiny; the bucket
+    // is each file's partition value). Row LSNs are non-negative, so a
+    // negative horizon (auto-compaction's -1 = "fragmentation only, GC
+    // nothing") can never match — skip the job. The scan reads `snap`'s own
+    // files, not the current snapshot's, so every bucket id this run uses
+    // refers to one layout even if the table moves mid-run.
+    val stored = table.scan(snap)
     val tombBuckets =
       if (horizonLsn < 0L || !snap.schema.fieldNames.contains(CdcModel.DeletedCol))
         Set.empty[Int]
-      else table.readBuckets(snap, filesPerBucket.keySet)
+      else stored
         .filter(coalesce(col(CdcModel.DeletedCol), lit(false)) &&
           col(CdcModel.RowLsnCol) <= horizonLsn)
-        .select(LakeTable.bucketExpr(keyCols, snap.numBuckets).as("b"))
+        .select(LakeTable.BucketCol)
         .distinct().collect().map(_.getInt(0)).toSet
 
     val candidates = tombBuckets ++ fragmented
@@ -117,7 +116,7 @@ object Compaction {
     // fold merge-on-read generations through the SAME total order reads use
     // ([[CdcPipeline.lwwResolve]] — one definition, so a tie-break change can
     // never diverge the two), then drop tombstones behind the horizon
-    val raw = table.readBuckets(snap, buckets)
+    val raw = stored.where(col(LakeTable.BucketCol).isin(buckets.toSeq: _*))
     val resolved = CdcPipeline.lwwResolve(raw, keyCols)
     val del =
       if (resolved.columns.contains(CdcModel.DeletedCol))
@@ -125,9 +124,8 @@ object Compaction {
       else lit(false)
     val kept = resolved
       .filter(!(del && col(CdcModel.RowLsnCol) <= horizonLsn))
-      .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(keyCols, snap.numBuckets))
       .repartition(col(LakeTable.BucketCol))
-    val added = table.writeDataFilesPrePartitioned(kept)
+    val added = table.writeDataFiles(kept)
     val removed = snap.files.filter(f => buckets.contains(f.bucket)).map(_.path).toSet
 
     // Commit-only retry (mirrors the MOR merge's): under sustained ingest a

@@ -240,7 +240,8 @@ object CdcFeed {
       .select(keys.map(col): _*)
     // cache the stale set: the plan under it (two LWW live-state resolutions
     // + the anti-join) is the expensive part, and it is consumed twice — the
-    // emptiness probe and the merge (whose CoW pre-pass replays its input)
+    // emptiness probe and the merge (whose CoW write job evaluates its input
+    // twice: for the broadcast bucket set and for the union)
     val stale = CdcPipeline.liveState(target)
       .select(keys.map(col): _*)
       .join(srcLiveKeys, keys, "left_anti")

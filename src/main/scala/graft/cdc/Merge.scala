@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{LakeTable, Snapshot, DataFile}
+import graft.lake.{LakeTable, Snapshot}
 import graft.model.CdcModel
 
 /** Per-batch outcome, persisted to the lineage table (SURVEY.md §7.1#6). */
@@ -40,25 +40,33 @@ case class MergeStats(
   * staging+transaction atomicity (load.go:158-168) as an atomic snapshot
   * commit.
   *
-  * Physical plan (deliberate, for 10^10-event scale — two jobs per batch):
-  *  1. a narrow pre-pass over the batch (no shuffle: map-side partial agg to
-  *     one row) collects the touched-bucket set + event count. The bucket set
-  *     prunes the target scan to only files that can contain a matched key
-  *     (affected-partition pruning); an empty batch short-circuits to a
-  *     metadata-only commit.
-  *  2. the merge job — ONE shuffle: union(prunedTarget, batch) repartitioned
-  *     by `_bucket` alone. Hash-partitioning on `_bucket` satisfies the
-  *     groupBy's clustered distribution on (_bucket, keys) because the
-  *     partitioning expressions are a subset of the grouping keys, so
-  *     Catalyst inserts no second shuffle, and the aggregated output stays
-  *     one-bucket-per-task so the writer emits exactly one file per touched
-  *     bucket. `max_by(struct(payload), orderKey)` resolves within-batch
-  *     duplicate LSNs, multiple updates per key, and batch-vs-table LWW in a
-  *     single hash aggregation with map-side combine. Deletes win and persist
-  *     as tombstones (`_deleted=true`) so replayed or out-of-order pre-delete
-  *     events can never resurrect a key ([[Compaction]] GCs them later).
-  *     Lineage statistics (distinct keys, LWW conflicts, LSN range, rows
-  *     written) ride on the same job via `Observation` — no extra pass.
+  * Physical plan (deliberate, for 10^10-event scale — ONE job per batch,
+  * the write, with ONE shuffle): union(target, batch) repartitioned by
+  * `_bucket` alone, then an explicit sort + row_number window picks each
+  * key's LWW winner and the writer emits one file per touched bucket.
+  *  - The target side is the snapshot's manifest-backed relation
+  *    ([[LakeTable.scan]]), whose partition column is `_bucket`,
+  *    left-semi-joined to the batch's distinct buckets. That join is a
+  *    broadcast on the partition column, so dynamic partition pruning cuts
+  *    the target scan at run time to the files of the touched buckets
+  *    (affected-partition pruning) — no pre-pass collects the bucket set
+  *    first. The broadcast side carries `_bucket >= 0`, a no-op (pmod is
+  *    non-negative) that Catalyst needs to see a selective predicate, or it
+  *    declines to prune. Merge-on-read and an empty table skip the target.
+  *  - Hash-partitioning on `_bucket` satisfies the window's clustered
+  *    distribution on (_bucket, keys) because the partitioning expressions
+  *    are a subset of the window keys, so Catalyst inserts no second shuffle,
+  *    and each task holds whole buckets. Deletes win and persist as
+  *    tombstones (`_deleted=true`) so replayed or out-of-order pre-delete
+  *    events can never resurrect a key ([[Compaction]] GCs them later).
+  *  - Every batch statistic rides the same job on one `Observation`: events
+  *    in, LSN range, distinct keys, and the buckets whose target rows the
+  *    job read. The commit removes exactly the files of those buckets —
+  *    never the buckets of the written files, which can differ when the
+  *    batch's two evaluations (broadcast side, union side) disagree: an
+  *    unread bucket keeps its old file, and the generation-aware read
+  *    resolves the two generations. An empty batch is detected after the
+  *    job and takes a metadata-only commit.
   *
   * Skew, three layers: (1) the full primary key (repo, path, commit) feeds
   * the bucket hash, so a hot *repo* is spread across buckets by its
@@ -232,52 +240,24 @@ object Merge {
       else events
     val batchB = LakeTable.withBucket(fresh, keys, numBuckets)
 
-    // --- job 1 (copy-on-write ONLY): touched buckets + batch size + lsn
-    // range. The bucket set must exist BEFORE the merge plan is built — it
-    // prunes the target scan — so CoW pays one narrow pre-pass over the
-    // batch (groupBy(_bucket) with primitive aggregates stays in
-    // HashAggregateExec: codegen, map-side combine, ≤numBuckets rows out).
-    // Merge-on-read never reads the target, needs no bucket set up front,
-    // and therefore SKIPS this job entirely: batch size and LSN range ride
-    // the main job as an Observation, and the touched-bucket count falls
-    // out of the files written. Measured: the pre-pass was ~1-1.4s of an
-    // ~8s 1M-row MOR batch (~13% of sustained-ingest throughput). ---
-    // APPEND-ONLY apply = the merge writes new files without reading or
-    // removing any existing one: merge-on-read by mode, and ALSO a
-    // copy-on-write batch into a table with no data files yet (bootstrap
-    // batch 0 / the first load after create) — there is nothing to prune,
-    // so the bucket set (the only thing the pre-pass is FOR) is worthless
-    // and the stats can ride the main job exactly like MOR's.
-    val appendOnly = mergeOnRead || snap.files.isEmpty
-    // (bucket, n, minLsn, maxLsn) per touched bucket — always this batch's
-    // own pass over its own rows, after the watermark filter of the snapshot
-    // it commits against: stats learned anywhere else could disagree with
-    // what this merge actually applies
-    val pre: Option[Seq[(Int, Long, Long, Long)]] =
-      if (appendOnly) None
-      else Some(batchB
-        .groupBy(col(LakeTable.BucketCol))
-        .agg(count(lit(1)).as("n"), min(col(CdcModel.LsnCol)).as("mn"),
-          max(col(CdcModel.LsnCol)).as("mx"))
-        .collect().toSeq
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))))
-    // An append-only batch runs NO emptiness probe: a probe would be a full
-    // extra job paid by EVERY batch, to save an empty-shuffle job only the
-    // RARE all-fenced/watermark-filtered batch needs — an empty batch runs
-    // the (0-row, fast) merge job and is detected after it by
-    // (eventsIn == 0 && no files written), taking the same metadata-only
-    // commit.
-    if (pre.exists(_.map(_._2).sum == 0L)) return metadataOnlyCommit()
-    val buckets = pre.map(_.map(_._1).toSet).getOrElse(Set.empty)
-
-    // --- affected-bucket pruning: read only target files that can match;
-    // merge-on-read appends instead and never touches existing files ---
-    val targetFiles =
-      if (mergeOnRead) Nil
-      else snap.files.filter(f => buckets.contains(f.bucket))
+    // --- the target side: the stored rows of the buckets this batch touches.
+    // `_bucket` is the manifest relation's partition value, so the left-semi
+    // join against the batch's distinct buckets is a broadcast join on the
+    // partition column and dynamic partition pruning cuts the target scan to
+    // the touched buckets' files at run time, inside this one write job — no
+    // pre-pass learns the bucket set first. `_bucket >= 0` is always true
+    // (pmod is non-negative) but is load-bearing: DPP only prunes when the
+    // broadcast side carries a predicate Catalyst deems selective
+    // (PartitionPruning.hasSelectivePredicate); without it every target file
+    // is read. Merge-on-read never reads the target and an empty table has
+    // nothing to read: a false filter lets the optimizer drop that side.
+    val stored = table.scan(snap)
     val targetRows =
-      if (mergeOnRead) table.readBuckets(snap, Set.empty) // empty, schema-typed
-      else table.readBuckets(snap, buckets)
+      if (mergeOnRead || snap.files.isEmpty) stored.where(lit(false))
+      else stored.join(
+        broadcast(batchB.select(LakeTable.BucketCol).distinct()
+          .filter(col(LakeTable.BucketCol) >= 0)),
+        Seq(LakeTable.BucketCol), "left_semi")
     val tieBreak = CdcModel.lwwTieBreak(evolvedSchema.fieldNames.toIndexedSeq)
     // stored rows re-enter the LWW total order EXACTLY as the event that
     // produced them would: (their _lsn, their tombstone flag, their content).
@@ -289,18 +269,19 @@ object Merge {
     // _deleted/content — materializing the tie-break before it would ship a
     // second full copy of `content` (the widest column) through shuffle
     // write+read and the external sort.
-    val target = SchemaEvolution.conform(targetRows, evolvedSchema)
+    // both sides carry `_bucket` through the union: the target's is its
+    // file's partition value, the batch's the hash computed above
+    val rowSchema = evolvedSchema.add(StructField(LakeTable.BucketCol, IntegerType, nullable = false))
+    val target = SchemaEvolution.conform(targetRows, rowSchema)
       .withColumn(CdcModel.DeletedCol, coalesce(col(CdcModel.DeletedCol), lit(false)))
       .withColumn(SrcCol, lit(0L))
-      .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(keys, numBuckets))
 
     val batchConformed =
       SchemaEvolution.conform(
           batchB.withColumn(CdcModel.RowLsnCol, col(CdcModel.LsnCol))
             .withColumn(CdcModel.DeletedCol, col(CdcModel.OpCol) === "D"),
-          evolvedSchema)
+          rowSchema)
         .withColumn(SrcCol, lit(1L))
-        .withColumn(LakeTable.BucketCol, LakeTable.bucketExpr(keys, numBuckets))
 
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // Sub-bucket salting (skew): partitioning the merge shuffle on _bucket
@@ -337,7 +318,7 @@ object Merge {
       .withColumn(OpRankCol, col(CdcModel.DeletedCol).cast("int"))
       .withColumn(TieCol, tieBreak)
 
-    // --- job 2: merge + write. LWW winner per key via an explicit
+    // --- the merge + write job. LWW winner per key via an explicit
     // sort-within-partitions + row_number window: the sort we provide is
     // exactly the window's required ordering, so WindowExec adds no extra
     // sort or shuffle, and every other operator in the stage (scan, union,
@@ -365,64 +346,43 @@ object Merge {
       .partitionBy(partCols: _*)
       .orderBy(col(CdcModel.RowLsnCol).desc, col(OpRankCol).desc, col(TieCol).desc)
     val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // ONE Observation for every lineage statistic, attached to the single
-    // job (inside a streaming foreachBatch only ONE of two CollectMetrics
-    // nodes on the write job ever reports — a second Observation.get
-    // deadlocked the micro-batch in the round-3 design, found by driving
-    // `replay ... mor` end-to-end; everything here keeps exactly one).
-    //
-    // MOR: the target side is EMPTY by construction (the merge never reads
-    // it), so the frame entering the window is exactly the batch — batch
-    // stats (events in, LSN range) are a plain pre-window CollectMetrics
-    // (count/min/max: no window machinery), and distinctKeys = the written
-    // row count the parquet footers already report (one winner per key).
-    // The round-5 shape computed all four as unbounded-frame window aggs,
-    // which forced WindowExec to buffer and re-walk every key group; with
-    // them gone the window evaluates ONLY the streaming row_number — the
-    // hot-path CPU cost of the 1M-row sustained-ingest batch drops with it.
-    // CoW keeps the window-agg shape: its frame carries target rows, so
-    // distinctKeys ("keys the batch touched") genuinely needs the per-key
-    // max(_src) resolved inside the window pass.
+    // ONE Observation for every batch statistic, in both modes (inside a
+    // streaming foreachBatch only ONE of two CollectMetrics nodes on the
+    // write job ever reports — a second Observation.get deadlocked the
+    // micro-batch in the round-3 design). It sits between the window and the
+    // winner filter, where every row of both sides passes: events in and
+    // the LSN range over the batch rows; distinctKeys = the winners whose
+    // key group holds a batch row; and the buckets whose TARGET rows this
+    // job read — the files the commit removes (see the class doc for why
+    // not the buckets of the files written).
     val obs = Observation(s"merge-$appId-$batchId-${snap.version}")
-    val base =
-      if (!appendOnly) combined
-      else combined.observe(obs, count(lit(1)).as("n"),
-        min(col(CdcModel.RowLsnCol)).as("mn"), max(col(CdcModel.RowLsnCol)).as("mx"))
-    val ranked0 = base
+    val fromBatch = col(SrcCol) === 1L
+    val winners = combined
       .sortWithinPartitions(sortKeys: _*)
       .withColumn("_rn", row_number().over(w))
-    val ranked =
-      if (appendOnly) ranked0
-      else ranked0.withColumn("_hasBatch", max(col(SrcCol)).over(wAll))
-    val filtered = ranked.filter(col("_rn") === 1)
-    val observed =
-      if (appendOnly) filtered
-      else filtered.observe(obs, sum("_hasBatch").as("distinctKeys"))
-    val winners = observed
-      .select((col(LakeTable.BucketCol) +: keys.map(col)) ++
-        payloadCols.map(col): _*)
+      .withColumn("_hasBatch", max(col(SrcCol)).over(wAll))
+      .observe(obs, sum(col(SrcCol)).as("n"),
+        min(when(fromBatch, col(CdcModel.RowLsnCol))).as("mn"),
+        max(when(fromBatch, col(CdcModel.RowLsnCol))).as("mx"),
+        sum(when(col("_rn") === 1, col("_hasBatch"))).as("distinctKeys"),
+        collect_set(when(!fromBatch, col(LakeTable.BucketCol))).as("bucketsRead"))
+      .filter(col("_rn") === 1)
+      .select((col(LakeTable.BucketCol) +: keys.map(col)) ++ payloadCols.map(col): _*)
 
-    val added = table.writeDataFilesPrePartitioned(winners)
+    val added = table.writeDataFiles(winners)
     val m = awaitMetrics(obs)
-    val distinctKeys =
-      if (appendOnly) added.map(_.rows).sum // one winner row per key (footer-true)
-      else m("distinctKeys").asInstanceOf[Long] // null→0 on empty batch
-    val (eventsIn, minLsn, maxLsn) = pre match {
-      case Some(rows) =>
-        (rows.map(_._2).sum, rows.map(_._3).min, rows.map(_._4).max)
-      case None => // MOR: from the same observation (null when zero rows)
-        Option(m("n")).map(_.asInstanceOf[Long]).filter(_ > 0L) match {
-          case Some(n) => (n, m("mn").asInstanceOf[Long], m("mx").asInstanceOf[Long])
-          case None => (0L, -1L, -1L)
-        }
-    }
-    // the all-fenced/watermark-filtered MOR batch (no probe ran — see above):
-    // nothing was applied, so take the same metadata-only commit the CoW
-    // empty-pre path takes
-    if (appendOnly && eventsIn == 0L && added.isEmpty) return metadataOnlyCommit()
-    val bucketsTouched = if (appendOnly) added.map(_.bucket).distinct.size else buckets.size
-
-    val removed = targetFiles.map(_.path).toSet
+    // sums, min and max are null over zero rows
+    val eventsIn = Option(m("n")).fold(0L)(_.asInstanceOf[Long])
+    // an all-fenced, watermark-filtered or empty batch applied nothing: a
+    // metadata-only commit records the epoch
+    if (eventsIn == 0L && added.isEmpty) return metadataOnlyCommit()
+    val (minLsn, maxLsn) =
+      if (eventsIn == 0L) (-1L, -1L)
+      else (m("mn").asInstanceOf[Long], m("mx").asInstanceOf[Long])
+    val distinctKeys = Option(m("distinctKeys")).fold(0L)(_.asInstanceOf[Long])
+    val bucketsRead = m("bucketsRead").asInstanceOf[scala.collection.Seq[Int]].toSet
+    val bucketsTouched = added.map(_.bucket).distinct.size
+    val removed = snap.files.filter(f => bucketsRead.contains(f.bucket)).map(_.path).toSet
     // what the COMMITTED snapshot actually declared: the retry path below
     // may find a concurrent writer already applied the same evolution, in
     // which case its commit changes no schema and lineage must not record
@@ -486,7 +446,7 @@ object Merge {
       }
 
     MergeStats(batchId, committed.version, eventsIn, distinctKeys,
-      eventsIn - distinctKeys, bucketsTouched, targetFiles.size,
+      eventsIn - distinctKeys, bucketsTouched, removed.size,
       added.map(_.rows).sum, added.map(_.bytes).sum, minLsn, maxLsn, committedEvolved,
       skippedFenced = false, (System.nanoTime() - t0) / 1000000,
       sourceOffsets = sourceOffsets)

@@ -399,7 +399,7 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
       // LSN-range slices ascend, so ordered delivery holds and the watermark
       // fast-path may skip already-applied prefixes on re-runs; empty slices
       // still commit (fencing epoch advances uniformly). Each slice is a
-      // self-contained batch: its stats come from its own pre-pass against
+      // self-contained batch: its stats come from its own write job against
       // the snapshot it commits on, exactly as a streamed batch's do
       applyBatch(slice, startBatchId + i, Map("replay" -> (b1 - 1)),
         orderedDelivery = true)
@@ -439,23 +439,17 @@ object CdcPipeline {
   /** [[resolved]] pinned to an explicit snapshot — the time-travel read path
     * (pass `table.snapshot(v)` for a retained older version). */
   def resolved(table: LakeTable, snap: Snapshot): DataFrame = {
-    val allBuckets = snap.files.map(_.bucket).toSet
-    // column probe via the SNAPSHOT schema (readBuckets reads with exactly
-    // it) — constructing the all-buckets frame first would resolve a
-    // FileIndex over every data file and then be DISCARDED on the windowed
-    // branch: a full O(#files) driver metadata pass per read, for nothing
-    if (!snap.schema.fieldNames.contains(CdcModel.RowLsnCol))
-      return table.readBuckets(snap, allBuckets)
-    val byBucket = snap.files.groupBy(_.bucket)
-    val multi = byBucket.collect { case (b, fl) if fl.size > 1 => b }.toSet
-    if (multi.isEmpty) // single-generation everywhere: no window
-      return table.readBuckets(snap, allBuckets)
-    val keys = effectiveKeys(snap)
-    val windowed = lwwResolve(table.readBuckets(snap, multi), keys)
-    if (multi.size == byBucket.size) windowed
+    val stored = table.scan(snap)
+    val multi = snap.files.groupBy(_.bucket).collect { case (b, fl) if fl.size > 1 => b }.toSeq
+    if (multi.isEmpty || !snap.schema.fieldNames.contains(CdcModel.RowLsnCol))
+      return stored.drop(LakeTable.BucketCol) // single-generation everywhere: no window
+    val inMulti = col(LakeTable.BucketCol).isin(multi: _*)
     // keys are bucket-hashed, so no key spans the two sides: resolving each
     // side independently is exact, and the single-file side never shuffles
-    else table.readBuckets(snap, allBuckets -- multi).unionByName(windowed)
+    // (when every bucket is multi-file its side is pruned to no files)
+    stored.where(!inMulti)
+      .unionByName(lwwResolve(stored.where(inMulti), effectiveKeys(snap)))
+      .drop(LakeTable.BucketCol)
   }
 
   /** The LWW resolution window over `df` (which must hold whole buckets):
@@ -507,7 +501,7 @@ object CdcPipeline {
       s"not key columns of this table: ${extra.mkString(", ")} (key: ${keys.mkString(", ")})")
     val bucket = table.bucketOf(snap, keys, keyValues)
     val schema = snap.schema
-    val df = table.readBuckets(snap, Set(bucket))
+    val df = table.scan(snap).where(col(LakeTable.BucketCol) === bucket).drop(LakeTable.BucketCol)
     val keyed = keys.foldLeft(df) { (d, k) =>
       d.filter(col(k) === lit(keyValues(k)).cast(schema(schema.fieldIndex(k)).dataType))
     }

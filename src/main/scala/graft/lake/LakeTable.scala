@@ -4,10 +4,14 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructType, DataType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -118,7 +122,9 @@ final class LakeTable(val root: String, spark: SparkSession) {
   private val rootPath: HPath = new HPath(root)
   private[graft] val hconf: Configuration = spark.sessionState.newHadoopConf()
   private[graft] val fs: FileSystem = rootPath.getFileSystem(hconf)
-  private val dataDir: HPath = new HPath(rootPath, "data")
+  // qualified once (string work, no IO): the manifest-backed scan hands
+  // these paths to Spark as they are
+  private val dataDir: HPath = fs.makeQualified(new HPath(rootPath, "data"))
   private val metaDir: HPath = new HPath(rootPath, "meta")
 
   def exists: Boolean = fs.isDirectory(metaDir) && latestVersion >= 0
@@ -260,10 +266,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * The version must still be retained; reading an expired snapshot fails
     * with the missing-manifest error. Schema is the snapshot's own, so a
     * read below a schema-evolution commit sees the old columns. */
-  def readAt(version: Long): DataFrame = {
-    val s = snapshot(version)
-    readFiles(s, s.files)
-  }
+  def readAt(version: Long): DataFrame = scan(snapshot(version)).drop(BucketCol)
 
   /** Incremental read: rows in data files ADDED between `fromVersion`
     * (exclusive; -1 = since table creation) and `toVersion` (inclusive) —
@@ -317,7 +320,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
             .flatten.filterNot(f => before.contains(f.path))
         }
       }
-    readFiles(toRaw, added)
+    scan(toRaw, added).drop(BucketCol)
   }
 
   // The most recent snapshot THIS process committed, flat file list included —
@@ -335,14 +338,23 @@ final class LakeTable(val root: String, spark: SparkSession) {
     */
   def read(): DataFrame = currentSnapshot match {
     case None => throw new IllegalStateException(s"no snapshot in $root")
-    case Some(s) => readFiles(s, s.files)
+    case Some(s) => scan(s).drop(BucketCol)
   }
 
-  /** Read only the files whose bucket is in `buckets` — partition pruning for
-    * MERGE and for bucket-filtered scans.
-    */
-  def readBuckets(s: Snapshot, buckets: Set[Int]): DataFrame =
-    readFiles(s, s.files.filter(f => buckets.contains(f.bucket)))
+  /** `s`'s files (or, privately, any subset of them — [[readAppends]]) as
+    * ONE relation partitioned by `_bucket`, built from the manifest entries
+    * alone — no listing, no stat. Every data file holds exactly one bucket,
+    * so the bucket is the file's partition value: `where(_bucket ...)`
+    * prunes files statically, and a join on `_bucket` against a small side
+    * prunes them at run time (dynamic partition pruning). Data columns
+    * follow `s`'s schema; `_bucket` comes last. Public reads drop it. */
+  private[graft] def scan(s: Snapshot): DataFrame = scan(s, s.files)
+
+  private def scan(s: Snapshot, files: List[DataFile]): DataFrame = {
+    val index = new ManifestFileIndex(dataDir, files)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, s.schema,
+      None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** The bucket a CONCRETE key hashes to under this snapshot's recorded
     * layout — the reader-side inverse of [[LakeTable.bucketExpr]]. Evaluated
@@ -409,40 +421,15 @@ final class LakeTable(val root: String, spark: SparkSession) {
     row.getInt(2 * keyCols.length)
   }
 
-  private def readFiles(s: Snapshot, files: List[DataFile]): DataFrame = {
-    val schema = s.schema
-    if (files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      spark.read.schema(schema).parquet(files.map(f => new HPath(dataDir, f.path).toString): _*)
-    }
-  }
-
   /** Write `df`'s rows as new immutable data files, one group per key bucket.
-    * `df` must already contain an integer `_bucket` column; rows are hash
-    * co-located so each output file holds exactly one bucket (the invariant
-    * `readBuckets`/MERGE pruning rely on). Returns the created files; does NOT
-    * commit.
+    * `df` must already contain an integer `_bucket` column and hold each
+    * bucket in one task (a hash partitioning on `_bucket`, which MERGE's
+    * shuffle, compaction and [[bucketed]] all provide): the writer splits
+    * each task's rows by bucket, so every output file holds exactly one
+    * bucket — the invariant bucket pruning relies on. Returns the created
+    * files; does NOT commit.
     */
-  def writeDataFiles(df: DataFrame, numBuckets: Int): List[DataFile] = {
-    fs.mkdirs(dataDir)
-    val staging = new HPath(dataDir, s".staging-${UUID.randomUUID()}")
-    try {
-      // One shuffle: co-locate rows of a bucket, then write partitioned by
-      // bucket so every parquet file holds a single bucket.
-      df.repartition(math.min(numBuckets, df.sparkSession.sparkContext.defaultParallelism * 2),
-          col(BucketCol))
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
-      collectStagedFiles(staging)
-    } finally {
-      fs.delete(staging, true)
-    }
-  }
-
-  /** Like writeDataFiles but trusts df's existing partitioning (no shuffle) —
-    * used by MERGE, which has already co-located rows by bucket via its join.
-    */
-  def writeDataFilesPrePartitioned(df: DataFrame): List[DataFile] = {
+  def writeDataFiles(df: DataFrame): List[DataFile] = {
     fs.mkdirs(dataDir)
     val staging = new HPath(dataDir, s".staging-${UUID.randomUUID()}")
     try {
@@ -452,6 +439,13 @@ final class LakeTable(val root: String, spark: SparkSession) {
       fs.delete(staging, true)
     }
   }
+
+  /** `df` bucketed on `keyCols` and hash-partitioned by bucket: the input
+    * shape [[writeDataFiles]] expects, for writers with no shuffle of their
+    * own (full overwrite, rebucket). */
+  private def bucketed(df: DataFrame, keyCols: Seq[String], numBuckets: Int): DataFrame =
+    withBucket(df, keyCols, numBuckets)
+      .repartition(math.min(numBuckets, spark.sparkContext.defaultParallelism * 2), col(BucketCol))
 
   /** Move staged parquet out of `_bucket=N/part-*.parquet` layout into flat
     * uuid-named immutable files, recording (bucket, rows, bytes) per file.
@@ -643,8 +637,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
   def overwrite(df: DataFrame, keyCols: Seq[String], appId: String, batchId: Long = -1L,
       watermarkLsn: Long = -1L, offsets: Map[String, Long] = Map.empty): Snapshot = {
     val parent = currentSnapshot.getOrElse(throw new IllegalStateException("create() first"))
-    val bucketed = withBucket(df, keyCols, parent.numBuckets)
-    val files = writeDataFiles(bucketed, parent.numBuckets)
+    val files = writeDataFiles(bucketed(df, keyCols, parent.numBuckets))
     val s = Snapshot(parent.version + 1, parent.version, df.schema.json, parent.numBuckets,
       files, appId, batchId, watermarkLsn, offsets, keyCols)
     commit(s, parent.version, None, knownParent = Some(parent))
@@ -705,8 +698,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
       if (parent.schema.fieldNames.contains(graft.model.CdcModel.RowLsnCol))
         graft.model.CdcModel.lwwResolve(read(), keyCols)
       else read()
-    val bucketed = withBucket(rows, keyCols, newNumBuckets)
-    val files = writeDataFiles(bucketed, newNumBuckets)
+    val files = writeDataFiles(bucketed(rows, keyCols, newNumBuckets))
     val s = Snapshot(parent.version + 1, parent.version, parent.schemaJson,
       newNumBuckets, files, parent.appId, parent.batchId, parent.watermarkLsn,
       parent.sourceOffsets, keyCols)
@@ -786,7 +778,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
       st.isFile && !live.contains(st.getPath.getName) &&
         st.getModificationTime < cutoff)
     dead.foreach(st => fs.delete(st.getPath, false))
-    // 4. staging DIRECTORIES a crashed writer left behind: writeDataFiles*
+    // 4. staging DIRECTORIES a crashed writer left behind: writeDataFiles
     // deletes its `.staging-<uuid>` in a try/finally, but a SIGKILL between
     // the parquet write and the finally leaks a full batch copy — and the
     // isFile filter above would skip the directory forever. Same
@@ -802,6 +794,36 @@ final class LakeTable(val root: String, spark: SparkSession) {
       }
     dead.size
   }
+}
+
+/** A [[FileIndex]] over manifest entries: one partition per bucket, each
+  * file's status taken from its [[DataFile]] (path, bytes), so building and
+  * pruning it makes no filesystem call. Static partition filters are
+  * evaluated here; Spark evaluates dynamic pruning filters itself, against
+  * the partition values this returns. */
+private final class ManifestFileIndex(dataDir: HPath, files: List[DataFile]) extends FileIndex {
+  private val partitions: Seq[PartitionDirectory] =
+    files.groupBy(_.bucket).toSeq.sortBy(_._1).map { case (bucket, fl) =>
+      PartitionDirectory(InternalRow(bucket), fl.map(f => FileStatusWithMetadata(
+        new FileStatus(f.bytes, false, 0, 0, 0, new HPath(dataDir, f.path)))))
+    }
+
+  override val partitionSchema: StructType =
+    StructType(Seq(StructField(LakeTable.BucketCol, IntegerType, nullable = false)))
+  override def rootPaths: Seq[HPath] = Seq(dataDir)
+  override def inputFiles: Array[String] = files.map(f => new HPath(dataDir, f.path).toString).toArray
+  override def sizeInBytes: Long = files.map(_.bytes).sum
+  override def refresh(): Unit = ()
+
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    if (partitionFilters.isEmpty) partitions
+    else {
+      val keep = Predicate.createInterpreted(partitionFilters.reduce(And).transform {
+        case _: AttributeReference => BoundReference(0, IntegerType, nullable = false)
+      })
+      partitions.filter(p => keep.eval(p.values))
+    }
 }
 
 object LakeTable {

@@ -40,6 +40,13 @@ class CdcPipelineSpec extends SparkSuite {
     p.state().select(col("repo"), col("path"), col("commit"), col("lang"),
       sha2(col("content"), 256).as("content_sha"))
 
+  /** Runs `df` and returns the number of data files its lake-table scans
+    * read (the scans' `numFiles` metric, after partition pruning). */
+  private def filesRead(df: DataFrame): Long = {
+    df.collect()
+    SparkTestBase.lakeScans(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
+  }
+
   lazy val events = DerivedEvents.fromDocuments(
     spark.read.parquet(s"$sfDir/documents.parquet")).cache()
 
@@ -80,6 +87,87 @@ class CdcPipelineSpec extends SparkSuite {
       assertReplayMatchesOracle(SyntheticEvents.generate(spark, 400), numBuckets,
         numBatches = 5, preload = true)
     }
+
+  test("MergeStats equal plain-Spark values of the input (copy-on-write subset, merge-on-read)") {
+    val numBuckets = 64
+    val keys = CdcModel.KeyCols
+    val bucketOf = pmod(xxhash64(keys.map(col): _*), lit(numBuckets)).cast("int")
+    val ev = SyntheticEvents.generate(spark, 2000)
+    // late events: LSNs inside the base load, held back from it
+    val late = col("lsn") < 1600 && col("lsn") % 97 === 0
+    val base = ev.filter(col("lsn") < 1600 && !late)
+    val batch = ev.filter(col("lsn") >= 1600 && col("lsn") < 1610) // fresh
+      .unionByName(ev.filter(late))
+      .unionByName(ev.filter(col("lsn") >= 1 && col("lsn") < 6)) // redelivered, applied
+      .unionByName(ev.filter(col("lsn") === 1600)) // redelivered within the batch
+    def buckets(df: DataFrame): Set[Int] =
+      df.select(bucketOf).distinct().collect().map(_.getInt(0)).toSet
+    val batchBuckets = buckets(batch)
+    val baseBuckets = buckets(base)
+    val eventsIn = batch.count()
+    val distinctKeys = batch.select(keys.map(col): _*).distinct().count()
+    val lsns = batch.agg(min("lsn"), max("lsn")).collect()(0)
+    assert(batchBuckets.size < numBuckets && batchBuckets.subsetOf(baseBuckets),
+      "the batch must touch a strict subset of the populated buckets")
+    assert(distinctKeys < eventsIn, "the batch must carry LWW conflicts")
+    for (mor <- Seq(false, true)) {
+      val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir(s"cdc-stats-$mor"))(spark),
+        s"app-stats-$mor", lineage = false, mergeOnRead = mor, compactEveryFiles = 0)
+      p.bootstrap(numBuckets = numBuckets)
+      p.applyBatch(base, 0L)
+      val parent = p.table.currentSnapshot.get
+      assert(parent.files.groupBy(_.bucket).values.forall(_.size == 1))
+      val s = p.applyBatch(batch, 1L)
+      val ctx = s"mergeOnRead=$mor: $s"
+      assert(s.eventsIn === eventsIn, ctx)
+      assert(s.distinctKeys === distinctKeys, ctx)
+      assert(s.lwwConflicts === eventsIn - distinctKeys, ctx)
+      assert(s.bucketsTouched === batchBuckets.size, ctx)
+      // copy-on-write rewrites the one file of every touched bucket;
+      // merge-on-read rewrites nothing
+      assert(s.filesRewritten === (if (mor) 0 else batchBuckets.size), ctx)
+      assert(s.minLsn === lsns.getLong(0) && s.maxLsn === lsns.getLong(1), ctx)
+    }
+  }
+
+  test("a copy-on-write batch whose two evaluations differ loses no stored row") {
+    import graft.lake.Fsck
+    val numBuckets = 64
+    val keys = CdcModel.KeyCols
+    val bucketOf = pmod(xxhash64(keys.map(col): _*), lit(numBuckets)).cast("int")
+    val ev = SyntheticEvents.generate(spark, 1200)
+    val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("cdc-nondet"))(spark),
+      "app-nondet", lineage = false)
+    p.bootstrap(numBuckets = numBuckets)
+    p.applyBatch(ev, 0L)
+    val liveBefore = p.state().select(keys.map(col): _*).collect().toSet
+    // four updates of stored keys; every evaluation of the batch after its
+    // first sees them under MOVED paths, which hash to other buckets — the
+    // merge evaluates the batch once for its broadcast bucket set and once
+    // for its union side
+    val updates = ev.filter(col("lsn") < 4)
+      .withColumn("lsn", col("lsn") + 10000L).withColumn("op", lit("U"))
+    val rows = updates.count()
+    val moved = updates.withColumn("path", concat(col("path"), lit("-moved")))
+    val (firstBuckets, laterBuckets) = (
+      updates.select(bucketOf).distinct().collect().map(_.getInt(0)).toSet,
+      moved.select(bucketOf).distinct().collect().map(_.getInt(0)).toSet)
+    assert((laterBuckets -- firstBuckets).nonEmpty,
+      "the later evaluation must reach buckets the first one does not")
+    EvaluationCounter.calls.set(0L)
+    val shift = udf((path: String) =>
+      if (EvaluationCounter.calls.getAndIncrement() < rows) path else path + "-moved")
+      .asNondeterministic()
+    p.applyBatch(updates.withColumn("path", shift(col("path"))), 1L)
+    assert(EvaluationCounter.calls.get() >= 2 * rows, "the batch was evaluated only once")
+    val liveAfter = p.state().select(keys.map(col): _*).collect().toSet
+    assert(liveBefore.diff(liveAfter).isEmpty,
+      s"stored keys lost: ${liveBefore.diff(liveAfter).take(5)}")
+    // the moved keys landed, in buckets whose old file was never read
+    assert(liveAfter.count(_.getString(1).endsWith("-moved")) === rows)
+    val report = Fsck(p.table, keyCols = keys, deep = true)
+    assert(report.problems.isEmpty, s"fsck: ${report.problems}")
+  }
 
   test("time-travel live state: liveState(table, v) reproduces each batch's committed state") {
     val root = SparkTestBase.tmpDir("cdc-tt")
@@ -569,13 +657,15 @@ class CdcPipelineSpec extends SparkSuite {
       assert(got.count() === 1, s"lookup($key) must find exactly one live row")
       assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0,
         s"lookup($key) must equal liveState filtered to the key")
-      // pruning evidence: the lookup plan reads only the key's bucket's files
+      // pruning evidence: the lookup's scan reads only the key's bucket's
+      // files (the scan's own file count — the relation lists the whole
+      // snapshot and prunes by the _bucket partition filter)
       val bucket = p.table.bucketOf(snap, snap.keyCols.toSeq, key)
       val bucketFiles = snap.files.count(_.bucket == bucket)
-      assert(got.inputFiles.length === bucketFiles &&
-        got.inputFiles.length < snap.files.size,
+      val read = filesRead(got)
+      assert(read === bucketFiles && read < snap.files.size,
         s"lookup must scan the one bucket ($bucketFiles files), " +
-        s"not the table (${snap.files.size})")
+        s"not the table (${snap.files.size}); read $read")
     }
     // deleted key: tombstone wins → no live row
     val victim = live.orderBy(col("path").desc).head()
@@ -822,4 +912,10 @@ class CdcPipelineSpec extends SparkSuite {
     val byRepo = a.groupBy("repo").count().orderBy(col("count").desc).limit(1).collect()(0)
     assert(byRepo.getLong(1) > 10000 / 50) // hot repo ≫ uniform share
   }
+}
+
+/** Calls of the nondeterministic test UDF, JVM-wide: local-mode tasks run
+  * in the driver's JVM. */
+private object EvaluationCounter {
+  val calls = new java.util.concurrent.atomic.AtomicLong()
 }

@@ -6,13 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.config.{JobRunner, JobSpec}
 import graft.lake.{CommitConflictException, LakeTable, Snapshot}
 
-/** Config-file frontend parity with the reference's .port corpus
-  * (/root/reference/testdata/databases/ fixtures and
-  * database_configuration.go:100-152), plus the commit CAS and the yaml
-  * transform (deserialize_ruby_yaml_column.port). */
+/** Config-file frontend parity with the reference's .port corpus (the
+  * fixtures under test resources `port/`, in the reference's testdata
+  * layout, and database_configuration.go:100-152), plus the commit CAS and
+  * the yaml transform (deserialize_ruby_yaml_column.port). */
 class ConfigSpec extends SparkSuite {
   implicit val sqlc = spark.implicits
   import sqlc._
+
+  /** Root of the `.port` fixture corpus on the test classpath. */
+  private lazy val portRoot = Paths.get(getClass.getResource("/port").toURI)
+  private def portFixture(rel: String): String = Files.readString(portRoot.resolve(rel))
 
   private def writeSpec(dir: String, name: String, body: String): String = {
     val p = s"$dir/$name"
@@ -339,8 +343,7 @@ class ConfigSpec extends SparkSuite {
   test(".port subset reader: reference DB fixtures translate to JobSpec") {
     import graft.config.{PortSpec, PortParseException}
     import graft.operators.ColumnTransforms.{ColumnSpec, ComputedSpec}
-    def port(name: String) = Files.readString(
-      Paths.get(s"/root/reference/testdata/databases/$name"))
+    def port(name: String) = portFixture(s"databases/$name")
     // full.port / default.port / missing.port / star.port — strategy shapes
     assert(PortSpec.toJobSpec(port("full.port")).tables("widgets").loadStrategy === "Full")
     assert(PortSpec.toJobSpec(port("default.port")).tables("widgets").loadStrategy === "Full")
@@ -508,8 +511,7 @@ Transform(lambda data: [{'widget_id': row[0]} for row in data[1:]])"""
     val e = intercept[PortParseException] { PortSpec.toJobSpec(bad, _ => None) }
     assert(e.getMessage.contains("unsupported Transform body"))
     // ...while both genuine header-zip spellings still translate
-    def port(name: String) = Files.readString(
-      Paths.get(s"/root/reference/testdata/apis/$name"))
+    def port(name: String) = portFixture(s"apis/$name")
     val env = Map("TEST_URL" -> "http://x/widgets.csv").get _
     assert(PortSpec.toJobSpec(port("api_csv.port"), env).source.responseType === "csv")
     assert(PortSpec.toJobSpec(port("api_lambda_transform.port"), env)
@@ -536,8 +538,7 @@ Transform(lambda data: [{'widget_id': row[0]} for row in data[1:]])"""
 
   test(".port without the offset Paginate idiom converts to a SINGLE-page load") {
     import graft.config.PortSpec
-    def port(name: String) = Files.readString(
-      Paths.get(s"/root/reference/testdata/apis/$name"))
+    def port(name: String) = portFixture(s"apis/$name")
     val env = Map("TEST_URL" -> "http://x/items", "EXAMPLE_WIDGETS_API_TOKEN" -> "tok").get _
     // offset idiom → the runtime follows the body's offset field
     assert(PortSpec.toJobSpec(port("api_offset_pagination.port"), env)
@@ -551,8 +552,7 @@ Transform(lambda data: [{'widget_id': row[0]} for row in data[1:]])"""
 
   test(".port subset reader: reference API fixtures translate to JobSpec") {
     import graft.config.{PortSpec, PortParseException}
-    def port(name: String) = Files.readString(
-      Paths.get(s"/root/reference/testdata/apis/$name"))
+    def port(name: String) = portFixture(s"apis/$name")
     val env = Map("TEST_URL" -> "http://x/items", "EXAMPLE_WIDGETS_API_TOKEN" -> "tok").get _
     val off = PortSpec.toJobSpec(port("api_offset_pagination.port"), env)
     assert(off.source.format === "api")
@@ -576,8 +576,7 @@ Transform(lambda data: [{'widget_id': row[0]} for row in data[1:]])"""
       port("api_incremental_load_strategy.port")
         .replace("Http4XXError: Fail", "Http4XXError: Retry"), env)
     assert(incRetry.source.retryOn4xx)
-    val wid = PortSpec.toJobSpec(Files.readString(Paths.get(
-      "/root/reference/testdata/pad/sources/apis/example_widgets.port")), env)
+    val wid = PortSpec.toJobSpec(portFixture("pad/sources/apis/example_widgets.port"), env)
     assert(wid.source.itemsField === "widgets") // def Transform, not a directive
     assert(wid.source.headers("Authorization") === "Bearer tok")
     // the csv dict-comprehension Transform (api_lambda_transform) IS the
@@ -624,8 +623,7 @@ Transform(lambda data: [{'widget_id': row[0]} for row in data[1:]])"""
 
   test(".port schedule file: pad config/schedule.port exports the cron JSON shape") {
     import graft.config.PortSpec
-    val entries = PortSpec.parseSchedules(Files.readString(
-      Paths.get("/root/reference/testdata/pad/config/schedule.port")))
+    val entries = PortSpec.parseSchedules(portFixture("pad/config/schedule.port"))
     assert(entries === Seq(
       PortSpec.ScheduleEntry("extract-load-api", "worldtimeapi_ip_times", "1 hour", "postgresdocker"),
       PortSpec.ScheduleEntry("extract-load-api", "example_widgets", "2 hours", "postgresdocker"),
@@ -651,7 +649,7 @@ Transform(lambda data: [{'widget_id': row[0]} for row in data[1:]])"""
     spark.range(50).select(col("id"), (col("id") % 10 / lit(10.0)).as("ranking"))
       .write.parquet(s"$dir/widgets.parquet")
     val spec = PortSpec.toJobSpec(
-      Files.readString(Paths.get("/root/reference/testdata/databases/transform_column.port")),
+      portFixture("databases/transform_column.port"),
       destination = graft.config.DestinationSpec(s"$dir/dest", 4),
       dbSource = Some(graft.config.SourceSpec("parquet", path = s"$dir/widgets.parquet")))
     val r = JobRunner.run(spark, spec, "widgets", preview = false, forceFull = false)
@@ -663,8 +661,7 @@ Transform(lambda data: [{'widget_id': row[0]} for row in data[1:]])"""
     // used to emit Spark-DDL "int", which the runtime type parser rejects —
     // parse-level assertions alone never caught it)
     val spec2 = PortSpec.toJobSpec(
-      Files.readString(Paths.get(
-        "/root/reference/testdata/databases/transform_column_and_change_type.port")),
+      portFixture("databases/transform_column_and_change_type.port"),
       destination = graft.config.DestinationSpec(s"$dir/dest2", 4),
       dbSource = Some(graft.config.SourceSpec("parquet", path = s"$dir/widgets.parquet")))
     val r2 = JobRunner.run(spark, spec2, "widgets", preview = false, forceFull = false)
@@ -677,8 +674,7 @@ Transform(lambda data: [{'widget_id': row[0]} for row in data[1:]])"""
   test(".port sweep: EVERY reference fixture parses or fails loudly — no silent misreads") {
     import graft.config.{PortSpec, PortParseException}
     import scala.jdk.CollectionConverters._
-    val root = Paths.get("/root/reference/testdata")
-    assume(Files.exists(root)) // reference corpus only exists in the dev sandbox
+    val root = portRoot
     val all = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".port")).toSeq.sortBy(_.toString)
     assert(all.size >= 28, s"fixture corpus shrank? found ${all.size}")

@@ -47,16 +47,23 @@ class LakeTableSpec extends SparkSuite {
     assert(snap.files.map(_.rows).sum === 1000)
   }
 
-  test("readBuckets prunes to requested buckets only") {
+  test("a _bucket filter on the manifest relation prunes to the requested buckets only") {
     val t = LakeTable(SparkTestBase.tmpDir("lake-prune"))(spark)
     t.create(schema, 8, "t")
     val df = spark.range(1000).select(concat(lit("k"), col("id")).as("k"), col("id").as("v"))
     val snap = t.overwrite(df, Seq("k"), "t")
     val some = snap.files.map(_.bucket).distinct.take(3).toSet
-    val got = t.readBuckets(snap, some)
+    val pruned = t.scan(snap).where(col(LakeTable.BucketCol).isin(some.toSeq: _*))
+    val got = pruned
       .select(LakeTable.bucketExpr(Seq("k"), 8).as("b")).distinct()
       .collect().map(_.getInt(0)).toSet
     assert(got === some)
+    // the partition value IS the stored rows' bucket
+    assert(pruned.filter(col(LakeTable.BucketCol) =!= LakeTable.bucketExpr(Seq("k"), 8))
+      .count() === 0)
+    val plan = pruned.queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*_bucket".r.findFirstIn(plan).isDefined,
+      s"bucket filter must be a partition filter:\n$plan")
   }
 
   test("updateSchema commit preserves data and evolves reads") {
@@ -180,7 +187,7 @@ class LakeTableSpec extends SparkSuite {
       val removed = v1.files.filter(_.bucket == bucket).map(_.path).toSet
       val oneBucket = LakeTable.withBucket(df, Seq("k"), 32)
         .filter(col(LakeTable.BucketCol) === bucket)
-      val added = t.writeDataFiles(oneBucket, 32)
+      val added = t.writeDataFiles(oneBucket)
       val v2 = t.replaceFiles(v1, removed, added, None, "t", -1, -1, Map.empty)
       val reused = v2.manifests.map(_.path).toSet.intersect(v1.manifests.map(_.path).toSet)
       assert(reused.size === 7, "all untouched groups must reuse the parent manifest verbatim")
@@ -220,7 +227,7 @@ class LakeTableSpec extends SparkSuite {
       val bucket = v1.files.head.bucket
       val removed = v1.files.filter(_.bucket == bucket).map(_.path).toSet
       val added = t.writeDataFiles(
-        LakeTable.withBucket(df, Seq("k"), 32).filter(col(LakeTable.BucketCol) === bucket), 32)
+        LakeTable.withBucket(df, Seq("k"), 32).filter(col(LakeTable.BucketCol) === bucket))
       val v2 = t.replaceFiles(v1, removed, added, None, "t", -1, -1, Map.empty)
       assert(v2.bucketsPerGroup === 4, "stored granule governs over the conf")
       assert(v2.manifests.size === 8)
@@ -261,7 +268,7 @@ class LakeTableSpec extends SparkSuite {
       val bucket = parent.files.head.bucket
       val removed = parent.files.filter(_.bucket == bucket).map(_.path).toSet
       val added = t2.writeDataFiles(
-        LakeTable.withBucket(df, Seq("k"), 32).filter(col(LakeTable.BucketCol) === bucket), 32)
+        LakeTable.withBucket(df, Seq("k"), 32).filter(col(LakeTable.BucketCol) === bucket))
       val v2 = t2.replaceFiles(parent, removed, added, None, "t", -1, -1, Map.empty)
       assert(v2.manifests.map(_.path).toSet.intersect(parent.manifests.map(_.path).toSet)
         === Set.empty, "round-4 refs must never be reused across an unknown granule")
@@ -323,7 +330,7 @@ class LakeTableSpec extends SparkSuite {
     val v1files = t.currentSnapshot.get.files.map(_.path).toSet
     t.overwrite(Seq(("b", 2L)).toDF("k", "v"), Seq("k"), "t")
     // old snapshot still readable pre-vacuum
-    assert(t.readBuckets(t.snapshot(1), (0 until 4).toSet).count() === 1)
+    assert(t.readAt(1).count() === 1)
     val removed = t.vacuum(graceMs = 0L) // test owns the table; no concurrent writer
     assert(removed === v1files.size)
     assert(t.read().as[(String, Long)].collect().toSeq === Seq(("b", 2L)))
@@ -336,7 +343,7 @@ class LakeTableSpec extends SparkSuite {
     // v2 appends one file (replaceFiles with nothing removed)
     val parent = t.currentSnapshot.get
     val added = t.writeDataFiles(
-      LakeTable.withBucket(Seq(("c", 3L)).toDF("k", "v"), Seq("k"), 4), 4)
+      LakeTable.withBucket(Seq(("c", 3L)).toDF("k", "v"), Seq("k"), 4))
     t.replaceFiles(parent, Set.empty, added, None, "t", -1, -1, Map.empty)
     assert(t.versions === List(0L, 1L, 2L))
     // readAt pins the older file state; current read sees all three rows
@@ -360,7 +367,7 @@ class LakeTableSpec extends SparkSuite {
     t.overwrite(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), Seq("k"), "t") // v1
     val parent = t.currentSnapshot.get
     val added = t.writeDataFiles(
-      LakeTable.withBucket(Seq(("c", 3L), ("d", 4L)).toDF("k", "v"), Seq("k"), 4), 4)
+      LakeTable.withBucket(Seq(("c", 3L), ("d", 4L)).toDF("k", "v"), Seq("k"), 4))
     t.replaceFiles(parent, Set.empty, added, None, "t", -1, -1, Map.empty) // v2
     assert(t.readAppends(1, 2).orderBy("k").as[(String, Long)].collect().toSeq ===
       Seq(("c", 3L), ("d", 4L)))
@@ -393,7 +400,7 @@ class LakeTableSpec extends SparkSuite {
           Seq("k"), 32).filter(col(LakeTable.BucketCol) === bucket)
         val expect = rows.orderBy("k").select("k", "v").as[(String, Long)].collect().toSeq
         assert(expect.nonEmpty)
-        t.replaceFiles(parent, Set.empty, t.writeDataFiles(rows, 32), None, "t", -1, -1, Map.empty)
+        t.replaceFiles(parent, Set.empty, t.writeDataFiles(rows), None, "t", -1, -1, Map.empty)
         expect
       }
       // v2: first file of bucket 20 → group 5, which has NO parent manifest

@@ -195,7 +195,7 @@ class PlanSpec extends SparkSuite {
     assert(exchanges == 1, s"salted shape added a shuffle:\n$plan")
   }
 
-  test("MERGE stats path: one pre-pass per copy-on-write batch, none when append-only") {
+  test("MERGE stats path: no Merge-issued action besides the write, in every mode") {
     val sc = spark.sparkContext
     val counter = new MergeActionCounter
     sc.addSparkListener(counter)
@@ -220,9 +220,11 @@ class PlanSpec extends SparkSuite {
         "jobs-cow", lineage = false)
       cow.bootstrap(numBuckets = 8)
       assert(prepasses(cow.applyBatch(lower, 0L)) === 0,
-        "a batch into an empty target is append-only: no pre-pass")
-      assert(prepasses(cow.replay(upper, numBatches = 4, startBatchId = 1L)) === 4,
-        "a copy-on-write replay runs exactly one pre-pass per batch")
+        "a batch into an empty target runs no action besides its write")
+      assert(prepasses(cow.replay(upper, numBatches = 4, startBatchId = 1L)) === 0,
+        "a copy-on-write batch learns its buckets inside the write job: no pre-pass")
+      assert(prepasses(cow.applyBatch(upper.filter(lit(false)), 5L)) === 0,
+        "an empty copy-on-write batch is detected after its write job")
       val mor = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-jobs-mor"))(spark),
         "jobs-mor", lineage = false, mergeOnRead = true, compactEveryFiles = 0)
       mor.bootstrap(numBuckets = 8)
@@ -230,6 +232,61 @@ class PlanSpec extends SparkSuite {
       assert(prepasses(mor.applyBatch(upper, 1L)) === 0,
         "merge-on-read never runs a pre-pass")
     } finally sc.removeSparkListener(counter)
+  }
+
+  test("REAL copy-on-write merge write job: DPP prunes the target scan to the touched buckets, one CollectMetrics") {
+    val captured = new java.util.concurrent.CopyOnWriteArrayList[
+      org.apache.spark.sql.execution.QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        captured.add(qe)
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val numBuckets = 32
+      val ev = graft.model.SyntheticEvents.generate(spark, 2000)
+      val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-cow-real"))(spark),
+        "plancow", lineage = false)
+      p.bootstrap(numBuckets = numBuckets)
+      p.applyBatch(ev.filter(col("lsn") < 1990), 0L)
+      val parent = p.table.currentSnapshot.get
+      val batch = ev.filter(col("lsn") >= 1990)
+      val touched = batch
+        .select(pmod(xxhash64(graft.model.CdcModel.KeyCols.map(col): _*), lit(numBuckets))
+          .cast("int"))
+        .distinct().collect().map(_.getInt(0)).toSet
+      val touchedFiles = parent.files.count(f => touched.contains(f.bucket))
+      assert(touchedFiles > 0 && touchedFiles < parent.files.size,
+        s"the batch must touch a strict subset of the populated buckets: $touched")
+      val stats = p.applyBatch(batch, 1L)
+      assert(stats.filesRewritten === touchedFiles)
+      // listener delivery is async — poll for this batch's write job: the
+      // observation is named after (appId, batchId, parent version)
+      val tag = s"merge-plancow-1-${parent.version}"
+      var qe: Option[org.apache.spark.sql.execution.QueryExecution] = None
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (qe.isEmpty && System.nanoTime() < deadline) {
+        import scala.jdk.CollectionConverters._
+        qe = captured.asScala.find(q => q.executedPlan.toString.contains(tag))
+        if (qe.isEmpty) Thread.sleep(100)
+      }
+      val plan = qe.getOrElse(fail("no copy-on-write write-job plan captured")).executedPlan
+      val finalPlan = plan.toString.split("== Initial Plan ==")(0)
+      assert("CollectMetrics".r.findAllIn(finalPlan).size === 1,
+        s"the write job must carry exactly one CollectMetrics:\n$finalPlan")
+      val targetScans = SparkTestBase.lakeScans(plan)
+      assert(targetScans.nonEmpty, s"no target scan in the write job:\n$plan")
+      targetScans.foreach { s =>
+        assert(s.partitionFilters.exists(_.toString.contains("dynamicpruningexpression")),
+          s"the target scan must carry a dynamic pruning filter:\n$plan")
+        // the scan read exactly the files of the touched buckets
+        assert(s.metrics("numFiles").value === touchedFiles,
+          s"target scan read ${s.metrics("numFiles").value} files, expected $touchedFiles")
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("generation-aware reads: single-generation tables plan no shuffle and no window") {
@@ -283,6 +340,9 @@ class PlanSpec extends SparkSuite {
       s"key equality must push down to the scan:\n$plan")
     assert(!plan.contains("Exchange") && !"\\bWindow \\[".r.findFirstIn(plan).isDefined,
       s"single-generation lookup must be scan+filter only:\n$plan")
+    // the bucket prune is a partition filter on the manifest relation
+    assert("PartitionFilters: \\[[^\\]]*_bucket".r.findFirstIn(plan).isDefined,
+      s"point lookup must prune by a _bucket partition filter:\n$plan")
   }
 
   test("dedup operators never build a cartesian product") {
@@ -412,8 +472,8 @@ class PlanSpec extends SparkSuite {
 }
 
 /** Counts the Spark actions whose innermost `graft` call-site frame is in
-  * Merge.scala: the copy-on-write pre-pass is the only action Merge runs
-  * itself — its write is issued from LakeTable. An action is a SQL
+  * Merge.scala: Merge's write is issued from LakeTable, so any other action
+  * Merge runs itself (a pre-pass) is counted. An action is a SQL
   * execution (AQE runs one as several jobs: shuffle-map stages, then the
   * result) or a job outside any SQL execution, such as an RDD action. AQE
   * submits jobs from a pool thread, so a SQL execution's frame comes from

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
@@ -21,6 +24,18 @@ object SparkTestBase {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The lake-table scans (relations partitioned by `_bucket`) of an
+    * executed plan, through adaptive stages, reused exchanges and
+    * subqueries. */
+  def lakeScans(p: SparkPlan): Seq[FileSourceScanExec] = (p match {
+    case s: FileSourceScanExec
+        if s.relation.partitionSchema.fieldNames.contains(graft.lake.LakeTable.BucketCol) => Seq(s)
+    case a: AdaptiveSparkPlanExec => lakeScans(a.executedPlan)
+    case q: QueryStageExec => lakeScans(q.plan)
+    case r: ReusedExchangeExec => lakeScans(r.child)
+    case o => o.children.flatMap(lakeScans)
+  }) ++ p.subqueries.flatMap(lakeScans)
 }
 
 abstract class SparkSuite extends AnyFunSuite {
