@@ -143,7 +143,7 @@ object Compaction {
     //
     // Revalidation per retry: a layout/key change (rebucket) or a missing
     // removed file (another remover — concurrent CLI compact, retention
-    // vacuum — took our inputs) invalidates the staged rewrite; rethrow so
+    // vacuum — took our inputs) invalidates the written rewrite; rethrow so
     // the caller's skip path handles it. Fencing identity, watermark,
     // offsets and schema are re-adopted from the FRESH snapshot: committing
     // the stale parent's batchId would regress the fence a restarted stream

@@ -395,7 +395,7 @@ object Merge {
           appId, batchId, math.max(snap.watermarkLsn, maxLsn),
           snap.sourceOffsets ++ sourceOffsets)
       } catch {
-        // MOR commit-only retry: an append-only batch's staged files are
+        // MOR commit-only retry: an append-only batch's written files are
         // valid against ANY parent — the merge never read the target, so a
         // concurrent commit (typically the background compaction) landing
         // between our snapshot read and our commit invalidates NOTHING.
@@ -420,16 +420,16 @@ object Merge {
             // TWICE — duplicate generation files and double-counted
             // lineage. batchIds are monotonic within an appId (the
             // foreachBatch contract this engine mirrors); concurrent
-            // unordered writers must use distinct appIds. The staged files
+            // unordered writers must use distinct appIds. The written files
             // become orphans; vacuum collects them.
             if (fresh.appId == appId && fresh.batchId >= batchId && batchId >= 0)
               return appliedNothing(fresh.version, fenced = true)
-            // a rebucket() (or any layout change) invalidates the staged
+            // a rebucket() (or any layout change) invalidates the written
             // files — they are bucketed under the OLD numBuckets. Rethrow so
             // the outer applyBatch loop re-merges with the new layout.
             if (fresh.numBuckets != numBuckets || fresh.keyCols != snap.keyCols) throw last
             System.err.println(s"[merge] commit conflict on MOR batch $batchId " +
-              s"(attempt $tries/5) — re-committing the same staged files against " +
+              s"(attempt $tries/5) — re-committing the same written files against " +
               s"version ${fresh.version}")
             val freshSchema = fresh.schema
             val mergedSchema = SchemaEvolution.merge(freshSchema, evolvedSchema)

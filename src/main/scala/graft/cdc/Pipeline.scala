@@ -218,10 +218,10 @@ object Lineage {
   *        retained versions).
   * @param vacuumGraceMs passed to vacuum: files younger than this are never
   *        collected. MUST exceed the longest write-to-commit gap of any
-  *        concurrent writer (this stream's own merges included — staged data
-  *        files are renamed into `data/` BEFORE their snapshot publishes);
-  *        the 10-minute default covers any sane micro-batch. Tests that own
-  *        the table exclusively and are quiesced may pass 0.
+  *        concurrent writer (this stream's own merges included — data files
+  *        are in `data/`, touched at their write job's end, BEFORE their
+  *        snapshot publishes); the 10-minute default covers any sane
+  *        micro-batch. Tests owning the quiesced table may pass 0.
   */
 final class CdcPipeline(val table: LakeTable, val appId: String,
     lineage: Boolean = true, val mergeOnRead: Boolean = false,
@@ -294,7 +294,7 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
     * CAS throws [[graft.lake.CommitConflictException]] — the merge then
     * RE-RUNS against the fresh snapshot instead of dying. Safe because the
     * whole apply is idempotent (fencing + LWW against stored `_lsn`); the
-    * loser's staged data files are unreferenced and vacuum() collects them
+    * loser's written data files are unreferenced and vacuum() collects them
     * (its grace window protects the retry in flight).
     */
   def applyBatch(events: DataFrame, batchId: Long,

@@ -5,13 +5,19 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{FileFormatWriter, FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -103,7 +109,7 @@ class CommitConflictException(msg: String) extends RuntimeException(msg)
   *
   * Layout:
   * {{{
-  *   <root>/data/<uuid>.parquet       — immutable data files
+  *   <root>/data/<bucket>-<uuid>.parquet — immutable data files
   *   <root>/meta/snapshot-<N>.json    — manifest per version
   *   <root>/lineage/<n>.json          — per-batch lineage records
   * }}}
@@ -426,18 +432,22 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * bucket in one task (a hash partitioning on `_bucket`, which MERGE's
     * shuffle, compaction and [[bucketed]] all provide): the writer splits
     * each task's rows by bucket, so every output file holds exactly one
-    * bucket — the invariant bucket pruning relies on. Returns the created
-    * files; does NOT commit.
+    * bucket — the invariant bucket pruning relies on. One SQL execution of
+    * `df`'s own plan (an `Observation` on `df` is delivered as for any
+    * action) through [[LakeWrite]]. Returns the created files; does NOT commit.
     */
   def writeDataFiles(df: DataFrame): List[DataFile] = {
-    fs.mkdirs(dataDir)
-    val staging = new HPath(dataDir, s".staging-${UUID.randomUUID()}")
-    try {
-      df.write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
-      collectStagedFiles(staging)
-    } finally {
-      fs.delete(staging, true)
+    val qe = df.queryExecution
+    val plan = qe.executedPlan
+    val bucket = plan.output.filter(_.name == BucketCol)
+    require(bucket.nonEmpty, s"writeDataFiles needs a $BucketCol column")
+    val write = new LakeWrite(dataDir, new SerializableConfiguration(hconf))
+    SQLExecution.withNewExecutionId(qe, Some("writeDataFiles")) {
+      FileFormatWriter.write(spark.asInstanceOf[ClassicSession], plan, new ParquetFileFormat,
+        write, FileFormatWriter.OutputSpec(dataDir.toString, Map.empty, plan.output), hconf,
+        bucket, None, Seq(write), Map.empty)
     }
+    write.files
   }
 
   /** `df` bucketed on `keyCols` and hash-partitioned by bucket: the input
@@ -446,52 +456,6 @@ final class LakeTable(val root: String, spark: SparkSession) {
   private def bucketed(df: DataFrame, keyCols: Seq[String], numBuckets: Int): DataFrame =
     withBucket(df, keyCols, numBuckets)
       .repartition(math.min(numBuckets, spark.sparkContext.defaultParallelism * 2), col(BucketCol))
-
-  /** Move staged parquet out of `_bucket=N/part-*.parquet` layout into flat
-    * uuid-named immutable files, recording (bucket, rows, bytes) per file.
-    * The rename target is a fresh uuid, so plain `fs.rename` is safe on any
-    * filesystem (no destination ever exists).
-    */
-  private def collectStagedFiles(staging: HPath): List[DataFile] = {
-    val bucketDirs = fs.listStatus(staging).toList
-      .filter(_.getPath.getName.startsWith(s"$BucketCol="))
-    val moved = bucketDirs.flatMap { bdir =>
-      val bucket = bdir.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-      fs.listStatus(bdir.getPath).toList
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .map { src =>
-          val name = s"$bucket-${UUID.randomUUID().toString}.parquet"
-          val dst = new HPath(dataDir, name)
-          if (!fs.rename(src.getPath, dst))
-            throw new java.io.IOException(s"rename ${src.getPath} -> $dst failed")
-          // restart the vacuum grace clock AT PUBLICATION: rename preserves
-          // mtime, so a task file closed early in a write job longer than
-          // graceMs would otherwise land in data/ already "old" —
-          // unreferenced until the commit, and a concurrent vacuum would
-          // delete it before the snapshot publishes (data loss). setTimes is
-          // one cheap RPC per file; ignore filesystems that refuse it (the
-          // grace default still covers any sane write-to-commit gap there).
-          try fs.setTimes(dst, System.currentTimeMillis(), -1)
-          catch { case _: UnsupportedOperationException | _: java.io.IOException => }
-          (name, bucket, dst)
-        }
-    }
-    // footer row-counts in parallel (shared pool) — a merge can produce
-    // hundreds of files and sequential footer opens would dominate
-    // small-batch latency
-    LakeTable.inParallel(moved) { case (name, bucket, dst) =>
-      DataFile(name, bucket, parquetRowCount(dst), fs.getFileStatus(dst).getLen)
-    }
-  }
-
-  /** Row count from the parquet footer (no data read). */
-  private def parquetRowCount(p: HPath): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(p, hconf)
-    val r = ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
-  }
 
   /** Atomically publish a new snapshot whose parent must be `expectedParent`
     * (optimistic CAS); throws CommitConflictException when the slot is taken.
@@ -514,9 +478,9 @@ final class LakeTable(val root: String, spark: SparkSession) {
   /** @param changedGroups manifest groups whose file set differs from the
     *        parent (writers that know their removed/added files pass this —
     *        see [[replaceFiles]]); every other group REUSES the parent's
-    *        manifest reference with no IO. None = unknown: groups are
-    *        compared against the parent by stats + (cached) content, which
-    *        still reuses identical groups, just with a verification read.
+    *        manifest reference with no IO. None = unknown: every group's
+    *        manifest is written (the unhinted writers — create, overwrite,
+    *        rebucket — write fresh files into every group they hold).
     */
   private[lake] def commit(s: Snapshot, expectedParent: Long,
       changedGroups: Option[Set[Int]],
@@ -560,11 +524,6 @@ final class LakeTable(val root: String, spark: SparkSession) {
           // writer declared the group untouched — reuse (size sanity-checked)
           case Some(ref) if changedGroups.exists(cg => !cg.contains(g)) &&
               ref.files == sorted.size => ref
-          // no hint: reuse only on proven identity (stats fast-path, then
-          // path-set equality against the cached parent manifest)
-          case Some(ref) if changedGroups.isEmpty && ref.files == sorted.size &&
-              ref.rows == sorted.map(_.rows).sum && ref.bytes == sorted.map(_.bytes).sum &&
-              loadManifest(ref.path).map(_.path).sorted == sorted.map(_.path) => ref
           case _ => writeManifest(g, sorted)
         }
     }
@@ -715,11 +674,11 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * Returns the number of data files deleted.
     *
     * @param graceMs skip files modified within the last `graceMs` ms: a
-    *        concurrent writer stages + renames data files (and writes
-    *        manifests) BEFORE its commit publishes them, so a zero-grace
-    *        vacuum racing that writer would delete files its imminent
-    *        snapshot references. Defaults to 10 minutes; tests that own the
-    *        table exclusively pass 0.
+    *        concurrent writer's data files (touched when its write job
+    *        ends) and manifests are written but not yet committed, so a
+    *        zero-grace vacuum racing that writer would delete files its
+    *        imminent snapshot references. Defaults to 10 minutes; tests
+    *        that own the table exclusively pass 0.
     * @param retainSnapshots how many latest snapshots stay readable
     *        (min 1). The default keeps only the current version — the
     *        round-3 data-file semantics, now also applied to metadata.
@@ -778,13 +737,11 @@ final class LakeTable(val root: String, spark: SparkSession) {
       st.isFile && !live.contains(st.getPath.getName) &&
         st.getModificationTime < cutoff)
     dead.foreach(st => fs.delete(st.getPath, false))
-    // 4. staging DIRECTORIES a crashed writer left behind: writeDataFiles
-    // deletes its `.staging-<uuid>` in a try/finally, but a SIGKILL between
-    // the parquet write and the finally leaks a full batch copy — and the
-    // isFile filter above would skip the directory forever. Same
-    // grace-guarded sweep the lineage roll-up uses for its `.rollup-*` dirs;
-    // the grace window protects a writer whose rename pass is in flight
-    // (collectStagedFiles moves files OUT of staging before the commit).
+    // 4. `.staging-<uuid>` DIRECTORIES left by a crashed writer from before
+    // data files were written at their final names: a SIGKILL inside that
+    // writer's staged write leaked a full batch copy, and the isFile filter
+    // above would skip the directory forever. Same grace-guarded sweep the
+    // lineage roll-up uses for its `.rollup-*` dirs.
     entries.filter(st => st.isDirectory && st.getPath.getName.startsWith(".staging-"))
       .foreach { st =>
         try {
@@ -825,6 +782,70 @@ private final class ManifestFileIndex(dataDir: HPath, files: List[DataFile]) ext
       partitions.filter(p => keep.eval(p.values))
     }
 }
+
+/** [[LakeTable.writeDataFiles]]'s commit protocol and stats tracker. Tasks
+  * write each file at its final name `data/<bucket>-<uuid>.parquet` and
+  * report its (bucket, rows, bytes). Safe in `data/`: readers find data files
+  * only through manifests, and vacuum collects an orphan after its grace
+  * window. A failed job deletes its committed tasks' files; a successful one
+  * touches them, so an early-closed file's grace clock starts at publication. */
+private final class LakeWrite(dataDir: HPath, conf: SerializableConfiguration)
+    extends FileCommitProtocol with WriteJobStatsTracker with Serializable {
+  @transient private var committed: List[String] = Nil // driver side
+  @transient private var attemptFiles: List[String] = Nil // task side
+  @transient var files: List[DataFile] = Nil // the job's result, driver side
+
+  def setupJob(job: JobContext): Unit = dataDir.getFileSystem(job.getConfiguration).mkdirs(dataDir)
+  def setupTask(task: TaskAttemptContext): Unit = attemptFiles = Nil
+
+  // `dir` is the file's `_bucket=N` partition; the bucket leads the name
+  override def newTaskTempFile(task: TaskAttemptContext, dir: Option[String],
+      spec: FileNameSpec): String = {
+    val bucket = dir.get.stripPrefix(s"${LakeTable.BucketCol}=").toInt
+    attemptFiles ::= new HPath(dataDir, s"$bucket-${UUID.randomUUID()}.parquet").toString
+    attemptFiles.head
+  }
+
+  def commitTask(task: TaskAttemptContext): TaskCommitMessage = new TaskCommitMessage(attemptFiles)
+  def abortTask(task: TaskAttemptContext): Unit = delete(attemptFiles, task.getConfiguration)
+  override def onTaskCommit(msg: TaskCommitMessage): Unit =
+    committed :::= msg.obj.asInstanceOf[List[String]]
+  def abortJob(job: JobContext): Unit = delete(committed, job.getConfiguration)
+
+  def commitJob(job: JobContext, msgs: Seq[TaskCommitMessage]): Unit = {
+    val fs = dataDir.getFileSystem(job.getConfiguration)
+    // a filesystem that refuses setTimes keeps the close time
+    LakeTable.inParallel(committed) { p =>
+      try fs.setTimes(new HPath(p), System.currentTimeMillis(), -1)
+      catch { case _: UnsupportedOperationException | _: java.io.IOException => }
+    }
+  }
+
+  private def delete(paths: List[String], c: Configuration): Unit =
+    paths.map(new HPath(_)).foreach(p => p.getFileSystem(c).delete(p, false))
+
+  def newTaskInstance(): WriteTaskStatsTracker = new WriteTaskStatsTracker {
+    final class Open(val bucket: Int) { var rows = 0L }
+    private val open = scala.collection.mutable.HashMap.empty[String, Open]
+    private var closed: List[DataFile] = Nil
+    def newPartition(values: InternalRow): Unit = ()
+    // bucket taken at open: Spark announces the next partition before closing a file
+    def newFile(path: String): Unit =
+      open(path) = new Open(new HPath(path).getName.takeWhile(_ != '-').toInt)
+    def newRow(path: String, row: InternalRow): Unit = open(path).rows += 1
+    def closeFile(path: String): Unit = {
+      val (p, f) = (new HPath(path), open.remove(path).get)
+      val bytes = p.getFileSystem(conf.value).getFileStatus(p).getLen
+      closed ::= DataFile(p.getName, f.bucket, f.rows, bytes)
+    }
+    def getFinalStats(taskCommitTime: Long): WriteTaskStats = LakeWritten(closed.reverse)
+  }
+
+  def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
+    files = stats.toList.flatMap { case LakeWritten(f) => f }
+}
+
+private final case class LakeWritten(files: List[DataFile]) extends WriteTaskStats
 
 object LakeTable {
   /** Name of the physical bucket column carried inside data files. */

@@ -28,23 +28,10 @@ import graft.model.CdcModel
   */
 object CdcStream {
 
-  /** Start the stream. `eventsDir` must contain parquet files with the
-    * [[graft.model.CdcModel.eventSchema]] (extra payload columns allowed —
-    * schema evolution handles them via the provided read schema).
-    */
-  def start(spark: SparkSession, eventsDir: String, table: LakeTable,
-      checkpointDir: String, appId: String,
-      readSchema: org.apache.spark.sql.types.StructType = CdcModel.eventSchema,
-      trigger: Trigger = Trigger.AvailableNow(),
-      maxFilesPerTrigger: Option[Int] = None,
-      mergeOnRead: Boolean = false,
-      retainSnapshots: Int = 0): StreamingQuery =
-    startWithPipeline(spark, eventsDir, table, checkpointDir, appId, readSchema,
-      trigger, maxFilesPerTrigger, mergeOnRead, retainSnapshots)._1
-
-  /** Like [[start]] but also returns the pipeline, so a caller that stops the
-    * stream can `awaitMaintenance()` (background compaction) before reading
-    * file-count invariants or tearing the table down.
+  /** Start the stream over `eventsDir`'s parquet files (the
+    * [[graft.model.CdcModel.eventSchema]], extra payload columns allowed).
+    * Returns the pipeline too, so a caller that stops the stream can
+    * `awaitMaintenance()` before reading file counts or dropping the table.
     * @param retainSnapshots > 0 enables in-loop retention vacuum (see
     *        [[graft.cdc.CdcPipeline]]) — bounds `meta/` and superseded
     *        `data/` generations on an unattended tail, at the cost of the
@@ -76,13 +63,5 @@ object CdcStream {
       }
       .start()
     (q, pipeline)
-  }
-
-  /** Run a bounded replay to completion and return the final table state. */
-  def replayAvailable(spark: SparkSession, eventsDir: String, table: LakeTable,
-      checkpointDir: String, appId: String): DataFrame = {
-    val q = start(spark, eventsDir, table, checkpointDir, appId)
-    q.awaitTermination()
-    graft.cdc.CdcPipeline.liveState(table)
   }
 }

@@ -432,6 +432,47 @@ class LakeTableSpec extends SparkSuite {
     } finally spark.conf.unset("graft.manifest.bucketsPerGroup")
   }
 
+  test("a failed write job leaves data/ as it was") {
+    val t = LakeTable(SparkTestBase.tmpDir("lake-abort"))(spark)
+    t.create(schema, 4, "t")
+    t.overwrite(Seq(("a", 1L)).toDF("k", "v"), Seq("k"), "t")
+    val dataDir = new org.apache.hadoop.fs.Path(t.root, "data")
+    def listing = t.fs.listStatus(dataDir).map(_.getPath.getName).sorted.toSeq
+    val (before, version) = (listing, t.latestVersion)
+    // two tasks, one bucket per id: the first commits the files of buckets
+    // 0 and 1, the second has bucket 2's file open when it fails at id 3
+    val failAt3 = udf { (id: Long) =>
+      if (id == 3L) { Thread.sleep(1500); throw new IllegalStateException("fail at 3") }
+      id
+    }.asNondeterministic()
+    val rows = spark.range(0, 4, 1, 2)
+      .withColumn(LakeTable.BucketCol, col("id").cast("int"))
+      .sortWithinPartitions(LakeTable.BucketCol)
+      .withColumn("v", failAt3(col("id")))
+    intercept[Exception](t.writeDataFiles(rows))
+    assert(listing === before, "a failed write must leave no file in data/")
+    assert(t.latestVersion === version)
+  }
+
+  test("written files carry the end of their write job as their vacuum grace clock") {
+    val t = LakeTable(SparkTestBase.tmpDir("lake-touch"))(spark)
+    t.create(schema, 4, "t")
+    // four one-row tasks; the slow one keeps the job open 2 s after the
+    // other three have closed their files
+    val slow = udf { (id: Long) => if (id == 3L) Thread.sleep(2000); id }.asNondeterministic()
+    val rows = spark.range(0, 4, 1, 4)
+      .select(col("id").cast("int").as(LakeTable.BucketCol), slow(col("id")).as("v"))
+    val start = System.currentTimeMillis()
+    val files = t.writeDataFiles(rows)
+    assert(files.map(_.bucket).sorted === Seq(0, 1, 2, 3) && files.forall(_.rows == 1))
+    files.foreach { f =>
+      val mtime = t.fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(t.root, s"data/${f.path}")).getModificationTime
+      assert(mtime >= start + 1900,
+        s"${f.path} was published ${mtime - start} ms into a 2 s write job")
+    }
+  }
+
   test("vacuum sweeps staging directories a crashed writer left behind") {
     val t = LakeTable(SparkTestBase.tmpDir("lake-stagegc"))(spark)
     t.create(schema, 4, "t")

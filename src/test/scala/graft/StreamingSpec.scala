@@ -21,8 +21,8 @@ class StreamingSpec extends SparkSuite {
     events.repartition(4).write.parquet(s"$base/events")
 
     val streamTable = LakeTable(s"$base/t-stream")(spark)
-    val q = CdcStream.start(spark, s"$base/events", streamTable,
-      s"$base/ckpt", "st-app", maxFilesPerTrigger = Some(2))
+    val q = CdcStream.startWithPipeline(spark, s"$base/events", streamTable,
+      s"$base/ckpt", "st-app", maxFilesPerTrigger = Some(2))._1
     q.awaitTermination()
 
     val batchTable = LakeTable(s"$base/t-batch")(spark)
@@ -40,8 +40,8 @@ class StreamingSpec extends SparkSuite {
 
     // restart with the same checkpoint: no new batches, state unchanged
     val v = streamTable.latestVersion
-    val q2 = CdcStream.start(spark, s"$base/events", streamTable,
-      s"$base/ckpt", "st-app", maxFilesPerTrigger = Some(2))
+    val q2 = CdcStream.startWithPipeline(spark, s"$base/events", streamTable,
+      s"$base/ckpt", "st-app", maxFilesPerTrigger = Some(2))._1
     q2.awaitTermination()
     assert(streamTable.latestVersion === v)
   }
@@ -57,8 +57,8 @@ class StreamingSpec extends SparkSuite {
     events.repartition(4).write.parquet(s"$base/events")
 
     val morTable = LakeTable(s"$base/t-mor")(spark)
-    val q = CdcStream.start(spark, s"$base/events", morTable,
-      s"$base/ckpt", "mor-app", maxFilesPerTrigger = Some(2), mergeOnRead = true)
+    val q = CdcStream.startWithPipeline(spark, s"$base/events", morTable,
+      s"$base/ckpt", "mor-app", maxFilesPerTrigger = Some(2), mergeOnRead = true)._1
     assert(q.awaitTermination(180000), "streaming MOR replay timed out (observation deadlock?)")
 
     val cowTable = LakeTable(s"$base/t-cow")(spark)
