@@ -65,11 +65,15 @@ object Compaction {
     * restarted stream replaying that merge's batch would no longer be fenced
     * by the latest snapshot (LWW keeps state correct, but merge-on-read
     * would re-append duplicate generation files and lineage double-count).
-    */
-  /** @param maxBucketsPerRun rewrite at most this many buckets per run,
+    * A commit conflict is resolved by [[LakeTable.replaceFiles]]: the
+    * rewrite is re-applied to the newer snapshot while the files it read
+    * are still there, else the conflict propagates to the caller.
+    *
+    * @param maxBucketsPerRun rewrite at most this many buckets per run,
     *        most-fragmented first (ties → lowest bucket id): bounds one
     *        maintenance job's cost on a pathologically fragmented table —
-    *        repeated runs converge, each bounded. */
+    *        repeated runs converge, each bounded.
+    */
   def apply(table: LakeTable, horizonLsn: Long,
       maxFilesPerBucket: Int = 1, maxBucketsPerRun: Int = Int.MaxValue): Int = {
     val snap = table.currentSnapshot.getOrElse(return 0)
@@ -77,7 +81,7 @@ object Compaction {
   }
 
   /** [[apply]] body with the parent snapshot injectable, so specs can drive
-    * the commit-retry path deterministically (plan the rewrite against a
+    * the commit-conflict path deterministically (plan the rewrite against a
     * snapshot the table has already moved past). */
   private[graft] def compactFrom(table: LakeTable, snap: graft.lake.Snapshot,
       horizonLsn: Long, maxFilesPerBucket: Int, maxBucketsPerRun: Int): Int = {
@@ -114,10 +118,10 @@ object Compaction {
         .take(maxBucketsPerRun).toSet
 
     // fold merge-on-read generations through the SAME total order reads use
-    // ([[CdcPipeline.lwwResolve]] — one definition, so a tie-break change can
+    // ([[CdcModel.lwwResolve]] — one definition, so a tie-break change can
     // never diverge the two), then drop tombstones behind the horizon
     val raw = stored.where(col(LakeTable.BucketCol).isin(buckets.toSeq: _*))
-    val resolved = CdcPipeline.lwwResolve(raw, keyCols)
+    val resolved = CdcModel.lwwResolve(raw, keyCols)
     val del =
       if (resolved.columns.contains(CdcModel.DeletedCol))
         coalesce(col(CdcModel.DeletedCol), lit(false))
@@ -128,54 +132,7 @@ object Compaction {
     val added = table.writeDataFiles(kept)
     val removed = snap.files.filter(f => buckets.contains(f.bucket)).map(_.path).toSet
 
-    // Commit-only retry (mirrors the MOR merge's): under sustained ingest a
-    // merge commit lands between this rewrite's snapshot read and its commit
-    // almost every time — skipping on every conflict would STARVE compaction
-    // for as long as the stream never pauses (observed: 48 back-to-back
-    // batches produced exactly one compaction commit, at quiesce). The
-    // rewrite stays valid against the fresh snapshot because MOR merges only
-    // ADD generation files and per-key LWW is associative over unions:
-    // resolve(F_b) ∪ G resolves to the same winners as F_b ∪ G, and
-    // tombstones behind `horizonLsn` stay droppable (the caller's contract
-    // is that every source has passed the horizon, so no racing merge can
-    // append below it). Replacing exactly the files this run read — keeping
-    // everything added since — therefore preserves reader semantics.
-    //
-    // Revalidation per retry: a layout/key change (rebucket) or a missing
-    // removed file (another remover — concurrent CLI compact, retention
-    // vacuum — took our inputs) invalidates the written rewrite; rethrow so
-    // the caller's skip path handles it. Fencing identity, watermark,
-    // offsets and schema are re-adopted from the FRESH snapshot: committing
-    // the stale parent's batchId would regress the fence a restarted stream
-    // checks, and a schema widened mid-rewrite must survive (old-schema
-    // parquet under a wider table schema reads as nulls, exactly like any
-    // older generation file).
-    // Deliberately NOT shared with Merge's commit-only retry loop: the
-    // revalidation differs in kind (Merge fence-skips an already-committed
-    // batch and re-merges schemas; this loop checks its removed inputs
-    // still exist) — a callback-parameterized helper would hide exactly the
-    // invariants a reader needs to see. Both allow 5 re-commit attempts.
-    var parent = snap
-    var done = false
-    var tries = 0
-    while (!done) {
-      try {
-        table.replaceFiles(parent, removed, added, None, parent.appId,
-          parent.batchId, parent.watermarkLsn, parent.sourceOffsets)
-        done = true
-      } catch {
-        case e: graft.lake.CommitConflictException =>
-          tries += 1
-          if (tries > 5) throw e
-          val fresh = table.currentSnapshot.getOrElse(throw e)
-          if (fresh.numBuckets != parent.numBuckets || fresh.keyCols != parent.keyCols)
-            throw e
-          if (!removed.subsetOf(fresh.files.map(_.path).toSet)) throw e
-          System.err.println(s"[compact] commit conflict (attempt $tries/5) — " +
-            s"re-committing the same rewrite against version ${fresh.version}")
-          parent = fresh
-      }
-    }
+    table.replaceFiles(snap, removed, added, None, None)
     buckets.size
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{LakeTable, Snapshot}
+import graft.lake.{Epoch, LakeTable}
 import graft.model.CdcModel
 
 /** Per-batch outcome, persisted to the lineage table (SURVEY.md §7.1#6). */
@@ -117,30 +117,34 @@ object Merge {
     }
   }
 
-  /** @param orderedDelivery caller guarantees every event LSN in this batch
+  /** Applies one micro-batch of change events to `table` in one snapshot
+    * commit (see the object doc) and returns its statistics.
+    *
+    * @param orderedDelivery caller guarantees every event LSN in this batch
     *        exceeds all previously-applied LSNs (e.g. an LSN-range replay).
     *        Enables the watermark fast-path that skips fully-stale batches;
     *        with out-of-order sources it MUST stay false — a "stale" LSN may
     *        be a never-applied late file, and tombstone-retaining LWW (not
-    *        filtering) is what keeps replay idempotent then. */
-  /** @param mergeOnRead append-only apply: the batch is LWW-deduped within
+    *        filtering) is what keeps replay idempotent then.
+    * @param mergeOnRead append-only apply: the batch is LWW-deduped within
     *        itself and written as NEW files for its buckets — the target is
     *        never read or rewritten, so per-batch work is O(batch) instead of
     *        O(table ∩ touched buckets). Readers resolve LWW across file
     *        generations ([[CdcPipeline.liveState]]); [[Compaction]] folds
     *        fragmented buckets back to one file. This is the sustained-
     *        throughput mode for 10^10-event tails; copy-on-write (false)
-    *        keeps reads trivial and is right for bootstrap/low-rate tables. */
-  /** @param keyCols the target table's primary key (default: the CDC model's
+    *        keeps reads trivial and is right for bootstrap/low-rate tables.
+    * @param keyCols the target table's primary key (default: the CDC model's
     *        (repo, path, commit)). The config frontend routes arbitrary-key
     *        tables through the same merge — everything here is key-generic:
     *        bucketing, pruning, salting and the LWW window all derive from
-    *        this sequence. */
-  /** @param metaCols batch columns that are CDC bookkeeping, not payload —
+    *        this sequence.
+    * @param metaCols batch columns that are CDC bookkeeping, not payload —
     *        excluded from schema evolution. The default is the CDC event
     *        schema's set; the config frontend constructs only lsn/op and
     *        passes a narrower set, so an extract whose PAYLOAD genuinely has
-    *        an `eventTime` column is not silently dropped. */
+    *        an `eventTime` column is not silently dropped.
+    */
   def apply(table: LakeTable, events: DataFrame, appId: String, batchId: Long,
       sourceOffsets: Map[String, Long] = Map.empty,
       orderedDelivery: Boolean = false,
@@ -159,8 +163,8 @@ object Merge {
         schemaEvolved = false, skippedFenced = fenced, (System.nanoTime() - t0) / 1000000,
         sourceOffsets = if (fenced) Map.empty else sourceOffsets)
     def metadataOnlyCommit(): MergeStats = appliedNothing(
-      table.replaceFiles(snap, Set.empty, Nil, None, appId, batchId,
-        snap.watermarkLsn, snap.sourceOffsets ++ sourceOffsets).version,
+      table.replaceFiles(snap, Set.empty, Nil, None,
+        Some(Epoch(appId, batchId, -1L, sourceOffsets))).version,
       fenced = false)
 
     // --- commit-epoch fencing (replayed foreachBatch after restart).
@@ -168,7 +172,8 @@ object Merge {
     // contract), so a batch at or BELOW the snapshot's epoch was already
     // applied — a zombie driver re-presenting batch N after N+1 committed
     // must be fenced too, or a MOR table gains the whole batch again as
-    // duplicate generation files (same rule as the commit-retry fence below).
+    // duplicate generation files (the same rule stops a stale commit of this
+    // batch from re-applying: see LakeTable.replaceFiles).
     if (snap.appId == appId && snap.batchId >= batchId && batchId >= 0) {
       if (snap.batchId > batchId)
         // equal = the normal restart replay; BELOW the epoch = a zombie
@@ -383,71 +388,16 @@ object Merge {
     val bucketsRead = m("bucketsRead").asInstanceOf[scala.collection.Seq[Int]].toSet
     val bucketsTouched = added.map(_.bucket).distinct.size
     val removed = snap.files.filter(f => bucketsRead.contains(f.bucket)).map(_.path).toSet
-    // what the COMMITTED snapshot actually declared: the retry path below
-    // may find a concurrent writer already applied the same evolution, in
-    // which case its commit changes no schema and lineage must not record
-    // an evolution point for it
-    var committedEvolved = schemaEvolved
-    val committed =
-      try {
-        table.replaceFiles(snap, removed, added,
-          if (schemaEvolved) Some(evolvedSchema.json) else None,
-          appId, batchId, math.max(snap.watermarkLsn, maxLsn),
-          snap.sourceOffsets ++ sourceOffsets)
-      } catch {
-        // MOR commit-only retry: an append-only batch's written files are
-        // valid against ANY parent — the merge never read the target, so a
-        // concurrent commit (typically the background compaction) landing
-        // between our snapshot read and our commit invalidates NOTHING.
-        // Re-resolving the parent and re-committing the same files avoids
-        // re-running the whole merge job for every maintenance race — at
-        // sustained ingest with async compaction that race is the COMMON
-        // case, and a full re-merge per compaction would cost ~a batch each.
-        // Copy-on-write conflicts still rethrow: the files we read (and
-        // replace) may themselves have been replaced, so the outer
-        // applyBatch loop re-merges against the fresh snapshot.
-        case first: graft.lake.CommitConflictException if mergeOnRead && removed.isEmpty =>
-          var done: Snapshot = null
-          var last: graft.lake.CommitConflictException = first
-          var tries = 0
-          while (done == null && tries < 5) {
-            tries += 1
-            val fresh = table.currentSnapshot.getOrElse(throw last)
-            // the entry fence applies HERE too, and one notch stronger: if
-            // the same app's commits have reached THIS batch OR PAST it
-            // (a zombie that committed N and then N+1 before our stale
-            // commit of N landed), re-committing would apply the batch
-            // TWICE — duplicate generation files and double-counted
-            // lineage. batchIds are monotonic within an appId (the
-            // foreachBatch contract this engine mirrors); concurrent
-            // unordered writers must use distinct appIds. The written files
-            // become orphans; vacuum collects them.
-            if (fresh.appId == appId && fresh.batchId >= batchId && batchId >= 0)
-              return appliedNothing(fresh.version, fenced = true)
-            // a rebucket() (or any layout change) invalidates the written
-            // files — they are bucketed under the OLD numBuckets. Rethrow so
-            // the outer applyBatch loop re-merges with the new layout.
-            if (fresh.numBuckets != numBuckets || fresh.keyCols != snap.keyCols) throw last
-            System.err.println(s"[merge] commit conflict on MOR batch $batchId " +
-              s"(attempt $tries/5) — re-committing the same written files against " +
-              s"version ${fresh.version}")
-            val freshSchema = fresh.schema
-            val mergedSchema = SchemaEvolution.merge(freshSchema, evolvedSchema)
-            committedEvolved = mergedSchema != freshSchema
-            try {
-              done = table.replaceFiles(fresh, Set.empty, added,
-                if (mergedSchema != freshSchema) Some(mergedSchema.json) else None,
-                appId, batchId, math.max(fresh.watermarkLsn, maxLsn),
-                fresh.sourceOffsets ++ sourceOffsets)
-            } catch { case e: graft.lake.CommitConflictException => last = e }
-          }
-          if (done == null) throw last
-          done
-      }
+    // one commit; on a conflict the table re-applies it to the newer
+    // snapshot while it is still valid there, else the conflict propagates
+    // and applyBatch re-merges
+    val committed = table.replaceFiles(snap, removed, added,
+      if (schemaEvolved) Some(evolvedSchema.json) else None,
+      Some(Epoch(appId, batchId, maxLsn, sourceOffsets)))
 
     MergeStats(batchId, committed.version, eventsIn, distinctKeys,
       eventsIn - distinctKeys, bucketsTouched, removed.size,
-      added.map(_.rows).sum, added.map(_.bytes).sum, minLsn, maxLsn, committedEvolved,
+      added.map(_.rows).sum, added.map(_.bytes).sum, minLsn, maxLsn, schemaEvolved,
       skippedFenced = false, (System.nanoTime() - t0) / 1000000,
       sourceOffsets = sourceOffsets)
   }

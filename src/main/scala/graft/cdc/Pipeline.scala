@@ -238,8 +238,9 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
   // next batch's check resubmits), so batches never wait on maintenance.
   // Safety is unchanged: the compaction commit carries the parent's fencing
   // identity, and when it races the NEXT merge's commit the CAS serializes
-  // them — the loser is skipped (compaction) or retries (merge, commit-only
-  // in MOR mode — see [[Merge]]).
+  // them — the table re-applies the loser's change to the winner's snapshot
+  // while it is still valid there (see [[LakeTable.replaceFiles]]); when it
+  // is not, a compaction is skipped and a merge re-runs.
   private lazy val maintenancePool =
     java.util.concurrent.Executors.newSingleThreadExecutor(
       new java.util.concurrent.ThreadFactory {
@@ -290,17 +291,17 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
     *
     * Optimistic concurrency (the Iceberg commit model): when another writer
     * (a second stream, a compaction daemon, a config load) publishes a
-    * snapshot between this merge's snapshot read and its commit, the commit
-    * CAS throws [[graft.lake.CommitConflictException]] — the merge then
-    * RE-RUNS against the fresh snapshot instead of dying. Safe because the
-    * whole apply is idempotent (fencing + LWW against stored `_lsn`); the
-    * loser's written data files are unreferenced and vacuum() collects them
-    * (its grace window protects the retry in flight).
+    * snapshot between this merge's snapshot read and its commit, the table
+    * re-applies the commit when it is still valid
+    * ([[graft.lake.LakeTable.replaceFiles]]); otherwise the merge RE-RUNS
+    * against the fresh snapshot instead of dying. Safe because the whole
+    * apply is idempotent (fencing + LWW against stored `_lsn`); the loser's
+    * written data files are unreferenced and vacuum() collects them (its
+    * grace window protects the retry in flight).
     */
   def applyBatch(events: DataFrame, batchId: Long,
       sourceOffsets: Map[String, Long] = Map.empty,
-      orderedDelivery: Boolean = false,
-      maxCommitRetries: Int = 5): MergeStats = {
+      orderedDelivery: Boolean = false): MergeStats = {
     // retry wraps ONLY the merge: a conflict from the post-merge compaction
     // must never re-run an already-committed batch (it would re-append every
     // row as duplicate generations and double-count lineage) — maintenance
@@ -312,10 +313,10 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
         stats = Merge(table, events, appId, batchId, sourceOffsets,
           orderedDelivery, mergeOnRead)
       } catch {
-        case e: graft.lake.CommitConflictException if attempt < maxCommitRetries =>
+        case e: graft.lake.CommitConflictException if attempt < CdcPipeline.MaxReMerges =>
           attempt += 1
-          System.err.println(s"[cdc] commit conflict on batch $batchId " +
-            s"(attempt $attempt/$maxCommitRetries), re-merging against the new snapshot: ${e.getMessage}")
+          System.err.println(s"[cdc] commit conflict on batch $batchId (attempt " +
+            s"$attempt/${CdcPipeline.MaxReMerges}), re-merging against the new snapshot: ${e.getMessage}")
       }
     }
     // fenced replays are NOT appended: they re-report the committed version
@@ -412,6 +413,9 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
 }
 
 object CdcPipeline {
+  /** Re-merges [[CdcPipeline.applyBatch]] makes before a conflict propagates. */
+  private val MaxReMerges = 5
+
   /** Resolve LWW across file generations: one surviving row per key, ordered
     * by (_lsn, _deleted, content) — deterministic under duplicate appends
     * (a replayed event re-appended by a new batchId carries identical
@@ -448,17 +452,9 @@ object CdcPipeline {
     // side independently is exact, and the single-file side never shuffles
     // (when every bucket is multi-file its side is pruned to no files)
     stored.where(!inMulti)
-      .unionByName(lwwResolve(stored.where(inMulti), effectiveKeys(snap)))
+      .unionByName(CdcModel.lwwResolve(stored.where(inMulti), effectiveKeys(snap)))
       .drop(LakeTable.BucketCol)
   }
-
-  /** The LWW resolution window over `df` (which must hold whole buckets):
-    * one surviving row per key. Forwards to [[CdcModel.lwwResolve]] — THE
-    * one definition of the cross-generation total order, shared with
-    * [[Compaction]]'s fold and [[graft.lake.LakeTable.rebucket]]'s fold, so
-    * reads and maintenance can never diverge on a tie-break. */
-  private[cdc] def lwwResolve(df: DataFrame, keys: Seq[String]): DataFrame =
-    CdcModel.lwwResolve(df, keys)
 
   /** Live rows of a CDC target table: LWW-resolved across generations,
     * tombstones + internal columns removed. `_deleted` may be null in files
@@ -508,7 +504,7 @@ object CdcPipeline {
     val multiGen = snap.files.count(_.bucket == bucket) > 1
     (bucket, liveStateOf(
       if (!df.columns.contains(CdcModel.RowLsnCol) || !multiGen) keyed
-      else lwwResolve(keyed, keys)))
+      else CdcModel.lwwResolve(keyed, keys)))
   }
 
   /** The key columns a snapshot's buckets hash: the RECORDED key (round-3+

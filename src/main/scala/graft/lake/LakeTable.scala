@@ -98,6 +98,12 @@ object Snapshot {
   def fromJson(j: String): Snapshot = Serialization.read[Snapshot](j)
 }
 
+/** The commit epoch of one stream batch, stamped on the snapshot that
+  * applies it: the fencing identity (`appId`, `batchId`; -1 when not a
+  * stream batch), the highest LSN the batch applied and the per-source
+  * offsets it advanced to. See [[LakeTable.replaceFiles]]. */
+case class Epoch(appId: String, batchId: Long, maxLsn: Long, offsets: Map[String, Long])
+
 /** Concurrent-commit conflict: someone else published the version we tried to. */
 class CommitConflictException(msg: String) extends RuntimeException(msg)
 
@@ -602,26 +608,72 @@ final class LakeTable(val root: String, spark: SparkSession) {
     commit(s, parent.version, None, knownParent = Some(parent))
   }
 
-  /** Replace a subset of files (MERGE rewrite unit) and/or evolve schema. */
+  /** Replace a subset of files (the MERGE and compaction rewrite unit)
+    * and/or evolve the schema, in one snapshot commit on top of `parent`.
+    * Removed data files stay on disk for time travel until vacuum().
+    *
+    * Each attempt builds the snapshot from its parent `p`: files
+    * `p.files - removed + added`, schema `newSchemaJson` or else `p`'s,
+    * watermark `max(p.watermarkLsn, maxLsn)`, offsets
+    * `p.sourceOffsets ++ offsets`. `epoch = None` (maintenance) carries
+    * `p`'s fencing identity, watermark and offsets.
+    *
+    * THE commit-conflict rule: when another writer has published since
+    * `parent`, the same change is re-applied to the current snapshot `f`
+    * (at most [[MaxReapply]] times) while all of these hold, and otherwise
+    * the [[CommitConflictException]] propagates:
+    *  1. `f` has the parent's numBuckets and keyCols (the layout the added
+    *     files are bucketed in);
+    *  2. every removed file is still in `f`;
+    *  3. the change evolves no schema, or `f`'s schema is the parent's;
+    *  4. `f` is not the same app at or past this stream batch (a zombie,
+    *     which the caller's re-run fences).
+    * This is the Iceberg rule — a change that rewrites files applies to a
+    * newer snapshot if all the files it rewrote are still there — and it is
+    * safe because writers only add files, or replace files they read, and
+    * per-key LWW is associative over unions: `resolve(F) ∪ G` resolves to
+    * the same winners as `F ∪ G`. Tombstones a compaction drops stay
+    * droppable, since every source has passed its horizon.
+    */
   def replaceFiles(parent: Snapshot, removed: Set[String], added: List[DataFile],
-      newSchemaJson: Option[String], appId: String, batchId: Long,
-      watermarkLsn: Long, offsets: Map[String, Long]): Snapshot = {
-    val kept = parent.files.filterNot(f => removed.contains(f.path))
-    val s = Snapshot(parent.version + 1, parent.version,
-      newSchemaJson.getOrElse(parent.schemaJson), parent.numBuckets,
-      kept ++ added, appId, batchId, watermarkLsn, offsets, parent.keyCols)
-    // the writer knows exactly which manifest groups its removed+added files
-    // live in — every other group's manifest is reused verbatim. Group
-    // numbers MUST be computed in the parent's stored granule (commit()
-    // resolves the same value), or the changed-set would name groups in a
-    // different layout than the refs being reused.
-    val bpg = if (parent.bucketsPerGroup > 0) parent.bucketsPerGroup else bucketsPerGroup
-    val changed = (parent.files.filter(f => removed.contains(f.path)).map(_.bucket) ++
-      added.map(_.bucket)).map(_ / bpg).toSet
-    val committed = commit(s, parent.version, Some(changed),
-      knownParent = Some(parent))
-    // data files removed from the manifest stay on disk until vacuum() —
-    // time-travel readers of older snapshots remain valid.
+      newSchemaJson: Option[String], epoch: Option[Epoch]): Snapshot = {
+    def attempt(p: Snapshot): Snapshot = {
+      val s = Snapshot(p.version + 1, p.version,
+        newSchemaJson.getOrElse(p.schemaJson), p.numBuckets,
+        p.files.filterNot(f => removed.contains(f.path)) ++ added,
+        epoch.fold(p.appId)(_.appId), epoch.fold(p.batchId)(_.batchId),
+        math.max(p.watermarkLsn, epoch.fold(-1L)(_.maxLsn)),
+        p.sourceOffsets ++ epoch.fold(Map.empty[String, Long])(_.offsets), p.keyCols)
+      // the writer knows exactly which manifest groups its removed+added files
+      // live in — every other group's manifest is reused verbatim. Group
+      // numbers MUST be computed in the parent's stored granule (commit()
+      // resolves the same value), or the changed-set would name groups in a
+      // different layout than the refs being reused.
+      val bpg = if (p.bucketsPerGroup > 0) p.bucketsPerGroup else bucketsPerGroup
+      val changed = (p.files.filter(f => removed.contains(f.path)).map(_.bucket) ++
+        added.map(_.bucket)).map(_ / bpg).toSet
+      commit(s, p.version, Some(changed), knownParent = Some(p))
+    }
+    def stillValid(f: Snapshot): Boolean =
+      f.numBuckets == parent.numBuckets && f.keyCols == parent.keyCols &&
+        removed.subsetOf(f.files.iterator.map(_.path).toSet) &&
+        (newSchemaJson.isEmpty || f.schema == parent.schema) &&
+        epoch.forall(e => e.batchId < 0 || f.appId != e.appId || f.batchId < e.batchId)
+    var p = parent
+    var reapplied = 0
+    var committed: Snapshot = null
+    while (committed == null) {
+      try committed = attempt(p)
+      catch {
+        case e: CommitConflictException =>
+          val f = currentSnapshot.getOrElse(throw e)
+          if (reapplied >= MaxReapply || !stillValid(f)) throw e
+          reapplied += 1
+          System.err.println(s"[lake] commit conflict on version ${p.version + 1} — " +
+            s"re-applying the same change on top of version ${f.version} ($reapplied/$MaxReapply)")
+          p = f
+      }
+    }
     committed
   }
 
@@ -850,6 +902,9 @@ private final case class LakeWritten(files: List[DataFile]) extends WriteTaskSta
 object LakeTable {
   /** Name of the physical bucket column carried inside data files. */
   val BucketCol = "_bucket"
+
+  /** Re-applications [[LakeTable.replaceFiles]] makes before a conflict propagates. */
+  private val MaxReapply = 5
 
   /** Shared daemon pool for driver-side metadata/footer IO fan-out. One
     * process-wide pool (not per call): a streaming driver does this fan-out

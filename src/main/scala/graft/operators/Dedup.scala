@@ -500,10 +500,12 @@ object DedupOps {
       iter += 1
     }
     edges.unpersist()
-    if (!converged)
-      System.err.println(s"[dedup] clusters stopped at maxIters=$maxIters without " +
-        "reaching the fixpoint — labels are an upper bound (some clusters may be " +
-        "split); raise maxIters for extremely long similarity chains")
+    if (!converged) {
+      labelsRdd.unpersist(blocking = false)
+      throw new IllegalStateException(s"clusters did not reach the fixpoint within " +
+        s"maxIters=$maxIters rounds (some clusters would be split); raise maxIters " +
+        "for extremely long similarity chains")
+    }
     labels.select(col("x").as("id"), col("lbl").as("cluster_id"))
   }
 }

@@ -336,6 +336,102 @@ class CdcPipelineSpec extends SparkSuite {
     assert(CdcPipeline.liveState(t).filter(!col("name").startsWith("b")).count() === 0)
   }
 
+  /** `batch` with a UDF on its LSN that runs `commit` once, from inside the
+    * merge's write job: after the merge read its snapshot, before it
+    * commits. `commit` must do metadata IO only (no Spark job). */
+  private def racing(batch: DataFrame, commit: () => Unit): DataFrame = {
+    MidMerge.arm(commit)
+    val fire = udf((lsn: Long) => { MidMerge.fire(); lsn }).asNondeterministic()
+    batch.withColumn(CdcModel.LsnCol, fire(col(CdcModel.LsnCol)))
+  }
+
+  private def idTable(name: String, numBuckets: Int, appId: String): LakeTable = {
+    import spark.implicits._
+    val t = LakeTable(SparkTestBase.tmpDir(name))(spark)
+    t.create(Seq((1L, "a", 1L, false)).toDF("id", "name", CdcModel.RowLsnCol,
+      CdcModel.DeletedCol).schema, numBuckets, appId, keyCols = Seq("id"))
+    t
+  }
+
+  private def idBatch(n: Long, lsn: Long, tag: String): DataFrame = spark.range(n)
+    .select(col("id"), concat(lit(tag), col("id")).as("name"),
+      lit(lsn).as(CdcModel.LsnCol), lit("U").as(CdcModel.OpCol))
+
+  test("mid-merge race: copy-on-write losing to another app's disjoint-bucket rewrite is re-applied") {
+    import graft.lake.{Epoch, Fsck}
+    import spark.implicits._
+    val t = idTable("cdc-race-cow", 8, "a")
+    val other = LakeTable(t.root)(spark) // the other app's writer
+    graft.cdc.Merge(t, idBatch(200, 1, "base"), "a", 0, keyCols = Seq("id"))
+    val v0 = t.currentSnapshot.get
+    val bucket = LakeTable.bucketExpr(Seq("id"), 8)
+    val theirBucket = v0.files.head.bucket
+    // the other app rewrites one bucket (written up front; the race commits it)
+    val theirs = other.writeDataFiles(LakeTable.withBucket(spark.range(200)
+      .select(col("id"), concat(lit("b"), col("id")).as("name"),
+        lit(5L).as(CdcModel.RowLsnCol), lit(false).as(CdcModel.DeletedCol)), Seq("id"), 8)
+      .filter(col(LakeTable.BucketCol) === theirBucket))
+    val theirIds = spark.range(200).where(bucket === theirBucket).as[Long].collect().toSet
+    assert(theirIds.nonEmpty && theirIds.size < 200)
+    val ours = idBatch(200, 10, "a").where(bucket =!= theirBucket)
+    val s = graft.cdc.Merge(t, racing(ours, () => other.replaceFiles(v0,
+        v0.files.filter(_.bucket == theirBucket).map(_.path).toSet, theirs, None,
+        Some(Epoch("b", 0, 5, Map.empty)))),
+      "a", 1, keyCols = Seq("id"))
+    assert(s.committedVersion === v0.version + 2)
+    // LWW for both writers: their bucket holds theirs, every other bucket ours
+    val live = CdcPipeline.liveState(t).select("id", "name").as[(Long, String)].collect().toMap
+    assert(live === (0L until 200L).map(id =>
+      id -> (if (theirIds(id)) s"b$id" else s"a$id")).toMap)
+    val report = Fsck(t, keyCols = Seq("id"), deep = true)
+    assert(report.problems.isEmpty, s"fsck: ${report.problems}")
+  }
+
+  test("mid-merge race: merge-on-read losing to a compaction-shaped commit is re-applied commit-only") {
+    val t = idTable("cdc-race-mor", 4, "m")
+    val other = LakeTable(t.root)(spark) // the maintenance writer
+    graft.cdc.Merge(t, idBatch(100, 1, "g1"), "m", 0, keyCols = Seq("id"), mergeOnRead = true)
+    graft.cdc.Merge(t, idBatch(100, 2, "g2"), "m", 1, keyCols = Seq("id"), mergeOnRead = true)
+    // fold every bucket of this snapshot, as Compaction does
+    val stale = t.currentSnapshot.get
+    val folded = other.writeDataFiles(CdcModel.lwwResolve(other.scan(stale), Seq("id"))
+      .repartition(col(LakeTable.BucketCol)))
+    val s = graft.cdc.Merge(t, racing(idBatch(100, 3, "g3"), () => other.replaceFiles(
+        stale, stale.files.map(_.path).toSet, folded, None, None)),
+      "m", 2, keyCols = Seq("id"), mergeOnRead = true)
+    assert(!s.skippedFenced && s.committedVersion === stale.version + 2)
+    val snap = t.currentSnapshot.get
+    assert((snap.appId, snap.batchId) === (("m", 2L)))
+    // every bucket holds the folded file plus batch 3's generation
+    assert(snap.files.groupBy(_.bucket).values.map(_.size).toSet === Set(2))
+    assert(folded.map(_.path).toSet.subsetOf(snap.files.map(_.path).toSet))
+    val live = CdcPipeline.liveState(t)
+    assert(live.count() === 100)
+    assert(live.filter(!col("name").startsWith("g3")).count() === 0)
+  }
+
+  test("mid-merge race: merge-on-read losing to its own app's commit of the batch is fenced") {
+    import graft.lake.Epoch
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def b(lsn: Long, c: String) = Seq((lsn, "U", "r1", "p1", "c1", "scala", c, ts))
+      .toDF("lsn", "op", "repo", "path", "commit", "lang", "content", "eventTime")
+    val t = LakeTable(SparkTestBase.tmpDir("cdc-race-twin"))(spark)
+    val p = new CdcPipeline(t, "app-t", mergeOnRead = true)
+    p.bootstrap(numBuckets = 4)
+    p.applyBatch(b(1, "v1"), batchId = 0)
+    val files = t.currentSnapshot.get.files.map(_.path).toSet
+    // a twin driver of the same app commits batch 1 while this one merges it
+    val twin = LakeTable(t.root)(spark)
+    val s = p.applyBatch(racing(b(2, "v2"), () => twin.replaceFiles(
+      twin.currentSnapshot.get, Set.empty, Nil, None, Some(Epoch("app-t", 1, -1, Map.empty)))),
+      batchId = 1)
+    assert(s.skippedFenced, "the re-merge must be fenced by the twin's epoch")
+    assert(t.latestVersion === 2)
+    assert(t.currentSnapshot.get.files.map(_.path).toSet === files, "no data file may be added")
+    assert(p.state().select("content").collect()(0).getString(0) === "v1")
+  }
+
   test("sub-bucket salt (hot-bucket skew path) leaves merged state unchanged") {
     val run = (salt: Int, tag: String) => {
       spark.conf.set("graft.merge.salt", salt.toString)
@@ -918,4 +1014,13 @@ class CdcPipelineSpec extends SparkSuite {
   * in the driver's JVM. */
 private object EvaluationCounter {
   val calls = new java.util.concurrent.atomic.AtomicLong()
+}
+
+/** A one-shot action that the first [[fire]] after [[arm]] runs, JVM-wide:
+  * local-mode tasks run in the driver's JVM, so a test UDF can land a
+  * commit while a merge's write job runs. */
+private object MidMerge {
+  private val action = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+  def arm(f: () => Unit): Unit = action.set(f)
+  def fire(): Unit = Option(action.getAndSet(null)).foreach(_())
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{LakeTable, Snapshot, CommitConflictException}
+import graft.lake.{CommitConflictException, Epoch, LakeTable, Snapshot}
 
 class LakeTableSpec extends SparkSuite {
   import spark.implicits._
@@ -30,6 +30,75 @@ class LakeTableSpec extends SparkSuite {
     val s1b = Snapshot(1, 0, schema.json, 4, Nil, "w2", -1, -1, Map.empty)
     intercept[CommitConflictException] { t.commit(s1b, 0) }
     assert(t.currentSnapshot.get.appId === "w1")
+  }
+
+  test("replaceFiles re-applies a change to a newer snapshot only while it is still valid") {
+    spark.conf.set("graft.manifest.bucketsPerGroup", "2")
+    try {
+      val t = LakeTable(SparkTestBase.tmpDir("lake-rule"))(spark)
+      val other = LakeTable(t.root)(spark) // a second writer on the same table
+      t.create(schema, numBuckets = 8, appId = "t") // granule 2 → groups 0-3
+      val rows = spark.range(400).select(concat(lit("k"), col("id")).as("k"), col("id").as("v"))
+      t.overwrite(rows, Seq("k"), "t")
+      def fileIn(bucket: Int, tag: String) = t.writeDataFiles(
+        LakeTable.withBucket(rows.withColumn("k", concat(lit(tag), col("k"))), Seq("k"), 8)
+          .filter(col(LakeTable.BucketCol) === bucket))
+      def pathsIn(s: Snapshot, bucket: Int) = s.files.filter(_.bucket == bucket).map(_.path).toSet
+      def refused(change: => Snapshot): Unit = {
+        val v = t.latestVersion
+        intercept[CommitConflictException](change)
+        assert(t.latestVersion === v, "a refused change must commit nothing")
+      }
+
+      // a disjoint append since the parent: re-applied on top of it
+      val v1 = t.currentSnapshot.get
+      val v2 = other.replaceFiles(v1, Set.empty, fileIn(6, "x"), None,
+        Some(Epoch("w2", 3, 50, Map("s2" -> 50L))))
+      val added = fileIn(1, "y")
+      val v3 = t.replaceFiles(v1, pathsIn(v1, 1), added, None,
+        Some(Epoch("w1", 7, 40, Map("s1" -> 40L))))
+      assert(v3.version === 3 && v3.parentVersion === 2)
+      assert(v3.files.map(_.path).toSet ===
+        v2.files.map(_.path).toSet -- pathsIn(v1, 1) ++ added.map(_.path))
+      assert((v3.appId, v3.batchId) === (("w1", 7L)))
+      assert(v3.watermarkLsn === 50L, "the watermark is the max of both commits'")
+      assert(v3.sourceOffsets === Map("s2" -> 50L, "s1" -> 40L))
+      // only group 0 (bucket 1) changed; groups 1-3 reuse v2's manifest refs
+      assert(v3.manifests.filter(_.group != 0) === v2.manifests.filter(_.group != 0))
+      assert(v3.manifests.find(_.group == 0) !== v2.manifests.find(_.group == 0))
+
+      // a removed file that is gone: refused
+      val s3 = t.currentSnapshot.get
+      other.replaceFiles(s3, pathsIn(s3, 2), fileIn(2, "z"), None, None)
+      refused(t.replaceFiles(s3, pathsIn(s3, 2), fileIn(2, "q"), None, None))
+
+      // the commit's own evolution over a schema drift: refused; without an
+      // evolution of its own it re-applies under the drifted schema
+      val s4 = t.currentSnapshot.get
+      val wider = StructType(schema.fields :+ StructField("x", StringType))
+      other.updateSchema(wider, "other")
+      val own = StructType(schema.fields :+ StructField("y", StringType))
+      refused(t.replaceFiles(s4, Set.empty, fileIn(3, "e"), Some(own.json), None))
+      val v6 = t.replaceFiles(s4, Set.empty, fileIn(3, "e"), None, None)
+      assert(v6.version === 6 && v6.schema === wider)
+
+      // a same-app epoch at or past the batch: refused; a later batch of
+      // that app, another app or a non-stream commit re-applies
+      val s6 = t.currentSnapshot.get
+      other.replaceFiles(s6, Set.empty, fileIn(4, "f"), None, Some(Epoch("app", 5, -1, Map.empty)))
+      for (b <- Seq(4L, 5L))
+        refused(t.replaceFiles(s6, Set.empty, fileIn(5, "g"), None,
+          Some(Epoch("app", b, -1, Map.empty))))
+      for ((epoch, v) <- Seq(Epoch("app2", 5, -1, Map.empty) -> 8L,
+          Epoch("app", 6, -1, Map.empty) -> 9L, Epoch("app", -1, -1, Map.empty) -> 10L))
+        assert(t.replaceFiles(s6, Set.empty, fileIn(5, "g"), None, Some(epoch)).version === v)
+
+      // a rebucket since the parent: refused (the added files are bucketed
+      // in the old layout)
+      val s10 = t.currentSnapshot.get
+      other.rebucket(4, Seq("k"))
+      refused(t.replaceFiles(s10, Set.empty, fileIn(5, "h"), None, None))
+    } finally spark.conf.unset("graft.manifest.bucketsPerGroup")
   }
 
   test("bucket invariant: each data file holds exactly one bucket") {
@@ -188,7 +257,7 @@ class LakeTableSpec extends SparkSuite {
       val oneBucket = LakeTable.withBucket(df, Seq("k"), 32)
         .filter(col(LakeTable.BucketCol) === bucket)
       val added = t.writeDataFiles(oneBucket)
-      val v2 = t.replaceFiles(v1, removed, added, None, "t", -1, -1, Map.empty)
+      val v2 = t.replaceFiles(v1, removed, added, None, Some(Epoch("t", -1, -1, Map.empty)))
       val reused = v2.manifests.map(_.path).toSet.intersect(v1.manifests.map(_.path).toSet)
       assert(reused.size === 7, "all untouched groups must reuse the parent manifest verbatim")
       assert((v2.manifests.map(_.path).toSet -- v1.manifests.map(_.path).toSet).size === 1)
@@ -228,7 +297,7 @@ class LakeTableSpec extends SparkSuite {
       val removed = v1.files.filter(_.bucket == bucket).map(_.path).toSet
       val added = t.writeDataFiles(
         LakeTable.withBucket(df, Seq("k"), 32).filter(col(LakeTable.BucketCol) === bucket))
-      val v2 = t.replaceFiles(v1, removed, added, None, "t", -1, -1, Map.empty)
+      val v2 = t.replaceFiles(v1, removed, added, None, Some(Epoch("t", -1, -1, Map.empty)))
       assert(v2.bucketsPerGroup === 4, "stored granule governs over the conf")
       assert(v2.manifests.size === 8)
       assert(v2.manifests.map(_.path).toSet.intersect(v1.manifests.map(_.path).toSet).size === 7)
@@ -269,7 +338,7 @@ class LakeTableSpec extends SparkSuite {
       val removed = parent.files.filter(_.bucket == bucket).map(_.path).toSet
       val added = t2.writeDataFiles(
         LakeTable.withBucket(df, Seq("k"), 32).filter(col(LakeTable.BucketCol) === bucket))
-      val v2 = t2.replaceFiles(parent, removed, added, None, "t", -1, -1, Map.empty)
+      val v2 = t2.replaceFiles(parent, removed, added, None, Some(Epoch("t", -1, -1, Map.empty)))
       assert(v2.manifests.map(_.path).toSet.intersect(parent.manifests.map(_.path).toSet)
         === Set.empty, "round-4 refs must never be reused across an unknown granule")
       assert(v2.bucketsPerGroup === 16 && v2.manifests.size === 2) // 32 buckets / 16
@@ -344,7 +413,7 @@ class LakeTableSpec extends SparkSuite {
     val parent = t.currentSnapshot.get
     val added = t.writeDataFiles(
       LakeTable.withBucket(Seq(("c", 3L)).toDF("k", "v"), Seq("k"), 4))
-    t.replaceFiles(parent, Set.empty, added, None, "t", -1, -1, Map.empty)
+    t.replaceFiles(parent, Set.empty, added, None, Some(Epoch("t", -1, -1, Map.empty)))
     assert(t.versions === List(0L, 1L, 2L))
     // readAt pins the older file state; current read sees all three rows
     assert(t.readAt(1).orderBy("k").as[(String, Long)].collect().toSeq ===
@@ -368,7 +437,7 @@ class LakeTableSpec extends SparkSuite {
     val parent = t.currentSnapshot.get
     val added = t.writeDataFiles(
       LakeTable.withBucket(Seq(("c", 3L), ("d", 4L)).toDF("k", "v"), Seq("k"), 4))
-    t.replaceFiles(parent, Set.empty, added, None, "t", -1, -1, Map.empty) // v2
+    t.replaceFiles(parent, Set.empty, added, None, Some(Epoch("t", -1, -1, Map.empty))) // v2
     assert(t.readAppends(1, 2).orderBy("k").as[(String, Long)].collect().toSeq ===
       Seq(("c", 3L), ("d", 4L)))
     // from = -1 means "since creation": everything in the to-version
@@ -400,7 +469,8 @@ class LakeTableSpec extends SparkSuite {
           Seq("k"), 32).filter(col(LakeTable.BucketCol) === bucket)
         val expect = rows.orderBy("k").select("k", "v").as[(String, Long)].collect().toSeq
         assert(expect.nonEmpty)
-        t.replaceFiles(parent, Set.empty, t.writeDataFiles(rows), None, "t", -1, -1, Map.empty)
+        t.replaceFiles(parent, Set.empty, t.writeDataFiles(rows), None,
+          Some(Epoch("t", -1, -1, Map.empty)))
         expect
       }
       // v2: first file of bucket 20 → group 5, which has NO parent manifest

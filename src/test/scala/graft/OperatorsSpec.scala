@@ -55,6 +55,14 @@ class OperatorsSpec extends SparkSuite {
     assert(r.count() === 300)
   }
 
+  test("clusters fails loudly when maxIters ends before the fixpoint") {
+    // the 300-node path needs several pointer-jumping rounds: one round
+    // leaves it split, which must not pass as an answer
+    val path = (0L until 299L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](DedupOps.clusters(path, maxIters = 1))
+    assert(e.getMessage.contains("maxIters=1"))
+  }
+
   test("clusters/canonical on a clean corpus (zero pairs) return it unchanged") {
     // regression: the empty edge set used to NPE in the fixpoint checksum —
     // the COMMON case (no near-duplicates found) must be a clean no-op

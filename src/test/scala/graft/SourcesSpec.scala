@@ -406,8 +406,8 @@ class SourcesSpec extends SparkSuite {
     // from page 0 (a Full refresh that skipped pages would be silently
     // incomplete)
     val snap0 = t.currentSnapshot.get
-    t.replaceFiles(snap0, Set.empty, Nil, None, "test", -1L, snap0.watermarkLsn,
-      snap0.sourceOffsets + ("api:t:Incremental" -> 6L))
+    t.replaceFiles(snap0, Set.empty, Nil, None, Some(graft.lake.Epoch("test", -1L,
+      snap0.watermarkLsn, snap0.sourceOffsets + ("api:t:Incremental" -> 6L))))
     val b2 = pulls.size
     JobRunner.run(spark, spec, "t", transport = fake)
     assert(pulls.drop(b2).headOption.contains(0), s"Full resumed a foreign marker: ${pulls.drop(b2)}")
