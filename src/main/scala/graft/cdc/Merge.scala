@@ -122,10 +122,14 @@ object Merge {
     *
     * @param orderedDelivery caller guarantees every event LSN in this batch
     *        exceeds all previously-applied LSNs (e.g. an LSN-range replay).
-    *        Enables the watermark fast-path that skips fully-stale batches;
-    *        with out-of-order sources it MUST stay false — a "stale" LSN may
-    *        be a never-applied late file, and tombstone-retaining LWW (not
-    *        filtering) is what keeps replay idempotent then.
+    *        Enables the watermark guard ([[Dedup.aboveWatermark]]), which
+    *        drops events at or below the snapshot's watermark; a fully-stale
+    *        batch then takes a metadata-only commit. The guard holds the
+    *        watermark out of the generated code, so it is not pushed to
+    *        Parquet: a re-run reads its stale prefix and drops it row by
+    *        row. With out-of-order sources it MUST stay false — a "stale"
+    *        LSN may be a never-applied late file, and tombstone-retaining
+    *        LWW (not filtering) is what keeps replay idempotent then.
     * @param mergeOnRead append-only apply: the batch is LWW-deduped within
     *        itself and written as NEW files for its buckets — the target is
     *        never read or rewritten, so per-batch work is O(batch) instead of

@@ -385,25 +385,46 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
   }
 
   /** Replay an event stream deterministically in `numBatches` LSN-range
-    * micro-batches (batch-mode equivalent of Trigger.AvailableNow). Events
-    * are split by LSN so any re-run partitions the stream identically —
-    * the exactly-once replay property tests drive this.
+    * micro-batches (batch-mode equivalent of Trigger.AvailableNow), as
+    * batches `startBatchId` onward. Events are split by LSN so any re-run
+    * partitions the stream identically — the exactly-once replay property
+    * tests drive this.
+    *
+    * One slice is `events` itself, handed straight to [[applyBatch]]: no
+    * bounds job and no slice filter, so the batch is one Spark action, the
+    * write. More slices first collect the LSN range (one more action) and
+    * filter each slice by literal bounds, which Parquet uses to skip row
+    * groups outside the slice.
+    *
+    * Slices ascend in LSN, so ordered delivery holds and the watermark guard
+    * drops already-applied prefixes on re-runs. Every slice commits, an
+    * empty one metadata-only, so the fencing epoch advances by one per
+    * slice. Each slice is a self-contained batch: its stats come from its
+    * own write job against the snapshot it commits on, exactly as a
+    * streamed batch's do.
+    *
+    * Provenance: replay records no source offset. A slice's LSN range is
+    * its lineage record's `minLsn`/`maxLsn`, and the table's watermark is
+    * the snapshot's `watermarkLsn`.
     */
   def replay(events: DataFrame, numBatches: Int, startBatchId: Long = 0L): Seq[MergeStats] = {
-    val bounds = events.agg(min(col(CdcModel.LsnCol)), max(col(CdcModel.LsnCol))).collect()(0)
-    if (bounds.isNullAt(0)) return Nil
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = math.max(1L, (hi - lo + numBatches) / numBatches)
-    (0 until numBatches).map { i =>
-      val (b0, b1) = (lo + i * width, lo + (i + 1) * width)
-      val slice = events.filter(col(CdcModel.LsnCol) >= b0 && col(CdcModel.LsnCol) < b1)
-      // LSN-range slices ascend, so ordered delivery holds and the watermark
-      // fast-path may skip already-applied prefixes on re-runs; empty slices
-      // still commit (fencing epoch advances uniformly). Each slice is a
-      // self-contained batch: its stats come from its own write job against
-      // the snapshot it commits on, exactly as a streamed batch's do
-      applyBatch(slice, startBatchId + i, Map("replay" -> (b1 - 1)),
-        orderedDelivery = true)
+    require(numBatches >= 1, s"replay needs at least one batch, got $numBatches")
+    val slices =
+      if (numBatches == 1) Seq(events)
+      else {
+        val bounds = events.agg(min(col(CdcModel.LsnCol)), max(col(CdcModel.LsnCol))).collect()(0)
+        if (bounds.isNullAt(0)) Seq.fill(numBatches)(events) // no events: every slice is empty
+        else {
+          val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+          val width = math.max(1L, (hi - lo + numBatches) / numBatches)
+          (0 until numBatches).map { i =>
+            val (b0, b1) = (lo + i * width, lo + (i + 1) * width)
+            events.filter(col(CdcModel.LsnCol) >= b0 && col(CdcModel.LsnCol) < b1)
+          }
+        }
+      }
+    slices.zipWithIndex.map { case (slice, i) =>
+      applyBatch(slice, startBatchId + i, orderedDelivery = true)
     }
   }
 

@@ -551,6 +551,62 @@ class CdcPipelineSpec extends SparkSuite {
         s"mergeOnRead=$mor")
       // the epoch still advanced (exactly-once bookkeeping)
       assert(p.table.currentSnapshot.get.batchId === 1L, s"mergeOnRead=$mor")
+
+      // a PARTIALLY stale ordered batch: a stale prefix at or below the
+      // watermark (keys the table never saw, so any that got through would
+      // show in the added files and the live state) ahead of fresh updates
+      val wm = p.table.currentSnapshot.get.watermarkLsn
+      val stale = events.filter(col("lsn") % 5 === 0)
+        .withColumn("path", concat(col("path"), lit("-stale")))
+      val fresh = events.filter(col("lsn") % 3 === 0)
+        .withColumn("lsn", col("lsn") + wm + 1)
+        .withColumn("op", lit("U"))
+        .withColumn("content", concat(col("content"), lit("-v2")))
+      val before = p.table.currentSnapshot.get.files.map(_.path).toSet
+      val s2 = p.applyBatch(stale.unionByName(fresh), batchId = 2, orderedDelivery = true)
+      assert(s2.eventsIn === fresh.count() && s2.minLsn > wm, s"mergeOnRead=$mor")
+      val added = p.table.currentSnapshot.get.files.map(_.path).filterNot(before.contains)
+      assert(added.nonEmpty, s"mergeOnRead=$mor")
+      val addedRows = spark.read.parquet(added.map(f => s"$root/data/$f"): _*)
+      assert(addedRows.filter(col("path").endsWith("-stale")).count() === 0,
+        s"mergeOnRead=$mor: a stale row reached the added files")
+      if (mor) // a MOR batch writes only its own rows
+        assert(addedRows.filter(col(CdcModel.RowLsnCol) <= wm).count() === 0)
+      val want = oracle(events.unionByName(fresh))
+      val got = finalState(p)
+      assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0,
+        s"mergeOnRead=$mor: live state differs from the LWW oracle")
+    }
+  }
+
+  test("replay provenance: no source offset, the LSN range in lineage, empty slices commit") {
+    for (mor <- Seq(false, true)) {
+      val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir(s"cdc-replay-prov-$mor"))(spark),
+        s"app-prov-$mor", mergeOnRead = mor, compactEveryFiles = 0)
+      p.bootstrap(numBuckets = 8)
+      val b = events.agg(min("lsn"), max("lsn")).collect()(0)
+      val Seq(s) = p.replay(events, numBatches = 1, startBatchId = 3L)
+      assert(s.sourceOffsets.isEmpty && s.minLsn === b.getLong(0) && s.maxLsn === b.getLong(1),
+        s"mergeOnRead=$mor")
+      val snap = p.table.currentSnapshot.get
+      assert(snap.sourceOffsets.isEmpty && snap.watermarkLsn === b.getLong(1) &&
+        snap.batchId === 3L, s"mergeOnRead=$mor")
+      val rec = Lineage.read(spark, p.table.root).filter(col("batchId") === 3L)
+        .select("minLsn", "maxLsn").collect()
+      assert(rec.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((b.getLong(0), b.getLong(1))),
+        s"mergeOnRead=$mor")
+      // an empty one-slice replay takes the metadata-only commit every
+      // empty slice takes: the epoch advances, no file changes
+      val Seq(e) = p.replay(events.filter(lit(false)), numBatches = 1, startBatchId = 4L)
+      val after = p.table.currentSnapshot.get
+      assert(e.eventsIn === 0 && !e.skippedFenced && e.committedVersion === snap.version + 1,
+        s"mergeOnRead=$mor")
+      assert(after.batchId === 4L && after.watermarkLsn === snap.watermarkLsn &&
+        after.files.map(_.path) === snap.files.map(_.path), s"mergeOnRead=$mor")
+      // an empty multi-slice replay commits each of its slices the same way
+      val empties = p.replay(events.filter(lit(false)), numBatches = 2, startBatchId = 5L)
+      assert(empties.map(_.committedVersion) === Seq(snap.version + 2, snap.version + 3) &&
+        p.table.currentSnapshot.get.batchId === 6L, s"mergeOnRead=$mor")
     }
   }
 

@@ -194,25 +194,16 @@ class PlanSpec extends SparkSuite {
     assert(exchanges == 1, s"salted shape added a shuffle:\n$plan")
   }
 
+  /** Runs `body` with a [[MergeActionCounter]] registered on the context. */
+  private def withActionCounter[T](body: MergeActionCounter => T): T = {
+    val counter = new MergeActionCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try body(counter) finally spark.sparkContext.removeSparkListener(counter)
+  }
+
   test("MERGE stats path: no Merge-issued action besides the write, in every mode") {
-    val sc = spark.sparkContext
-    val counter = new MergeActionCounter
-    sc.addSparkListener(counter)
-    // listener delivery is async but ordered: once a tagged no-op job's start
-    // event arrives, every earlier job's has too
-    def drain(): Unit = {
-      val tag = java.util.UUID.randomUUID().toString
-      sc.setLocalProperty(MergeActionCounter.SentinelProp, tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(MergeActionCounter.SentinelProp, null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!counter.sentinels.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(counter.sentinels.contains(tag), "listener bus did not drain")
-    }
-    def prepasses(f: => Any): Int = {
-      drain(); counter.actions.set(0); f; drain(); counter.actions.get
-    }
-    try {
+    withActionCounter { counter =>
+      def prepasses(f: => Any): Int = counter.during(f)._1
       val ev = graft.model.SyntheticEvents.generate(spark, 400)
       val (lower, upper) = (ev.filter(col("lsn") < 200), ev.filter(col("lsn") >= 200))
       val cow = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-jobs-cow"))(spark),
@@ -230,7 +221,52 @@ class PlanSpec extends SparkSuite {
       mor.applyBatch(lower, 0L)
       assert(prepasses(mor.applyBatch(upper, 1L)) === 0,
         "merge-on-read never runs a pre-pass")
-    } finally sc.removeSparkListener(counter)
+    }
+  }
+
+  test("replay: one slice is one SQL execution, the merge write; N slices add one bounds job") {
+    withActionCounter { counter =>
+      def executions(f: => Any): Int = counter.during(f)._2
+      val ev = graft.model.SyntheticEvents.generate(spark, 600)
+      for (mor <- Seq(false, true)) {
+        val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir(s"plan-replay-jobs-$mor"))(spark),
+          s"replay-jobs-$mor", lineage = false, mergeOnRead = mor, compactEveryFiles = 0)
+        p.bootstrap(numBuckets = 8)
+        assert(executions(p.replay(ev.filter(col("lsn") < 200), 1)) === 1,
+          s"mergeOnRead=$mor: a one-slice replay into an empty table")
+        assert(executions(p.replay(ev.filter(col("lsn") >= 200 && col("lsn") < 300), 1, 1L)) === 1,
+          s"mergeOnRead=$mor: a one-slice replay into a populated table")
+        assert(executions(p.replay(ev.filter(col("lsn") >= 300), 3, 2L)) === 4,
+          s"mergeOnRead=$mor: three slices are three writes and the bounds job")
+        assert(executions(p.replay(ev.filter(lit(false)), 1, 5L)) === 1,
+          s"mergeOnRead=$mor: an empty one-slice replay runs its (empty) write job")
+      }
+    }
+  }
+
+  test("ordered one-slice replays reuse the merge's generated code from batch to batch") {
+    // each batch is its own directory, so the test's own plans carry no
+    // per-batch literal either
+    val dir = SparkTestBase.tmpDir("plan-codegen") + "/events"
+    graft.model.SyntheticEvents.generate(spark, 5 * 400L, seed = 7L)
+      .withColumn("b", floor(col("lsn") / 400)).write.partitionBy("b").parquet(dir)
+    val schema = spark.read.parquet(s"$dir/b=0").schema
+    def batch(i: Int) = spark.read.schema(schema).parquet(s"$dir/b=$i")
+    for (mor <- Seq(true, false)) {
+      val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir(s"plan-codegen-$mor"))(spark),
+        s"codegen-$mor", lineage = false, mergeOnRead = mor, compactEveryFiles = 0)
+      p.bootstrap(numBuckets = 8)
+      // batch 0 meets an empty table with no watermark; batch 1 is the
+      // warm-up, the first with a watermark guard and a populated target
+      for (i <- 0 to 1) { p.replay(batch(i), 1, i.toLong); p.awaitMaintenance() }
+      val compiles = (2 to 4).map { i =>
+        val n = SparkTestBase.compilesDuring(p.replay(batch(i), 1, i.toLong))
+        p.awaitMaintenance()
+        n
+      }
+      assert(compiles === Seq(0L, 0L, 0L),
+        s"mergeOnRead=$mor: steady-state batches compiled generated code")
+    }
   }
 
   test("REAL copy-on-write merge write job: DPP prunes the target scan to the touched buckets, one CollectMetrics") {
@@ -470,36 +506,56 @@ class PlanSpec extends SparkSuite {
   }
 }
 
-/** Counts the Spark actions whose innermost `graft` call-site frame is in
-  * Merge.scala: Merge's write is issued from LakeTable, so any other action
-  * Merge runs itself (a pre-pass) is counted. An action is a SQL
-  * execution (AQE runs one as several jobs: shuffle-map stages, then the
+/** Counts two things per run of a block ([[during]]): the Spark actions
+  * whose innermost `graft` call-site frame is in Merge.scala, and every SQL
+  * execution. Merge's write is issued from LakeTable, so any other action
+  * Merge runs itself (a pre-pass) is counted as Merge-issued. An action is a
+  * SQL execution (AQE runs one as several jobs: shuffle-map stages, then the
   * result) or a job outside any SQL execution, such as an RDD action. AQE
   * submits jobs from a pool thread, so a SQL execution's frame comes from
   * its start event, which carries the call site of the thread that ran it. */
-private final class MergeActionCounter extends org.apache.spark.scheduler.SparkListener {
+private final class MergeActionCounter(sc: org.apache.spark.SparkContext)
+    extends org.apache.spark.scheduler.SparkListener {
   import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
   private val GraftFrame = """\bgraft\.[\w.$]+\(([\w]+\.scala)""".r
   private def fromMerge(callSite: String): Boolean =
     GraftFrame.findFirstMatchIn(callSite).exists(_.group(1) == "Merge.scala")
+  private val SentinelProp = "graft.test.sentinel"
 
-  val actions = new java.util.concurrent.atomic.AtomicInteger()
-  val sentinels: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val actions = new java.util.concurrent.atomic.AtomicInteger()
+  private val executions = new java.util.concurrent.atomic.AtomicInteger()
+  private val sentinels = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** (Merge-issued actions, SQL executions) that `f` runs. */
+  def during(f: => Any): (Int, Int) = {
+    drain(); actions.set(0); executions.set(0)
+    f
+    drain(); (actions.get, executions.get)
+  }
+
+  // listener delivery is async but ordered: once a tagged no-op job's start
+  // event arrives, every earlier job's has too
+  private def drain(): Unit = {
+    val tag = java.util.UUID.randomUUID().toString
+    sc.setLocalProperty(SentinelProp, tag)
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setLocalProperty(SentinelProp, null)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!sentinels.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sentinels.contains(tag), "listener bus did not drain")
+  }
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
     case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+      executions.incrementAndGet()
       if (fromMerge(s.details)) actions.incrementAndGet()
     case _ =>
   }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
     val prop = (k: String) => Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-    prop(MergeActionCounter.SentinelProp).foreach(sentinels.add)
+    prop(SentinelProp).foreach(sentinels.add)
     if (prop("spark.sql.execution.id").isEmpty && e.stageInfos.exists(si => fromMerge(si.details)))
       actions.incrementAndGet()
   }
-}
-
-private object MergeActionCounter {
-  val SentinelProp = "graft.test.sentinel"
 }

@@ -25,6 +25,16 @@ object SparkTestBase {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Generated-code compilations (Janino) this JVM runs while `f` runs. In a
+    * local session the executors share the JVM, so task-side codegen counts
+    * too; a compile served from Spark's code cache does not. */
+  def compilesDuring(f: => Any): Long = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    f
+    compiles.getCount - before
+  }
+
   /** The lake-table scans (relations partitioned by `_bucket`) of an
     * executed plan, through adaptive stages, reused exchanges and
     * subqueries. */
