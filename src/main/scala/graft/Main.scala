@@ -340,12 +340,8 @@ object Main {
         case Some(g) => t.vacuum(graceMs = g.toLong, retainSnapshots = retain)
         case None => t.vacuum()
       }
-      // lineage/ is the third growth direction (one JSON per commit) —
-      // vacuum enforces the roll-up so maintenance bounds ALL of meta/,
-      // data/ and lineage/
-      val folded = Lineage.compact(spark, tableRoot)
       println(s"[vacuum] removed $n unreferenced data files, " +
-        s"retained last $retain snapshot(s), folded $folded lineage files" +
+        s"retained last $retain snapshot(s)" +
         rest.headOption.map(g => s" (grace=${g}ms)").getOrElse(" (default grace)"))
 
     // ---- config-driven extract-load (≙ `teleport extract-load-db`,

@@ -66,7 +66,7 @@ object SparkEntry {
     */
   private def cdcReplayState(spark: SparkSession, dir: String): DataFrame = {
     val root = scratch("gate-cdc-replay")
-    val p = new CdcPipeline(LakeTable(root)(spark), "gate", lineage = false)
+    val p = new CdcPipeline(LakeTable(root)(spark), "gate")
     p.bootstrap(numBuckets = 16)
     p.replay(derivedEvents(spark, dir), numBatches = 4)
     p.state()
@@ -84,8 +84,7 @@ object SparkEntry {
     * LWW fold as `cdc_replay_state`: rebucket must be state-invariant. */
   private def cdcRebucket(spark: SparkSession, dir: String): DataFrame = {
     val root = scratch("gate-cdc-rebucket")
-    val p = new CdcPipeline(LakeTable(root)(spark), "gate",
-      lineage = false, mergeOnRead = true)
+    val p = new CdcPipeline(LakeTable(root)(spark), "gate", mergeOnRead = true)
     p.bootstrap(numBuckets = 16)
     p.replay(derivedEvents(spark, dir), numBatches = 4)
     p.table.rebucket(48, graft.model.CdcModel.KeyCols)
@@ -100,7 +99,7 @@ object SparkEntry {
     val b = ev.agg(min("lsn"), max("lsn")).collect()(0)
     val split = (b.getLong(0) + b.getLong(1)) / 2
     val root = scratch("gate-cdc-evo")
-    val p = new CdcPipeline(LakeTable(root)(spark), "gate", lineage = false)
+    val p = new CdcPipeline(LakeTable(root)(spark), "gate")
     p.bootstrap(numBuckets = 16)
     p.applyBatch(ev.filter(col("lsn") < split), 0L, orderedDelivery = true)
     p.applyBatch(
@@ -122,7 +121,7 @@ object SparkEntry {
     val b = ev.agg(min("lsn"), max("lsn")).collect()(0)
     val split = (b.getLong(0) + b.getLong(1)) / 2
     val root = scratch("gate-cdc-tt")
-    val p = new CdcPipeline(LakeTable(root)(spark), "gate", lineage = false)
+    val p = new CdcPipeline(LakeTable(root)(spark), "gate")
     p.bootstrap(numBuckets = 16)
     p.applyBatch(ev.filter(col("lsn") < split), 0L, orderedDelivery = true)
     val v1 = p.table.latestVersion // the snapshot batch 0 committed
@@ -142,8 +141,7 @@ object SparkEntry {
     val b = ev.agg(min("lsn"), max("lsn")).collect()(0)
     val split = (b.getLong(0) + b.getLong(1)) / 2
     val root = scratch("gate-cdc-incr")
-    val p = new CdcPipeline(LakeTable(root)(spark), "gate", lineage = false,
-      mergeOnRead = true)
+    val p = new CdcPipeline(LakeTable(root)(spark), "gate", mergeOnRead = true)
     p.bootstrap(numBuckets = 16)
     p.applyBatch(ev.filter(col("lsn") < split), 0L, orderedDelivery = true)
     val v1 = p.table.latestVersion
@@ -166,8 +164,7 @@ object SparkEntry {
     val ev = derivedEvents(spark, dir)
     val b = ev.agg(min("lsn"), max("lsn")).collect()(0)
     val split = (b.getLong(0) + b.getLong(1)) / 2
-    val src = new CdcPipeline(
-      LakeTable(scratch("gate-feed-src"))(spark), "gate", lineage = false,
+    val src = new CdcPipeline(LakeTable(scratch("gate-feed-src"))(spark), "gate",
       mergeOnRead = true)
     src.bootstrap(numBuckets = 16)
     val tgt = LakeTable(scratch("gate-feed-tgt"))(spark)
@@ -197,8 +194,7 @@ object SparkEntry {
     * The oracle recomputes final LWW state filtered to the same keys. */
   private def cdcPointLookup(spark: SparkSession, dir: String): DataFrame = {
     val root = scratch("gate-cdc-lookup")
-    val p = new CdcPipeline(LakeTable(root)(spark), "gate", lineage = false,
-      mergeOnRead = true)
+    val p = new CdcPipeline(LakeTable(root)(spark), "gate", mergeOnRead = true)
     p.bootstrap(numBuckets = 16)
     p.replay(derivedEvents(spark, dir), numBatches = 4)
     val snap = p.table.currentSnapshot.get // pin once: 12 lookups, 1 metadata read

@@ -5,10 +5,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.lake.{Epoch, LakeTable}
+import graft.lake.{DataFile, Epoch, LakeTable, Snapshot}
 import graft.model.CdcModel
 
-/** Per-batch outcome, persisted to the lineage table (SURVEY.md §7.1#6). */
+/** Per-batch outcome (SURVEY.md §7.1#6). A committed batch's stats are read
+  * back from the [[graft.lake.Summary]] its snapshot record stores, which is
+  * the row [[Lineage.read]] returns for it. */
 case class MergeStats(
     batchId: Long,
     committedVersion: Long,
@@ -29,6 +31,16 @@ case class MergeStats(
     // offset range so any batch's provenance is queryable without reading
     // snapshot history
     sourceOffsets: Map[String, Long] = Map.empty)
+
+object MergeStats {
+  /** The stats of the merge that committed `s`, from its summary. */
+  private[cdc] def committed(s: Snapshot, durationMs: Long): MergeStats = {
+    val m = s.summary.get
+    MergeStats(s.batchId, s.version, m.eventsIn, m.distinctKeys, m.lwwConflicts,
+      m.bucketsTouched, m.filesRewritten, m.rowsWritten, m.bytesWritten, m.minLsn, m.maxLsn,
+      m.schemaEvolved, skippedFenced = false, durationMs, m.sourceOffsets)
+  }
+}
 
 /** MERGE INTO for the LakeTable: applies one micro-batch of change events as
   * a key-bucket-pruned, single-shuffle upsert.
@@ -159,17 +171,18 @@ object Merge {
     val spark = events.sparkSession
     val snap = table.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"target table ${table.root} has no snapshot — bootstrap first"))
-    // a batch that applies nothing: fenced (already committed, so it reports
-    // no offsets of its own), or empty (a metadata-only commit that records
-    // the epoch — no schema evolution, watermark unchanged)
-    def appliedNothing(version: Long, fenced: Boolean) =
-      MergeStats(batchId, version, 0, 0, 0, 0, 0, 0, 0, -1, -1,
-        schemaEvolved = false, skippedFenced = fenced, (System.nanoTime() - t0) / 1000000,
-        sourceOffsets = if (fenced) Map.empty else sourceOffsets)
-    def metadataOnlyCommit(): MergeStats = appliedNothing(
-      table.replaceFiles(snap, Set.empty, Nil, None,
-        Some(Epoch(appId, batchId, -1L, sourceOffsets))).version,
-      fenced = false)
+    def elapsedMs() = (System.nanoTime() - t0) / 1000000
+    // one commit; on a conflict the table re-applies it to the newer
+    // snapshot while it is still valid there, else the conflict propagates
+    // and applyBatch re-merges. The record it publishes carries the batch's
+    // summary, and the stats returned are read back from it.
+    def commit(removed: Set[String], added: List[DataFile], schemaJson: Option[String],
+        eventsIn: Long, distinctKeys: Long, minLsn: Long, maxLsn: Long): MergeStats = {
+      val committed = table.replaceFiles(snap, removed, added, schemaJson,
+        Some(Epoch(appId, batchId, maxLsn, sourceOffsets, eventsIn, distinctKeys,
+          eventsIn - distinctKeys, minLsn, elapsedMs())))
+      MergeStats.committed(committed, elapsedMs())
+    }
 
     // --- commit-epoch fencing (replayed foreachBatch after restart).
     // >= not ==: batchIds are monotonic within an appId (the foreachBatch
@@ -187,7 +200,9 @@ object Merge {
         System.err.println(s"[merge] fencing batch $batchId of app '$appId': table " +
           s"${table.root} is already at batch ${snap.batchId} — if this is not a " +
           "zombie writer but a reset checkpoint, restart the stream under a NEW appId")
-      return appliedNothing(snap.version, fenced = true)
+      // already committed, so it reports no offsets of its own
+      return MergeStats(batchId, snap.version, 0, 0, 0, 0, 0, 0, 0, -1, -1,
+        schemaEvolved = false, skippedFenced = true, elapsedMs())
     }
 
     val numBuckets = snap.numBuckets
@@ -335,7 +350,7 @@ object Merge {
     // max_by(struct) aggregation would instead run on
     // ObjectHashAggregateExec — interpreted expression eval, measured ~100x
     // more CPU per row. The same sorted pass also computes per-key
-    // "contains a batch row" (unbounded max over _src) for lineage. ---
+    // "contains a batch row" (unbounded max over _src) for the summary. ---
     // the 64-bit key hash leads the sort/partition keys: the external sort's
     // row comparisons then resolve on (int, long) almost always, instead of
     // comparing three string key columns byte-by-byte; grouping is unchanged
@@ -383,26 +398,16 @@ object Merge {
     // sums, min and max are null over zero rows
     val eventsIn = Option(m("n")).fold(0L)(_.asInstanceOf[Long])
     // an all-fenced, watermark-filtered or empty batch applied nothing: a
-    // metadata-only commit records the epoch
-    if (eventsIn == 0L && added.isEmpty) return metadataOnlyCommit()
+    // metadata-only commit records the epoch (no schema evolution,
+    // watermark unchanged)
+    if (eventsIn == 0L && added.isEmpty) return commit(Set.empty, Nil, None, 0L, 0L, -1L, -1L)
     val (minLsn, maxLsn) =
       if (eventsIn == 0L) (-1L, -1L)
       else (m("mn").asInstanceOf[Long], m("mx").asInstanceOf[Long])
     val distinctKeys = Option(m("distinctKeys")).fold(0L)(_.asInstanceOf[Long])
     val bucketsRead = m("bucketsRead").asInstanceOf[scala.collection.Seq[Int]].toSet
-    val bucketsTouched = added.map(_.bucket).distinct.size
     val removed = snap.files.filter(f => bucketsRead.contains(f.bucket)).map(_.path).toSet
-    // one commit; on a conflict the table re-applies it to the newer
-    // snapshot while it is still valid there, else the conflict propagates
-    // and applyBatch re-merges
-    val committed = table.replaceFiles(snap, removed, added,
-      if (schemaEvolved) Some(evolvedSchema.json) else None,
-      Some(Epoch(appId, batchId, maxLsn, sourceOffsets)))
-
-    MergeStats(batchId, committed.version, eventsIn, distinctKeys,
-      eventsIn - distinctKeys, bucketsTouched, removed.size,
-      added.map(_.rows).sum, added.map(_.bytes).sum, minLsn, maxLsn, schemaEvolved,
-      skippedFenced = false, (System.nanoTime() - t0) / 1000000,
-      sourceOffsets = sourceOffsets)
+    commit(removed, added, if (schemaEvolved) Some(evolvedSchema.json) else None,
+      eventsIn, distinctKeys, minLsn, maxLsn)
   }
 }

@@ -7,15 +7,14 @@ import org.apache.spark.sql.types._
 import graft.lake.{LakeTable, Snapshot}
 import graft.model.CdcModel
 
-/** Per-batch lineage records under `<root>/lineage/v<version>.json` (one
-  * small JSON file per commit, written driver-side through the Hadoop
-  * FileSystem API — object stores have no append, and a Spark job per
-  * lineage row added ~0.5s of fixed cost to every micro-batch).
-  * ≙ the reference's RowCounter/BytesCounter + per-step workflow logging
-  * (/root/reference/workflow.go:100-136) promoted to a queryable table:
-  * {source offset range, rows applied, conflicts resolved, bytes, duration}.
-  * The commit version names the file, so a fenced/replayed batch that
-  * re-reports the same commit is deduplicated by create-exclusive.
+/** The lineage table: one row per merge commit, {source offsets, rows
+  * applied, conflicts resolved, bytes, duration} — the reference's
+  * RowCounter/BytesCounter + per-step workflow logging
+  * (/root/reference/workflow.go:100-136) promoted to a queryable table.
+  * Each row is the [[graft.lake.Summary]] its commit stored in the snapshot
+  * record it published ([[graft.lake.LakeTable.summaries]]), so a batch is
+  * recorded exactly when it is committed, and a fenced replay of it records
+  * nothing more.
   */
 object Lineage {
   val schema: StructType = StructType(Seq(
@@ -31,162 +30,12 @@ object Lineage {
     // written before round 4) — batch provenance without snapshot history
     StructField("sourceOffsets", MapType(StringType, LongType))))
 
-  def append(table: LakeTable, s: MergeStats): Unit = {
-    // offset keys are free-form caller strings (a path, a URL): render them
-    // through the JSON library so EVERY escape (control chars included) is
-    // correct — a hand-rolled escaper that misses \n would split the
-    // JSON-lines record and silently null the row on read
-    val offsets = s.sourceOffsets.toSeq.sortBy(_._1)
-      .map { case (k, v) =>
-        org.json4s.jackson.JsonMethods.compact(org.json4s.JsonAST.JString(k)) + ":" + v
-      }.mkString("{", ",", "}")
-    val json = s"""{"batchId":${s.batchId},"version":${s.committedVersion},""" +
-      s""""eventsIn":${s.eventsIn},"distinctKeys":${s.distinctKeys},""" +
-      s""""lwwConflicts":${s.lwwConflicts},"bucketsTouched":${s.bucketsTouched},""" +
-      s""""filesRewritten":${s.filesRewritten},"rowsWritten":${s.rowsWritten},""" +
-      s""""bytesWritten":${s.bytesWritten},""" +
-      s""""minLsn":${s.minLsn},"maxLsn":${s.maxLsn},""" +
-      s""""schemaEvolved":${s.schemaEvolved},"skippedFenced":${s.skippedFenced},""" +
-      s""""durationMs":${s.durationMs},"sourceOffsets":$offsets}""" + "\n"
-    val dir = new org.apache.hadoop.fs.Path(table.root, "lineage")
-    val dest = new org.apache.hadoop.fs.Path(dir, s"v${s.committedVersion}.json")
-    // temp + rename: a concurrent Lineage.read must never observe a
-    // half-written record (a plain create+write is visible mid-write on
-    // HDFS). The `.tmp-` name is invisible to the reader's `.json` filter;
-    // fs.create makes the parent dir, so no per-batch mkdirs RPC. Fenced
-    // replays re-report the same version with identical bytes, so a rename
-    // onto an existing record (POSIX overwrite) is harmless and an HDFS
-    // rename refusal just drops the duplicate tmp.
-    val tmp = new org.apache.hadoop.fs.Path(dir,
-      s"v${s.committedVersion}.tmp-${java.util.UUID.randomUUID()}")
-    LakeTable.writeString(table.fs, tmp, json)
-    if (!table.fs.rename(tmp, dest)) table.fs.delete(tmp, false)
-  }
-
-  def read(spark: SparkSession, tableRoot: String): DataFrame =
-    readAttempt(spark, tableRoot, attemptsLeft = 3)
-
-  private def readAttempt(spark: SparkSession, tableRoot: String,
-      attemptsLeft: Int): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(tableRoot, "lineage")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    // explicit file listing, not a glob: Spark's glob resolution was observed
-    // to intermittently miss just-written files; listStatus is authoritative
-    val (jsons, segments) =
-      if (!fs.isDirectory(dir)) (Array.empty[String], Array.empty[String])
-      else {
-        val st = fs.listStatus(dir).filter(_.isFile)
-        (st.collect { case s if s.getPath.getName.endsWith(".json") => s.getPath.toString },
-         st.collect { case s if s.getPath.getName.startsWith("segment-") &&
-           s.getPath.getName.endsWith(".parquet") => s.getPath.toString })
-      }
-    // a background roll-up may delete a listed JSON between the listing and
-    // the read (live db-terminal over an ingesting lake) — the record is
-    // already in the published segment, so nothing is lost, but the vanish
-    // can surface at TWO points: at read() creation (the path-existence
-    // check — caught here, re-list and retry) or at scan execution
-    // (ignoreMissingFiles skips it)
-    try {
-      val parts =
-        Option.when(jsons.nonEmpty)(spark.read.schema(schema)
-          .option("ignoreMissingFiles", "true").json(jsons.toIndexedSeq: _*)).toSeq ++
-        Option.when(segments.nonEmpty)(spark.read.schema(schema)
-          .option("ignoreMissingFiles", "true").parquet(segments.toIndexedSeq: _*)).toSeq
-      if (parts.isEmpty) // table has no lineage records (lineage=false)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      // a crash between "write roll-up segment" and "delete folded JSONs" (or a
-      // fenced replay re-reporting an already-folded commit) leaves the same
-      // version in both forms — the commit version is the primary key, dedup
-      else parts.reduce(_ unionByName _).dropDuplicates("version")
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException if attemptsLeft > 1 &&
-          Option(e.getMessage).exists(m =>
-            m.contains("PATH_NOT_FOUND") || m.contains("does not exist")) =>
-        readAttempt(spark, tableRoot, attemptsLeft - 1)
-    }
-  }
-
-  /** Roll-up: fold every lineage JSON older than the newest `keepRecent`
-    * (plus any previous segments) into ONE parquet segment, then delete the
-    * folded files. Bounds the `lineage/` directory at O(keepRecent) + one
-    * segment: at seconds-per-batch streaming the one-JSON-per-commit scheme
-    * otherwise accumulates ~500k files/month — an object-store listing
-    * problem. Crash-safe: the new segment is PUBLISHED before any delete,
-    * and [[read]] dedups by version, so every intermediate state reads
-    * correctly. Readers are unchanged ([[read]] unions segments + JSONs).
-    * Returns the number of files folded (0 = nothing to do).
-    */
-  def compact(spark: SparkSession, tableRoot: String, keepRecent: Int = 64): Int = {
-    val dir = new org.apache.hadoop.fs.Path(tableRoot, "lineage")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.isDirectory(dir)) return 0
-    val st = fs.listStatus(dir).filter(_.isFile)
-    val jsons = st.map(_.getPath).filter(_.getName.endsWith(".json"))
-      .sortBy(p => p.getName.stripPrefix("v").stripSuffix(".json").toLongOption.getOrElse(-1L))
-    val segments = st.map(_.getPath)
-      .filter(p => p.getName.startsWith("segment-") && p.getName.endsWith(".parquet"))
-    // GC staging DIRECTORIES a crashed/failed previous roll-up left behind
-    // (each holds a full folded copy — a persistent failure must not
-    // accumulate them; `st` is pre-filtered to files, so list again);
-    // 10-minute grace protects a roll-up actually in flight
-    fs.listStatus(dir).filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(".rollup-")).map(_.getPath).foreach { p =>
-      try {
-        if (fs.getFileStatus(p).getModificationTime <
-            System.currentTimeMillis() - 600000L) fs.delete(p, true)
-      } catch { case _: java.io.FileNotFoundException => }
-    }
-    // ... and orphan `.tmp-` record files a crashed [[append]] left behind
-    // (invisible to readers; same grace rule)
-    st.filter(s => s.getPath.getName.contains(".tmp-") &&
-        s.getModificationTime < System.currentTimeMillis() - 600000L)
-      .foreach(s => try fs.delete(s.getPath, false)
-        catch { case _: java.io.FileNotFoundException => })
-    val fold = jsons.dropRight(math.max(0, keepRecent))
-    if (fold.isEmpty || (fold.length + segments.length) <= 1) return 0
-    try { foldAndPublish(spark, fs, dir, fold, segments) } catch {
-      // a CONCURRENT roll-up (CLI vacuum + the pipeline's background one)
-      // deleted our inputs before analysis — its published segment already
-      // holds them; this run simply has nothing left to do
-      case e: org.apache.spark.sql.AnalysisException if Option(e.getMessage)
-          .exists(m => m.contains("PATH_NOT_FOUND") || m.contains("does not exist")) => 0
-    }
-  }
-
-  private def foldAndPublish(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      fold: Array[org.apache.hadoop.fs.Path],
-      segments: Array[org.apache.hadoop.fs.Path]): Int = {
-    val folded = {
-      // ignoreMissingFiles: a CONCURRENT roll-up (CLI vacuum + the pipeline's
-      // background one) may delete an input mid-fold — every such record is
-      // in the concurrent run's published segment, which this run does not
-      // delete, so convergence holds (read() dedups by version)
-      val parts =
-        Seq(spark.read.schema(schema).option("ignoreMissingFiles", "true")
-          .json(fold.map(_.toString).toIndexedSeq: _*)) ++
-        Option.when(segments.nonEmpty)(
-          spark.read.schema(schema).option("ignoreMissingFiles", "true")
-            .parquet(segments.map(_.toString).toIndexedSeq: _*)).toSeq
-      parts.reduce(_ unionByName _).dropDuplicates("version")
-    }
-    // one file: lineage rows are tiny (a few hundred bytes each) — even a
-    // year of seconds-per-batch history is a few hundred MB of parquet
-    val staging = new org.apache.hadoop.fs.Path(dir, s".rollup-${java.util.UUID.randomUUID()}")
-    try {
-      folded.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val part = fs.listStatus(staging)
-        .find(s => s.getPath.getName.startsWith("part-") && s.getPath.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"roll-up wrote no parquet part in $staging"))
-      val dest = new org.apache.hadoop.fs.Path(dir, s"segment-${java.util.UUID.randomUUID()}.parquet")
-      if (!fs.rename(part.getPath, dest))
-        throw new java.io.IOException(s"rename ${part.getPath} -> $dest failed")
-      // the roll-up is live — now retire what it folded
-      (fold ++ segments).foreach(p => fs.delete(p, false))
-      fold.length + segments.length
-    } finally {
-      fs.delete(staging, true)
-    }
+  /** The lineage rows of the table at `tableRoot`, in [[schema]]. A fenced
+    * batch commits nothing, so `skippedFenced` is always false. */
+  def read(spark: SparkSession, tableRoot: String): DataFrame = {
+    val rows = LakeTable(tableRoot)(spark).summaries()
+    rows.select(schema.map(f =>
+      (if (f.name == "skippedFenced") lit(false) else col(f.name)).cast(f.dataType).as(f.name)): _*)
   }
 }
 
@@ -207,15 +56,15 @@ object Lineage {
   *        over several runs instead of one table-sized rewrite.
   * @param retainSnapshots when > 0, the background maintenance also runs
   *        [[graft.lake.LakeTable.vacuum]] every `vacuumEveryBatches` batches,
-  *        keeping the newest `retainSnapshots` versions readable. Without it
-  *        a sustained stream grows `meta/` by one snapshot record (plus
-  *        changed-group manifests) per commit and `data/` by every superseded
-  *        copy-on-write generation — at seconds-per-batch that is the same
-  *        ~500k-files-per-month object-store listing problem the lineage
-  *        roll-up solves for `lineage/`. 0 (default) keeps every version:
-  *        retention deliberately stays OPT-IN because it truncates the time-
-  *        travel horizon (`show <v>`/`history`/`incremental` reach only
-  *        retained versions).
+  *        keeping the newest `retainSnapshots` versions readable and folding
+  *        the summaries of the expired ones into one `lineage/` segment.
+  *        Without it a sustained stream grows `meta/` by one snapshot record
+  *        (plus changed-group manifests) per commit and `data/` by every
+  *        superseded copy-on-write generation — at seconds-per-batch, about
+  *        500k files a month, an object-store listing problem. 0 (default)
+  *        keeps every version: retention deliberately stays OPT-IN because
+  *        it truncates the time-travel horizon (`show <v>`/`history`/
+  *        `incremental` reach only retained versions).
   * @param vacuumGraceMs passed to vacuum: files younger than this are never
   *        collected. MUST exceed the longest write-to-commit gap of any
   *        concurrent writer (this stream's own merges included — data files
@@ -224,7 +73,7 @@ object Lineage {
   *        micro-batch. Tests owning the quiesced table may pass 0.
   */
 final class CdcPipeline(val table: LakeTable, val appId: String,
-    lineage: Boolean = true, val mergeOnRead: Boolean = false,
+    val mergeOnRead: Boolean = false,
     val compactEveryFiles: Int = 16,
     val maxCompactBucketsPerRun: Int = 256,
     val retainSnapshots: Int = 0,
@@ -251,9 +100,8 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
   @volatile private var inflight: java.util.concurrent.Future[_] = null
   private[graft] val compactionsRun = new java.util.concurrent.atomic.AtomicInteger()
   @volatile private var maintenanceError: Throwable = null
-  // last batchId whose submission carried each periodic job — the sticky
+  // last batchId whose submission carried the periodic vacuum — the sticky
   // cadence base (see applyBatch); driver-thread only, like `inflight`
-  private var lastRollupBatch = 0L
   private var lastVacuumBatch = 0L
   // test seam: lets a spec wedge the (single) maintenance thread to PROVE
   // batches never wait on it — if applyBatch ran compaction inline, the
@@ -304,8 +152,8 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
       orderedDelivery: Boolean = false): MergeStats = {
     // retry wraps ONLY the merge: a conflict from the post-merge compaction
     // must never re-run an already-committed batch (it would re-append every
-    // row as duplicate generations and double-count lineage) — maintenance
-    // is best-effort and the next batch's auto-compaction check catches up
+    // row as duplicate generations) — maintenance is best-effort and the
+    // next batch's auto-compaction check catches up
     var attempt = 0
     var stats: MergeStats = null
     while (stats == null) {
@@ -319,34 +167,22 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
             s"$attempt/${CdcPipeline.MaxReMerges}), re-merging against the new snapshot: ${e.getMessage}")
       }
     }
-    // fenced replays are NOT appended: they re-report the committed version
-    // with zeroed stats (eventsIn=0, skippedFenced=true), and on a POSIX
-    // local FS the tmp+rename in Lineage.append would OVERWRITE the
-    // version's real record with that zeroed one (HDFS rename refuses, so
-    // behavior also diverged by FS) — the original record must always win
-    if (lineage && !stats.skippedFenced) Lineage.append(table, stats)
     // schedule background maintenance: at most one task in flight, never
     // blocking the batch. The fragmentation probe reads the snapshot the
     // merge JUST committed from the table's in-process cache — zero metadata
     // IO per batch (currentSnapshot would re-list + re-read + re-inflate on
-    // an object store every few seconds, forever); the lineage roll-up fires
-    // every 64th batch (a listStatus probe per batch would add an RPC per
-    // micro-batch for a directory that grows one file per commit — the
-    // periodic fold keeps it O(100) files).
-    val spark = events.sparkSession
+    // an object store every few seconds, forever).
     val needCompact = mergeOnRead && compactEveryFiles > 0 &&
       table.lastCommitted.orElse(table.currentSnapshot)
         .exists(_.files.groupBy(_.bucket).exists(_._2.size > compactEveryFiles))
-    // STICKY cadence, not exact-modulo: a roll-up/vacuum whose trigger batch
+    // STICKY cadence, not exact-modulo: a vacuum whose trigger batch
     // coincides with an in-flight compaction occupying the single slot would
     // otherwise be silently dropped for a whole further interval (unbounded
-    // lineage/meta growth under sustained ingest with long compactions) —
-    // the due flag persists until a submission actually carries it
-    val needRollup = lineage && batchId > 0 && batchId - lastRollupBatch >= 64
+    // meta growth under sustained ingest with long compactions) — the due
+    // flag persists until a submission actually carries it
     val needVacuum = retainSnapshots > 0 && batchId > 0 &&
       batchId - lastVacuumBatch >= vacuumEveryBatches
-    if ((needCompact || needRollup || needVacuum) && (inflight == null || inflight.isDone)) {
-      if (needRollup) lastRollupBatch = batchId
+    if ((needCompact || needVacuum) && (inflight == null || inflight.isDone)) {
       if (needVacuum) lastVacuumBatch = batchId
       inflight = maintenancePool.submit(new Runnable {
         def run(): Unit = {
@@ -370,13 +206,6 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
               case e: Throwable =>
                 maintenanceError = e
                 System.err.println(s"[cdc] retention vacuum FAILED: $e")
-            }
-          if (needRollup)
-            try Lineage.compact(spark, table.root)
-            catch {
-              case e: Throwable =>
-                maintenanceError = e
-                System.err.println(s"[cdc] lineage roll-up FAILED: $e")
             }
         }
       })
@@ -404,7 +233,7 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
     * streamed batch's do.
     *
     * Provenance: replay records no source offset. A slice's LSN range is
-    * its lineage record's `minLsn`/`maxLsn`, and the table's watermark is
+    * its summary's `minLsn`/`maxLsn`, and the table's watermark is
     * the snapshot's `watermarkLsn`.
     */
   def replay(events: DataFrame, numBatches: Int, startBatchId: Long = 0L): Seq[MergeStats] = {

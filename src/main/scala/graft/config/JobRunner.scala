@@ -96,7 +96,6 @@ object JobRunner {
           // only the two constructed columns are bookkeeping here: an extract
           // payload column named e.g. `eventTime` must evolve in, not vanish
           metaCols = Set(graft.model.CdcModel.LsnCol, graft.model.CdcModel.OpCol))
-        graft.cdc.Lineage.append(dest, stats)
         Result(table, strategy, stats.eventsIn, stats.committedVersion,
           previewed = false, mergeStats = Some(stats))
     }
@@ -296,7 +295,6 @@ object JobRunner {
           batchId = -1L, keyCols = keys,
           sourceOffsets = Map(offsetKey -> next.getOrElse(-1L)),
           metaCols = Set(graft.model.CdcModel.LsnCol, graft.model.CdcModel.OpCol))
-        graft.cdc.Lineage.append(dest, stats)
         last = Some(stats)
       }
       next match {

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileFormatWriter, FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -87,7 +87,10 @@ case class Snapshot(
     // set is not the group's actual files (silent snapshot corruption). The
     // conf only applies to NEW tables (and to legacy tables on their
     // migration commit); 0 = pre-round-5 snapshot with no recorded granule.
-    bucketsPerGroup: Int = 0
+    bucketsPerGroup: Int = 0,
+    // what the merge committing this version did; None on every other
+    // commit (create, overwrite, compaction, schema update, rebucket)
+    summary: Option[Summary] = None
 ) {
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
 }
@@ -101,8 +104,25 @@ object Snapshot {
 /** The commit epoch of one stream batch, stamped on the snapshot that
   * applies it: the fencing identity (`appId`, `batchId`; -1 when not a
   * stream batch), the highest LSN the batch applied and the per-source
-  * offsets it advanced to. See [[LakeTable.replaceFiles]]. */
-case class Epoch(appId: String, batchId: Long, maxLsn: Long, offsets: Map[String, Long])
+  * offsets it advanced to, plus the event-level half of the commit's
+  * [[Summary]]. See [[LakeTable.replaceFiles]]. */
+case class Epoch(appId: String, batchId: Long, maxLsn: Long, offsets: Map[String, Long],
+    eventsIn: Long = 0L, distinctKeys: Long = 0L, lwwConflicts: Long = 0L,
+    minLsn: Long = -1L, durationMs: Long = 0L)
+
+/** What one merge commit did, stored in the snapshot record it publishes
+  * (Iceberg's snapshot `summary`), so a batch's record is part of its
+  * atomic commit. [[LakeTable.replaceFiles]] computes the file-level fields
+  * from the change it commits; the event-level fields come from the
+  * commit's [[Epoch]], so a re-applied commit keeps them.
+  * `sourceOffsets` are the batch's own offsets, not the table's cumulative
+  * ones. `durationMs` ends where the commit starts: the commit cannot time
+  * itself into the record it publishes. [[LakeTable.summaries]] reads them
+  * back as a table. */
+case class Summary(eventsIn: Long, distinctKeys: Long, lwwConflicts: Long,
+    bucketsTouched: Int, filesRewritten: Int, rowsWritten: Long, bytesWritten: Long,
+    minLsn: Long, maxLsn: Long, schemaEvolved: Boolean, durationMs: Long,
+    sourceOffsets: Map[String, Long])
 
 /** Concurrent-commit conflict: someone else published the version we tried to. */
 class CommitConflictException(msg: String) extends RuntimeException(msg)
@@ -116,16 +136,20 @@ class CommitConflictException(msg: String) extends RuntimeException(msg)
   * Layout:
   * {{{
   *   <root>/data/<bucket>-<uuid>.parquet — immutable data files
-  *   <root>/meta/snapshot-<N>.json    — manifest per version
-  *   <root>/lineage/<n>.json          — per-batch lineage records
+  *   <root>/meta/snapshot-<N>.json    — record per version (a merge's
+  *                                      carries its [[Summary]])
+  *   <root>/meta/manifest-<uuid>.json — file entries of one bucket group
+  *   <root>/lineage/segment-<uuid>.parquet — summaries of records that
+  *                                      [[vacuum]] expired
   * }}}
   *
-  * ALL metadata IO goes through the Hadoop `FileSystem` API resolved from
+  * Metadata IO goes through the Hadoop `FileSystem` API resolved from
   * `root`'s scheme, so the same table code runs on local disk (`file://`,
   * tests), HDFS and HCFS object stores — the only places a 100 TB table can
-  * actually live; `java.nio` would bind it to posix. Readers resolve the
-  * latest snapshot by max N; writers commit with an expected-parent CAS
-  * (create-exclusive / rename-without-overwrite, see [[commit]]). All data
+  * actually live. The one exception is the local commit CAS, which
+  * hard-links through `java.nio` because a local rename would replace a
+  * racing winner's record (see [[commit]]). Readers resolve the latest
+  * snapshot by max N; writers commit with an expected-parent CAS. All data
   * paths in the manifest are relative to `<root>/data`.
   */
 final class LakeTable(val root: String, spark: SparkSession) {
@@ -138,6 +162,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
   // these paths to Spark as they are
   private val dataDir: HPath = fs.makeQualified(new HPath(rootPath, "data"))
   private val metaDir: HPath = new HPath(rootPath, "meta")
+  private val lineageDir: HPath = new HPath(rootPath, "lineage")
 
   def exists: Boolean = fs.isDirectory(metaDir) && latestVersion >= 0
 
@@ -271,6 +296,53 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * manifest (`files` is empty on round-4+ snapshots; legacy snapshots
     * carry it inline). Use [[snapshot]] when the flat file list is needed. */
   def describe(version: Long): Snapshot = rawSnapshot(version)
+
+  /** Every merge commit's [[Summary]], one row each: the record's `batchId`
+    * and `version`, then the summary's fields. The rows come from the
+    * retained snapshot records, from the `lineage/` segments [[vacuum]]
+    * folds expired records into, and from the per-commit `lineage/v<N>.json`
+    * files of tables written before summaries were part of the commit. A
+    * version found in more than one of them (a vacuum stopped between
+    * publishing its segment and deleting the records) appears once. */
+  def summaries(): DataFrame = summariesAttempt(attemptsLeft = 3)
+
+  private def summariesAttempt(attemptsLeft: Int): DataFrame = {
+    val (segments, legacy) = lineageFiles()
+    // a concurrent vacuum may delete a listed file before the read: when the
+    // frame is created (the path check: re-list and retry) or when it runs
+    // (ignoreMissingFiles skips it). Either way its rows are in the segment
+    // that vacuum published before deleting anything.
+    try summaryRows(allVersions.map(snapshotPath), segments, legacy)
+    catch {
+      case e: AnalysisException if attemptsLeft > 1 && vanished(e) =>
+        summariesAttempt(attemptsLeft - 1)
+    }
+  }
+
+  /** The `lineage/` segments and legacy per-commit JSON files. */
+  private def lineageFiles(): (Seq[HPath], Seq[HPath]) =
+    if (!fs.isDirectory(lineageDir)) (Nil, Nil)
+    else {
+      val files = fs.listStatus(lineageDir).filter(_.isFile).map(_.getPath).toSeq
+      (files.filter(p => p.getName.startsWith("segment-") && p.getName.endsWith(".parquet")),
+        files.filter(p => p.getName.startsWith("v") && p.getName.endsWith(".json")))
+    }
+
+  private def summaryRows(records: Seq[HPath], segments: Seq[HPath],
+      legacy: Seq[HPath]): DataFrame = {
+    def reader(schema: StructType) =
+      spark.read.schema(schema).option("ignoreMissingFiles", "true")
+    def paths(ps: Seq[HPath]) = ps.map(_.toString)
+    // snapshot records are pretty-printed: one JSON document per file
+    val parts = Seq(
+      Option.when(records.nonEmpty)(reader(RecordSchema).option("multiLine", "true")
+        .json(paths(records): _*).where(col("summary").isNotNull)
+        .select(col("batchId"), col("version"), col("summary.*"))),
+      Option.when(segments.nonEmpty)(reader(SummaryRow).parquet(paths(segments): _*)),
+      Option.when(legacy.nonEmpty)(reader(SummaryRow).json(paths(legacy): _*))).flatten
+    if (parts.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), SummaryRow)
+    else parts.reduce(_ unionByName _).dropDuplicates("version")
+  }
 
   /** Time-travel read: the table's file state as of snapshot `version`
     * (same physical-rows semantics as [[read]] — CDC readers resolve LWW via
@@ -615,8 +687,9 @@ final class LakeTable(val root: String, spark: SparkSession) {
     * Each attempt builds the snapshot from its parent `p`: files
     * `p.files - removed + added`, schema `newSchemaJson` or else `p`'s,
     * watermark `max(p.watermarkLsn, maxLsn)`, offsets
-    * `p.sourceOffsets ++ offsets`. `epoch = None` (maintenance) carries
-    * `p`'s fencing identity, watermark and offsets.
+    * `p.sourceOffsets ++ offsets`, and a [[Summary]] of the change and the
+    * epoch. `epoch = None` (maintenance) carries `p`'s fencing identity,
+    * watermark and offsets, and no summary.
     *
     * THE commit-conflict rule: when another writer has published since
     * `parent`, the same change is re-applied to the current snapshot `f`
@@ -637,13 +710,18 @@ final class LakeTable(val root: String, spark: SparkSession) {
     */
   def replaceFiles(parent: Snapshot, removed: Set[String], added: List[DataFile],
       newSchemaJson: Option[String], epoch: Option[Epoch]): Snapshot = {
+    val summary = epoch.map(e => Summary(e.eventsIn, e.distinctKeys, e.lwwConflicts,
+      added.map(_.bucket).distinct.size, removed.size, added.map(_.rows).sum,
+      added.map(_.bytes).sum, e.minLsn, e.maxLsn, newSchemaJson.isDefined, e.durationMs,
+      e.offsets))
     def attempt(p: Snapshot): Snapshot = {
       val s = Snapshot(p.version + 1, p.version,
         newSchemaJson.getOrElse(p.schemaJson), p.numBuckets,
         p.files.filterNot(f => removed.contains(f.path)) ++ added,
         epoch.fold(p.appId)(_.appId), epoch.fold(p.batchId)(_.batchId),
         math.max(p.watermarkLsn, epoch.fold(-1L)(_.maxLsn)),
-        p.sourceOffsets ++ epoch.fold(Map.empty[String, Long])(_.offsets), p.keyCols)
+        p.sourceOffsets ++ epoch.fold(Map.empty[String, Long])(_.offsets), p.keyCols,
+        summary = summary)
       // the writer knows exactly which manifest groups its removed+added files
       // live in — every other group's manifest is reused verbatim. Group
       // numbers MUST be computed in the parent's stored granule (commit()
@@ -677,12 +755,13 @@ final class LakeTable(val root: String, spark: SparkSession) {
     committed
   }
 
-  /** Schema-evolution commit with no data change (all manifests reused). */
+  /** Schema-evolution commit with no data change (all manifests reused).
+    * It merges no batch, so it drops the parent's summary. */
   def updateSchema(newSchema: StructType, appId: String): Snapshot = {
     val parent = currentSnapshot.getOrElse(throw new IllegalStateException("create() first"))
     commit(parent.copy(version = parent.version + 1, parentVersion = parent.version,
-      schemaJson = newSchema.json, appId = appId, batchId = -1L), parent.version,
-      Some(Set.empty), knownParent = Some(parent))
+      schemaJson = newSchema.json, appId = appId, batchId = -1L, summary = None),
+      parent.version, Some(Set.empty), knownParent = Some(parent))
   }
 
   /** Full rewrite into a new bucket count — the escape hatch for a table
@@ -723,6 +802,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
     *    metadata is O(retained versions × groups), not O(commit history).
     *  - `data/`: files no RETAINED snapshot references are deleted (time
     *    travel ends at the retention horizon).
+    * The summaries of the expired records are folded into one
+    * `lineage/segment-<uuid>.parquet` first, so [[summaries]] loses none.
     * Returns the number of data files deleted.
     *
     * @param graceMs skip files modified within the last `graceMs` ms: a
@@ -743,9 +824,10 @@ final class LakeTable(val root: String, spark: SparkSession) {
       // the other run is already doing (more of) this cleanup. Step 1's
       // per-file deletes are guarded the same way; for the retained-side
       // READS the safe move is to stand down, not to treat the vanished
-      // snapshot's files as unreferenced. Periodic callers simply succeed
+      // snapshot's files as unreferenced. The same holds for a record or
+      // segment the lineage fold listed. Periodic callers simply succeed
       // on their next cycle.
-      case e: java.io.FileNotFoundException =>
+      case e: Exception if vanished(e) =>
         System.err.println(s"[vacuum] lost a race with a concurrent vacuum " +
           s"(${e.getMessage}) — standing down, nothing deleted this run")
         0
@@ -758,18 +840,15 @@ final class LakeTable(val root: String, spark: SparkSession) {
     if (versions.isEmpty) return 0
     val retained = versions.takeRight(keep).map(rawSnapshot)
 
-    // 1. expire old snapshot records (grace-guarded like everything else;
-    // an overlapping maintenance run may have deleted an entry between our
-    // listing and the stat — skip, don't abort the rest of the cleanup).
+    // 1. expire old snapshot records (grace-guarded like everything else).
+    // Their summaries are folded into the lineage segment first, so every
+    // state in between reads each merge exactly once.
     // INVARIANT: deletion proceeds in ASCENDING version order (`versions` is
     // sorted) — [[latestVersion]]'s hint-probe race detection relies on "if
     // v+1 was vacuumed, v already was too"; don't parallelize or reorder.
-    versions.dropRight(keep).foreach { v =>
-      val p = new HPath(metaDir, s"snapshot-$v.json")
-      try {
-        if (fs.getFileStatus(p).getModificationTime < cutoff) fs.delete(p, false)
-      } catch { case _: java.io.FileNotFoundException => }
-    }
+    val expiring = versions.dropRight(keep).filter(v => modifiedBefore(snapshotPath(v), cutoff))
+    if (expiring.nonEmpty) foldSummaries(expiring, cutoff)
+    expiring.foreach(v => fs.delete(snapshotPath(v), false))
 
     // 2. manifests (and stale commit temps) no retained snapshot references
     val liveManifests = retained.flatMap(_.manifests.map(_.path)).toSet
@@ -792,17 +871,42 @@ final class LakeTable(val root: String, spark: SparkSession) {
     // 4. `.staging-<uuid>` DIRECTORIES left by a crashed writer from before
     // data files were written at their final names: a SIGKILL inside that
     // writer's staged write leaked a full batch copy, and the isFile filter
-    // above would skip the directory forever. Same grace-guarded sweep the
-    // lineage roll-up uses for its `.rollup-*` dirs.
-    entries.filter(st => st.isDirectory && st.getPath.getName.startsWith(".staging-"))
-      .foreach { st =>
-        try {
-          if (fs.getFileStatus(st.getPath).getModificationTime < cutoff)
-            fs.delete(st.getPath, true)
-        } catch { case _: java.io.FileNotFoundException => }
-      }
+    // above would skip the directory forever.
+    sweepDirs(entries, ".staging-", cutoff)
     dead.size
   }
+
+  /** Folds the summaries of the `expiring` records, with every existing
+    * segment, into one new `lineage/segment-<uuid>.parquet`. The new segment
+    * is renamed into place before the folded segments are deleted, and the
+    * caller deletes the records only after this returns. */
+  private def foldSummaries(expiring: Seq[Long], cutoff: Long): Unit = {
+    if (fs.isDirectory(lineageDir)) // a fold that crashed left its work tree
+      sweepDirs(fs.listStatus(lineageDir).toSeq, ".rollup-", cutoff)
+    val (segments, _) = lineageFiles()
+    val staging = new HPath(lineageDir, s".rollup-${UUID.randomUUID()}")
+    try {
+      // one file: a summary row is a few hundred bytes
+      summaryRows(expiring.map(snapshotPath), segments, Nil)
+        .coalesce(1).write.parquet(staging.toString)
+      val part = fs.listStatus(staging).map(_.getPath)
+        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(s"lineage fold wrote no parquet file in $staging"))
+      val segment = new HPath(lineageDir, s"segment-${UUID.randomUUID()}.parquet")
+      if (!fs.rename(part, segment))
+        throw new java.io.IOException(s"rename $part -> $segment failed")
+      segments.foreach(fs.delete(_, false))
+    } finally fs.delete(staging, true)
+  }
+
+  private def modifiedBefore(p: HPath, cutoff: Long): Boolean =
+    try fs.getFileStatus(p).getModificationTime < cutoff
+    catch { case _: java.io.FileNotFoundException => false }
+
+  /** Deletes the `prefix` directories among `entries` older than `cutoff`. */
+  private def sweepDirs(entries: Seq[FileStatus], prefix: String, cutoff: Long): Unit =
+    entries.filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .foreach(st => if (modifiedBefore(st.getPath, cutoff)) fs.delete(st.getPath, true))
 }
 
 /** A [[FileIndex]] over manifest entries: one partition per bucket, each
@@ -943,6 +1047,22 @@ object LakeTable {
 
   private val SnapshotName = "snapshot-(\\d+)\\.json".r.unanchored
 
+  private val SummaryType: StructType = Encoders.product[Summary].schema
+  /** [[LakeTable.summaries]]' row, also the row of a lineage segment. */
+  private val SummaryRow: StructType = StructType(
+    Seq(StructField("batchId", LongType), StructField("version", LongType)) ++ SummaryType.fields)
+  /** The part of a snapshot record that [[LakeTable.summaries]] reads. */
+  private val RecordSchema: StructType = StructType(Seq(StructField("version", LongType),
+    StructField("batchId", LongType), StructField("summary", SummaryType)))
+
+  /** A file this call listed was deleted before it was read. */
+  private def vanished(e: Exception): Boolean = e match {
+    case _: java.io.FileNotFoundException => true
+    case a: AnalysisException => Option(a.getMessage).exists(m =>
+      m.contains("PATH_NOT_FOUND") || m.contains("does not exist"))
+    case _ => false
+  }
+
   /** Deterministic key bucket: non-negative xxhash64 of the key columns mod
     * numBuckets. Both the table writer and the MERGE batch side compute it
     * with the same expression, so bucket-equality joins never shuffle the big
@@ -974,9 +1094,9 @@ object LakeTable {
   }
 
   /** Create-exclusive write of a small metadata file: returns false if the
-    * path already exists (atomic on HDFS; checked on local).  Used for
-    * side-metadata like lineage records where last-writer-wins is fine but
-    * duplicate suppression is wanted. */
+    * path already exists (atomic on HDFS; checked on local). Used for
+    * side-metadata where the first writer wins, such as a monotone marker
+    * ([[MonotoneMarkers]]) or a stream source's pinned start version. */
   private[graft] def writeStringExclusive(fs: FileSystem, p: HPath, s: String): Boolean = {
     try {
       val out = fs.create(p, false)

@@ -88,10 +88,14 @@ object CdcModel {
     StructField("content", StringType, nullable = true),
     StructField("eventTime", TimestampType, nullable = true)))
 
+  // the key columns are nullable too: the manifest relation's schema drives
+  // the optimizer, so declaring non-null over data that may hold nulls is
+  // unsafe; and batches built from DataFrames carry them nullable, so a
+  // non-null declaration would make every first batch a schema evolution
   val targetSchema: StructType = StructType(Seq(
-    StructField("repo", StringType, nullable = false),
-    StructField("path", StringType, nullable = false),
-    StructField("commit", StringType, nullable = false),
+    StructField("repo", StringType, nullable = true),
+    StructField("path", StringType, nullable = true),
+    StructField("commit", StringType, nullable = true),
     StructField("lang", StringType, nullable = true),
     StructField("content", StringType, nullable = true),
     StructField(RowLsnCol, LongType, nullable = false),

@@ -30,7 +30,7 @@ class CdcFeedSpec extends SparkSuite {
   /** A merge-on-read source replayed in `n` batches. */
   private def morSource(root: String, n: Int, upToLsnFrac: Double = 1.0): CdcPipeline = {
     val p = new CdcPipeline(LakeTable(root)(spark), "feed-src",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     p.bootstrap(numBuckets = 8)
     val b = events.agg(min("lsn"), max("lsn")).collect()(0)
     val cut = b.getLong(0) + ((b.getLong(1) - b.getLong(0)) * upToLsnFrac).toLong
@@ -112,8 +112,7 @@ class CdcFeedSpec extends SparkSuite {
     // the replica holds exactly the fold of commits AFTER version `mid`:
     // replay the same event range through an independent pipeline as oracle
     val oracle = new CdcPipeline(
-      LakeTable(SparkTestBase.tmpDir("feed-svOracle"))(spark), "sv-oracle",
-      lineage = false)
+      LakeTable(SparkTestBase.tmpDir("feed-svOracle"))(spark), "sv-oracle")
     oracle.bootstrap(numBuckets = 8)
     oracle.applyBatch(
       CdcFeed.asEvents(src.table.readAppends(mid, src.table.latestVersion)),
@@ -167,7 +166,7 @@ class CdcFeedSpec extends SparkSuite {
     val srcRoot = SparkTestBase.tmpDir("feed-src4")
     val tgtRoot = SparkTestBase.tmpDir("feed-tgt4")
     val off = SparkTestBase.tmpDir("feed-off4")
-    val src = new CdcPipeline(LakeTable(srcRoot)(spark), "feed-src", lineage = false)
+    val src = new CdcPipeline(LakeTable(srcRoot)(spark), "feed-src")
     src.bootstrap(numBuckets = 8)
     val b = events.agg(min("lsn"), max("lsn")).collect()(0)
     val cut = (b.getLong(0) + b.getLong(1)) / 2
@@ -368,7 +367,7 @@ class CdcFeedSpec extends SparkSuite {
       val off = SparkTestBase.tmpDir(s"feed-prop-off$round")
       val mor = rnd.nextBoolean()
       val src = new CdcPipeline(LakeTable(srcRoot)(spark), "prop-src",
-        lineage = false, mergeOnRead = mor)
+        mergeOnRead = mor)
       src.bootstrap(numBuckets = 8)
       val tgt = LakeTable(tgtRoot)(spark)
       // random LSN cut points → 2-4 source stages; after each stage, a coin

@@ -112,9 +112,11 @@ class CdcPipelineSpec extends SparkSuite {
     assert(distinctKeys < eventsIn, "the batch must carry LWW conflicts")
     for (mor <- Seq(false, true)) {
       val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir(s"cdc-stats-$mor"))(spark),
-        s"app-stats-$mor", lineage = false, mergeOnRead = mor, compactEveryFiles = 0)
+        s"app-stats-$mor", mergeOnRead = mor, compactEveryFiles = 0)
       p.bootstrap(numBuckets = numBuckets)
-      p.applyBatch(base, 0L)
+      // the bootstrap schema already admits what a batch carries: the first
+      // batch evolves nothing
+      assert(!p.applyBatch(base, 0L).schemaEvolved, s"mergeOnRead=$mor")
       val parent = p.table.currentSnapshot.get
       assert(parent.files.groupBy(_.bucket).values.forall(_.size == 1))
       val s = p.applyBatch(batch, 1L)
@@ -137,7 +139,7 @@ class CdcPipelineSpec extends SparkSuite {
     val bucketOf = pmod(xxhash64(keys.map(col): _*), lit(numBuckets)).cast("int")
     val ev = SyntheticEvents.generate(spark, 1200)
     val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("cdc-nondet"))(spark),
-      "app-nondet", lineage = false)
+      "app-nondet")
     p.bootstrap(numBuckets = numBuckets)
     p.applyBatch(ev, 0L)
     val liveBefore = p.state().select(keys.map(col): _*).collect().toSet
@@ -171,8 +173,7 @@ class CdcPipelineSpec extends SparkSuite {
 
   test("time-travel live state: liveState(table, v) reproduces each batch's committed state") {
     val root = SparkTestBase.tmpDir("cdc-tt")
-    val p = new CdcPipeline(LakeTable(root)(spark), "app-tt", lineage = false,
-      mergeOnRead = true)
+    val p = new CdcPipeline(LakeTable(root)(spark), "app-tt", mergeOnRead = true)
     p.bootstrap(numBuckets = 16)
     val b = events.agg(min("lsn"), max("lsn")).collect()(0)
     val split = (b.getLong(0) + b.getLong(1)) / 2
@@ -212,8 +213,7 @@ class CdcPipelineSpec extends SparkSuite {
 
   test("CLI history/show <v>/incremental verbs walk the retained timeline") {
     val root = SparkTestBase.tmpDir("cdc-cli-tt")
-    val p = new CdcPipeline(LakeTable(root)(spark), "app-cli-tt", lineage = false,
-      mergeOnRead = true)
+    val p = new CdcPipeline(LakeTable(root)(spark), "app-cli-tt", mergeOnRead = true)
     p.bootstrap(numBuckets = 16)
     val b = events.agg(min("lsn"), max("lsn")).collect()(0)
     val split = (b.getLong(0) + b.getLong(1)) / 2
@@ -476,13 +476,34 @@ class CdcPipelineSpec extends SparkSuite {
     val s2 = p.applyBatch(events, batchId = 0)
     assert(s2.skippedFenced)
     assert(digest(finalState(p)).sameElements(v1))
-    // the fenced replay must NOT overwrite the version's lineage record with
-    // its zeroed stats (POSIX rename overwrites; append is skipped on fence)
+    // the fenced replay commits nothing, so the version's record keeps the
+    // stats its commit stored, not the replay's zeroed ones
     val lin = Lineage.read(spark, root)
       .filter(col("version") === s1.committedVersion).collect()
     assert(lin.length === 1)
     assert(lin(0).getAs[Long]("eventsIn") === s1.eventsIn)
     assert(!lin(0).getAs[Boolean]("skippedFenced"))
+  }
+
+  test("a batch whose driver died after the commit keeps its lineage record") {
+    val root = SparkTestBase.tmpDir("cdc-crash-window")
+    val p = new CdcPipeline(LakeTable(root)(spark), "app-crash")
+    p.bootstrap(numBuckets = 8)
+    // the merge commits, then the driver dies before applyBatch returns;
+    // the restarted batch is fenced
+    val committed = graft.cdc.Merge(p.table, events, "app-crash", 0)
+    assert(p.applyBatch(events, batchId = 0).skippedFenced)
+    val lin = Lineage.read(spark, root)
+      .filter(col("version") === committed.committedVersion).collect()
+    assert(lin.length === 1)
+    assert(lin(0).getAs[Long]("eventsIn") === events.count())
+    assert(lin(0).getAs[Long]("eventsIn") === committed.eventsIn &&
+      lin(0).getAs[Long]("bytesWritten") === committed.bytesWritten)
+    // the record is the commit: no per-batch lineage file is written
+    p.replay(events, numBatches = 2, startBatchId = 1)
+    p.awaitMaintenance()
+    assert(Lineage.read(spark, root).count() === 3)
+    assert(!new java.io.File(s"$root/lineage").exists())
   }
 
   test("re-applying an arbitrary suffix of batches is idempotent (exactly-once)") {
@@ -867,37 +888,57 @@ class CdcPipelineSpec extends SparkSuite {
   }
 
   test("lineage roll-up bounds lineage/ to O(keepRecent) files and loses nothing") {
-    import graft.cdc.{Lineage, MergeStats}
-    val t = LakeTable(SparkTestBase.tmpDir("cdc-linroll"))(spark)
-    def stats(v: Long) = MergeStats(v, v, v * 10, v * 9, v, 2, 1, v * 9, v * 100,
-      v, v + 5, schemaEvolved = false, skippedFenced = false, 42L,
-      sourceOffsets = Map("src" -> v))
-    (1L to 30L).foreach(v => Lineage.append(t, stats(v)))
-    def dirFiles() = new java.io.File(t.root + "/lineage").listFiles().map(_.getName).toSeq
-    assert(dirFiles().count(_.endsWith(".json")) === 30)
-    // fold all but the newest 5 into one parquet segment
-    assert(Lineage.compact(spark, t.root, keepRecent = 5) === 25)
-    assert(dirFiles().count(_.endsWith(".json")) === 5)
-    assert(dirFiles().count(n => n.startsWith("segment-") && n.endsWith(".parquet")) === 1)
-    val r1 = Lineage.read(spark, t.root)
-    assert(r1.count() === 30)
-    assert(r1.agg(sum("eventsIn")).collect()(0).getLong(0) === (1L to 30L).map(_ * 10).sum)
-    // offsets maps survive the parquet round-trip
-    assert(r1.filter(col("version") === 7L)
-      .select(element_at(col("sourceOffsets"), "src")).collect()(0).getLong(0) === 7L)
-    // a second roll-up folds the NEW tail plus the previous segment — the
-    // directory stays O(keepRecent)+1 forever, not O(history)
-    (31L to 40L).foreach(v => Lineage.append(t, stats(v)))
-    assert(Lineage.compact(spark, t.root, keepRecent = 5) === 11) // 10 jsons + 1 segment
-    assert(dirFiles().count(_.endsWith(".json")) === 5)
-    assert(dirFiles().count(n => n.startsWith("segment-")) === 1)
-    assert(Lineage.read(spark, t.root).count() === 40)
-    // crash/replay safety: a fenced replay re-reporting an already-folded
-    // commit recreates its JSON — read() dedups by version
-    Lineage.append(t, stats(7L))
-    assert(Lineage.read(spark, t.root).count() === 40)
-    // below-threshold call is a no-op
-    assert(Lineage.compact(spark, t.root, keepRecent = 64) === 0)
+    import graft.lake.Epoch
+    val root = SparkTestBase.tmpDir("cdc-linroll")
+    val t = LakeTable(root)(spark)
+    t.create(CdcModel.targetSchema, 4, "roll", CdcModel.KeyCols)
+    // metadata-only merge commits v1..vN with distinguishable stats, and a
+    // commit without an epoch (as compaction makes) after every fifth
+    def commit(b: Long): Unit = {
+      t.replaceFiles(t.currentSnapshot.get, Set.empty, Nil, None,
+        Some(Epoch("roll", b, b + 5, Map("src" -> b), eventsIn = b * 10, distinctKeys = b * 9,
+          lwwConflicts = b, minLsn = b)))
+      if (b % 5 == 0) t.replaceFiles(t.currentSnapshot.get, Set.empty, Nil, None, None)
+    }
+    def ageMeta(): Unit = t.fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/meta"))
+      .foreach(st => t.fs.setTimes(st.getPath, System.currentTimeMillis() - 3600000L, -1))
+    def segments() = Option(new java.io.File(s"$root/lineage").listFiles()).toSeq.flatten
+      .map(_.getName).filter(n => n.startsWith("segment-") && n.endsWith(".parquet"))
+    def check(batches: Long): Unit = {
+      val r = Lineage.read(spark, root)
+      assert(r.count() === batches)
+      assert(r.select("version").distinct().count() === batches)
+      assert(r.agg(sum("eventsIn")).collect()(0).getLong(0) === (1L to batches).map(_ * 10).sum)
+      assert(r.filter(col("batchId") === 7L)
+        .select(element_at(col("sourceOffsets"), "src"), col("skippedFenced")).collect()
+        .map(x => (x.getLong(0), x.getBoolean(1))).toSeq === Seq((7L, false)))
+    }
+    (1L to 30L).foreach(commit)
+    ageMeta()
+    t.vacuum(graceMs = 60000L, retainSnapshots = 5)
+    assert(t.versions.size === 5 && segments().size === 1)
+    check(30)
+    // a second vacuum folds the next expired records with the segment: one
+    // segment however long the history
+    (31L to 40L).foreach(commit)
+    ageMeta()
+    val merge = t.versions.find(v => t.describe(v).summary.isDefined).get
+    val expiring = new java.io.File(s"$root/meta/snapshot-$merge.json")
+    val kept = java.nio.file.Files.readAllBytes(expiring.toPath)
+    t.vacuum(graceMs = 60000L, retainSnapshots = 5)
+    assert(!expiring.exists() && segments().size === 1)
+    check(40)
+    // a vacuum that stopped after publishing its segment leaves a record the
+    // segment also holds: it reads once
+    java.nio.file.Files.write(expiring.toPath, kept)
+    check(40)
+    // a per-commit JSON file of a table written before summaries still reads
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/lineage/v1000.json"),
+      ("""{"batchId":41,"version":1000,"eventsIn":410,"distinctKeys":1,"lwwConflicts":0,""" +
+        """"bucketsTouched":1,"filesRewritten":0,"rowsWritten":1,"bytesWritten":9,"minLsn":1,""" +
+        """"maxLsn":2,"schemaEvolved":false,"skippedFenced":false,"durationMs":3,""" +
+        """"sourceOffsets":{"src":41}}""" + "\n").getBytes)
+    check(41)
   }
 
   test("in-stream retention vacuum bounds meta/ and data/ without changing state") {
@@ -912,6 +953,8 @@ class CdcPipelineSpec extends SparkSuite {
     val split = lo + (hi - lo) * 4 / 5
     p0.replay(events.filter(col("lsn") <= split), numBatches = 8)
     assert(table.versions.size === 9, "bootstrap + 8 batch commits")
+    def eventsIn() = Lineage.read(spark, root).select("version", "eventsIn").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dataBefore = new java.io.File(s"$root/data").listFiles()
       .count(_.getName.endsWith(".parquet"))
     // age everything on disk past the grace window, as wall-clock would
@@ -925,7 +968,8 @@ class CdcPipelineSpec extends SparkSuite {
     // fresh batch's own files
     val p1 = new CdcPipeline(table, "app-retain", retainSnapshots = 2,
       vacuumEveryBatches = 1, vacuumGraceMs = 60000L)
-    p1.replay(events.filter(col("lsn") > split), numBatches = 1, startBatchId = 8)
+    val recorded = eventsIn()
+    val Seq(last) = p1.replay(events.filter(col("lsn") > split), numBatches = 1, startBatchId = 8)
     p1.awaitMaintenance()
     assert(table.versions === Seq(8L, 9L),
       s"expired versions must be gone, got ${table.versions}")
@@ -934,6 +978,8 @@ class CdcPipelineSpec extends SparkSuite {
       .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
     assert(dataAfter === live, "data/ must hold exactly the retained snapshots' files")
     assert(dataAfter.size < dataBefore, "superseded CoW generations must be collected")
+    // the expired records' summaries were folded into lineage/, not lost
+    assert(eventsIn() === recorded + (last.committedVersion -> last.eventsIn) && recorded.size === 8)
     // the surviving state is still exactly the LWW fold of the whole stream
     assert(digest(finalState(p1)).sameElements(digest(oracle(events))))
   }

@@ -37,7 +37,7 @@ class LakeSourceSpec extends SparkSuite {
   test("readStream over a table delivers the feed: initial state, then deltas only") {
     val root = SparkTestBase.tmpDir("lsrc")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 8)
     src.applyBatch(events.filter(col("lsn") < splitLsn), 0L, orderedDelivery = true)
     val v1 = src.table.latestVersion
@@ -63,7 +63,7 @@ class LakeSourceSpec extends SparkSuite {
 
   test("short name 'graft-table' resolves through DataSourceRegister") {
     val root = SparkTestBase.tmpDir("lsrc-short")
-    val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app", lineage = false)
+    val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app")
     src.bootstrap(numBuckets = 4)
     src.applyBatch(events.filter(col("lsn") < splitLsn), 0L, orderedDelivery = true)
     val q = spark.readStream.format("graft-table").option("path", root).load()
@@ -80,7 +80,7 @@ class LakeSourceSpec extends SparkSuite {
   test("stateful downstream aggregation over the stream (complete mode)") {
     val root = SparkTestBase.tmpDir("lsrc-agg")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 8)
     src.replay(events, numBatches = 3)
     val q = spark.readStream.format(classOf[LakeSourceProvider].getName)
@@ -100,7 +100,7 @@ class LakeSourceSpec extends SparkSuite {
   test("maxVersionsPerBatch bounds every micro-batch of a catch-up, delivering exactly once") {
     val root = SparkTestBase.tmpDir("lsrc-rate")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 8)
     src.replay(events, numBatches = 5) // versions 0 (bootstrap) .. 5
     val latest = src.table.latestVersion
@@ -131,7 +131,7 @@ class LakeSourceSpec extends SparkSuite {
   test("startingVersion skips history: a fresh stream delivers only (N, latest]") {
     val root = SparkTestBase.tmpDir("lsrc-sv")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 8)
     src.replay(events, numBatches = 5) // versions 0 (bootstrap) .. 5
     val latest = src.table.latestVersion
@@ -160,7 +160,7 @@ class LakeSourceSpec extends SparkSuite {
     val root = SparkTestBase.tmpDir("lsrc-anchor")
     val meta = SparkTestBase.tmpDir("lsrc-anchor-meta")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 4)
     src.replay(events, numBatches = 5) // latest = 5
     def offerOf(s: LakeSource): Long =
@@ -181,7 +181,7 @@ class LakeSourceSpec extends SparkSuite {
   test("startingVersion above the current latest never leaks versions <= N") {
     val root = SparkTestBase.tmpDir("lsrc-future")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 4)
     src.replay(events, numBatches = 2) // latest = 2
     val q = spark.readStream.format("graft-table").option("path", root)
@@ -205,7 +205,7 @@ class LakeSourceSpec extends SparkSuite {
   test("startingVersion=latest follows from now: only commits after stream start arrive") {
     val root = SparkTestBase.tmpDir("lsrc-svl")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 8)
     src.applyBatch(events.filter(col("lsn") < splitLsn), 0L, orderedDelivery = true)
     val v1 = src.table.latestVersion
@@ -229,7 +229,7 @@ class LakeSourceSpec extends SparkSuite {
     val root = SparkTestBase.tmpDir("lsrc-hwm")
     val metaPath = SparkTestBase.tmpDir("lsrc-hwm-meta")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 4)
     src.replay(events, numBatches = 5) // latest = 5
     def offerOf(s: LakeSource): Long =
@@ -257,7 +257,7 @@ class LakeSourceSpec extends SparkSuite {
     val out = SparkTestBase.tmpDir("lsrc-out")
     val ckpt = SparkTestBase.tmpDir("lsrc-rckpt")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 8)
     src.applyBatch(events.filter(col("lsn") < splitLsn), 0L, orderedDelivery = true)
     def start() = spark.readStream.format(classOf[LakeSourceProvider].getName)
@@ -278,7 +278,7 @@ class LakeSourceSpec extends SparkSuite {
 
   test("recovery no-op getBatch(start == end) is empty with the pinned schema, no IO") {
     val root = SparkTestBase.tmpDir("lsrc-noop")
-    val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app", lineage = false)
+    val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app")
     src.bootstrap(numBuckets = 4)
     src.applyBatch(events.filter(col("lsn") < splitLsn), 0L, orderedDelivery = true)
     val source = new LakeSource(spark, root)
@@ -290,7 +290,7 @@ class LakeSourceSpec extends SparkSuite {
 
   test("CLI tail on a table with no data commits drains zero rows without crashing") {
     val root = SparkTestBase.tmpDir("lsrc-cli")
-    val p = new CdcPipeline(LakeTable(root)(spark), "lsrc-app", lineage = false)
+    val p = new CdcPipeline(LakeTable(root)(spark), "lsrc-app")
     p.bootstrap(numBuckets = 4) // exists, but nothing ever committed
     val outBuf = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(outBuf, true, "UTF-8")) {
@@ -306,7 +306,7 @@ class LakeSourceSpec extends SparkSuite {
     val out = SparkTestBase.tmpDir("lsrc-climax-out")
     val ckpt = SparkTestBase.tmpDir("lsrc-climax-ckpt")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 4)
     src.replay(events, numBatches = 2) // versions 0 (bootstrap) .. 2
     def run(): Unit = Main.run(spark, List("tail", root, out, ckpt, "max=1"))
@@ -323,7 +323,7 @@ class LakeSourceSpec extends SparkSuite {
   test("a column added mid-stream stays invisible until restart (pinned schema)") {
     val root = SparkTestBase.tmpDir("lsrc-evo")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 4)
     src.applyBatch(events.filter(col("lsn") < splitLsn), 0L, orderedDelivery = true)
     val q = spark.readStream.format(classOf[LakeSourceProvider].getName)
@@ -355,7 +355,7 @@ class LakeSourceSpec extends SparkSuite {
   test("a vacuumed-away offset fails the stream loudly instead of resyncing") {
     val root = SparkTestBase.tmpDir("lsrc-vac")
     val src = new CdcPipeline(LakeTable(root)(spark), "lsrc-app",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     src.bootstrap(numBuckets = 8)
     src.replay(events, numBatches = 4)
     val latest = src.table.latestVersion

@@ -170,7 +170,7 @@ class LakeTableSpec extends SparkSuite {
     import graft.model.CdcModel
     val root = SparkTestBase.tmpDir("lake-rbk-mor")
     val p = new CdcPipeline(LakeTable(root)(spark), "rbk",
-      lineage = false, mergeOnRead = true)
+      mergeOnRead = true)
     p.bootstrap(numBuckets = 4)
     def toDF(rows: Seq[(Long, String, String, String, String, String, String, java.sql.Timestamp)]) =
       rows.toDF("lsn", "op", "repo", "path", "commit", "lang", "content", "eventTime")

@@ -28,7 +28,7 @@ class PlanSpec extends SparkSuite {
 
   test("lake table reads push filters down too (manifest-schema parquet scan)") {
     val root = SparkTestBase.tmpDir("plan-lake")
-    val p = new CdcPipeline(LakeTable(root)(spark), "plan", lineage = false)
+    val p = new CdcPipeline(LakeTable(root)(spark), "plan")
     p.bootstrap(numBuckets = 4)
     p.applyBatch(DerivedEvents.fromDocuments(
       spark.read.parquet(s"$sfDir/documents.parquet")), 0)
@@ -62,7 +62,7 @@ class PlanSpec extends SparkSuite {
 
   test("MERGE plan: exactly one exchange (single shuffle), no cartesian") {
     val root = SparkTestBase.tmpDir("plan-merge")
-    val p = new CdcPipeline(LakeTable(root)(spark), "plan2", lineage = false)
+    val p = new CdcPipeline(LakeTable(root)(spark), "plan2")
     p.bootstrap(numBuckets = 8)
     val ev = DerivedEvents.fromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
     p.applyBatch(ev, 0)
@@ -110,7 +110,7 @@ class PlanSpec extends SparkSuite {
     try {
       val root = SparkTestBase.tmpDir("plan-mor-real")
       val p = new CdcPipeline(LakeTable(root)(spark), "planmor",
-        lineage = false, mergeOnRead = true, compactEveryFiles = 0)
+        mergeOnRead = true, compactEveryFiles = 0)
       p.bootstrap(numBuckets = 8)
       val ev = DerivedEvents.fromDocuments(
         spark.read.parquet(s"$sfDir/documents.parquet"))
@@ -207,7 +207,7 @@ class PlanSpec extends SparkSuite {
       val ev = graft.model.SyntheticEvents.generate(spark, 400)
       val (lower, upper) = (ev.filter(col("lsn") < 200), ev.filter(col("lsn") >= 200))
       val cow = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-jobs-cow"))(spark),
-        "jobs-cow", lineage = false)
+        "jobs-cow")
       cow.bootstrap(numBuckets = 8)
       assert(prepasses(cow.applyBatch(lower, 0L)) === 0,
         "a batch into an empty target runs no action besides its write")
@@ -216,7 +216,7 @@ class PlanSpec extends SparkSuite {
       assert(prepasses(cow.applyBatch(upper.filter(lit(false)), 5L)) === 0,
         "an empty copy-on-write batch is detected after its write job")
       val mor = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-jobs-mor"))(spark),
-        "jobs-mor", lineage = false, mergeOnRead = true, compactEveryFiles = 0)
+        "jobs-mor", mergeOnRead = true, compactEveryFiles = 0)
       mor.bootstrap(numBuckets = 8)
       mor.applyBatch(lower, 0L)
       assert(prepasses(mor.applyBatch(upper, 1L)) === 0,
@@ -230,7 +230,7 @@ class PlanSpec extends SparkSuite {
       val ev = graft.model.SyntheticEvents.generate(spark, 600)
       for (mor <- Seq(false, true)) {
         val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir(s"plan-replay-jobs-$mor"))(spark),
-          s"replay-jobs-$mor", lineage = false, mergeOnRead = mor, compactEveryFiles = 0)
+          s"replay-jobs-$mor", mergeOnRead = mor, compactEveryFiles = 0)
         p.bootstrap(numBuckets = 8)
         assert(executions(p.replay(ev.filter(col("lsn") < 200), 1)) === 1,
           s"mergeOnRead=$mor: a one-slice replay into an empty table")
@@ -254,7 +254,7 @@ class PlanSpec extends SparkSuite {
     def batch(i: Int) = spark.read.schema(schema).parquet(s"$dir/b=$i")
     for (mor <- Seq(true, false)) {
       val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir(s"plan-codegen-$mor"))(spark),
-        s"codegen-$mor", lineage = false, mergeOnRead = mor, compactEveryFiles = 0)
+        s"codegen-$mor", mergeOnRead = mor, compactEveryFiles = 0)
       p.bootstrap(numBuckets = 8)
       // batch 0 meets an empty table with no watermark; batch 1 is the
       // warm-up, the first with a watermark guard and a populated target
@@ -284,7 +284,7 @@ class PlanSpec extends SparkSuite {
       val numBuckets = 32
       val ev = graft.model.SyntheticEvents.generate(spark, 2000)
       val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-cow-real"))(spark),
-        "plancow", lineage = false)
+        "plancow")
       p.bootstrap(numBuckets = numBuckets)
       p.applyBatch(ev.filter(col("lsn") < 1990), 0L)
       val parent = p.table.currentSnapshot.get
@@ -331,7 +331,7 @@ class PlanSpec extends SparkSuite {
     // is the read path under every gate query, db-terminal and transform,
     // and a full-table shuffle here was the dominant 100-TB read cost
     val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-genaware-cow"))(spark),
-      "plangen", lineage = false)
+      "plangen")
     p.bootstrap(numBuckets = 4)
     p.applyBatch(ev, 0)
     assert(p.table.currentSnapshot.get.files.groupBy(_.bucket).values.forall(_.size == 1))
@@ -342,7 +342,7 @@ class PlanSpec extends SparkSuite {
 
     // fragmented MOR: the window appears (scoped to the multi-file buckets)…
     val p2 = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-genaware-mor"))(spark),
-      "plangen2", lineage = false, mergeOnRead = true, compactEveryFiles = 0)
+      "plangen2", mergeOnRead = true, compactEveryFiles = 0)
     p2.bootstrap(numBuckets = 4)
     p2.applyBatch(ev, 0)
     p2.applyBatch(ev.withColumn("lsn", col("lsn") + 1000000L), 1)
@@ -360,7 +360,7 @@ class PlanSpec extends SparkSuite {
   test("point lookup plans a pushed-down single-bucket scan; no shuffle off the fast path") {
     val ev = DerivedEvents.fromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
     val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-lookup"))(spark),
-      "planlk", lineage = false)
+      "planlk")
     p.bootstrap(numBuckets = 4)
     p.applyBatch(ev, 0) // CoW: every bucket single-file → lookup skips the window
     val key = p.state().orderBy("repo", "path", "commit").head()

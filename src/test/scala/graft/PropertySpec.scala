@@ -41,7 +41,7 @@ class PropertySpec extends SparkSuite {
 
   private def replayDigest(events: Seq[Ev], batches: Int): Seq[Row] = {
     val root = SparkTestBase.tmpDir("prop-cdc")
-    val p = new CdcPipeline(LakeTable(root)(spark), s"prop-$batches", lineage = false)
+    val p = new CdcPipeline(LakeTable(root)(spark), s"prop-$batches")
     p.bootstrap(numBuckets = 8)
     if (events.nonEmpty) p.replay(events.toDF(), batches)
     digestOf(p.state())
