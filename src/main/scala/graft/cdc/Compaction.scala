@@ -117,18 +117,17 @@ object Compaction {
         .sortBy(b => (-filesPerBucket.get(b).map(_.size).getOrElse(0), b))
         .take(maxBucketsPerRun).toSet
 
-    // fold merge-on-read generations through the SAME total order reads use
-    // ([[CdcModel.lwwResolve]] — one definition, so a tie-break change can
-    // never diverge the two), then drop tombstones behind the horizon
+    // fold merge-on-read generations through the engine's one LWW ranking
+    // ([[CdcModel.lwwRank]]), then drop tombstones behind the horizon. The
+    // ranking's exchange on `_bucket` is also the writer's clustering, so
+    // the rewrite shuffles once.
     val raw = stored.where(col(LakeTable.BucketCol).isin(buckets.toSeq: _*))
     val resolved = CdcModel.lwwResolve(raw, keyCols)
     val del =
       if (resolved.columns.contains(CdcModel.DeletedCol))
         coalesce(col(CdcModel.DeletedCol), lit(false))
       else lit(false)
-    val kept = resolved
-      .filter(!(del && col(CdcModel.RowLsnCol) <= horizonLsn))
-      .repartition(col(LakeTable.BucketCol))
+    val kept = resolved.filter(!(del && col(CdcModel.RowLsnCol) <= horizonLsn))
     val added = table.writeDataFiles(kept)
     val removed = snap.files.filter(f => buckets.contains(f.bucket)).map(_.path).toSet
 

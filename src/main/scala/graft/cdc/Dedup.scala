@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.lake.LakeTable
 import graft.model.CdcModel
 
 /** Per-key change-event deduplication + last-writer-wins resolution.
@@ -11,30 +12,32 @@ import graft.model.CdcModel
   * "last load wins" of /root/reference/dialect.go:26-29,37-40,48-50) and the
   * ModifiedOnly lookback dedup (/root/reference/database.go:179-187) into an
   * explicit LWW reduction: one surviving event per (repo, path, commit),
-  * chosen by the total order [[graft.model.CdcModel.orderKey]]
-  * (lsn, op-rank, content) so LSN collisions resolve deterministically.
-  *
-  * Implementation note (scale): `groupBy(key).agg(max_by(...))` instead of a
-  * window + row_number — max_by does map-side partial aggregation, so a batch
-  * with heavy per-key duplication (retransmits, hot files) shrinks *before*
-  * the shuffle; a window would shuffle and sort every duplicate. At 10^10
-  * events this is the difference between shuffling the dedup survivors
-  * (~#keys) and shuffling the whole stream.
+  * picked by the engine's one LWW ranking [[graft.model.CdcModel.lwwRank]]
+  * (LSN, delete-wins, content), so LSN collisions resolve deterministically
+  * and exactly as MERGE resolves them.
   */
 object Dedup {
 
   /** One winning event per key. Input: event-schema DataFrame (possibly with
-    * extra payload columns — all non-key, non-lsn, non-op columns ride along
-    * inside the max_by struct). Output: same schema, ≤1 row per key.
+    * extra payload columns, which ride along). Output: the key columns, then
+    * every other input column, ≤1 row per key.
+    *
+    * The events take the stored shape the ranking reads (`_lsn` = lsn,
+    * `_deleted` = op is 'D', and a key hash as the cluster column); the
+    * tie-break sees their persisted view, which leaves out
+    * [[CdcModel.MetaCols]] as MERGE's stored schema does — so an I-versus-U
+    * tie does not depend on the op, and a stored row re-enters the order
+    * exactly as the event that produced it.
     */
   def lastWriterWins(events: DataFrame): DataFrame = {
     val keyCols = CdcModel.KeyCols
-    val payloadCols = events.columns.filterNot(keyCols.contains).toSeq
-    val winner = max_by(struct(payloadCols.map(col): _*), CdcModel.orderKey(events))
-    events
-      .groupBy(keyCols.map(col): _*)
-      .agg(winner.as("_w"))
-      .select(keyCols.map(col) ++ payloadCols.map(c => col(s"_w.$c").as(c)): _*)
+    val stored = events
+      .withColumn(LakeTable.BucketCol, hash(keyCols.map(col): _*))
+      .withColumn(CdcModel.RowLsnCol, col(CdcModel.LsnCol))
+      .withColumn(CdcModel.DeletedCol, col(CdcModel.OpCol) === "D")
+    CdcModel.lwwResolve(stored, keyCols,
+        tieCols = Some(events.columns.filterNot(CdcModel.MetaCols).toSeq))
+      .select((keyCols ++ events.columns.filterNot(keyCols.contains)).map(col): _*)
   }
 
   /** Drop events at or below the already-applied LSN watermark (a replayed

@@ -23,7 +23,7 @@ import graft.model.CdcModel
   *    change set); on copy-on-write it is a superset (rewritten buckets
   *    re-deliver old rows), which last-writer-wins at the target makes
   *    harmless: re-applying any stored row is a no-op by construction
-  *    ([[CdcModel.orderKey]] is op-insensitive).
+  *    ([[CdcModel.lwwRank]] is op-insensitive).
   *  - **Durable offsets**: the applied version is recorded as a
   *    create-exclusive `offset-<v>.json` marker AFTER the target commit;
   *    resume = max marker. A crash between commit and marker re-presents the

@@ -53,9 +53,10 @@ object MergeStats {
   * commit.
   *
   * Physical plan (deliberate, for 10^10-event scale — ONE job per batch,
-  * the write, with ONE shuffle): union(target, batch) repartitioned by
-  * `_bucket` alone, then an explicit sort + row_number window picks each
-  * key's LWW winner and the writer emits one file per touched bucket.
+  * the write, with ONE shuffle): the engine's one LWW ranking
+  * ([[CdcModel.lwwRank]]) over union(target, batch) — one exchange on
+  * `_bucket`, a sort the window needs no second sort for — picks each key's
+  * winner, and the writer emits one file per touched bucket.
   *  - The target side is the snapshot's manifest-backed relation
   *    ([[LakeTable.scan]]), whose partition column is `_bucket`,
   *    left-semi-joined to the batch's distinct buckets. That join is a
@@ -65,10 +66,7 @@ object MergeStats {
   *    first. The broadcast side carries `_bucket >= 0`, a no-op (pmod is
   *    non-negative) that Catalyst needs to see a selective predicate, or it
   *    declines to prune. Merge-on-read and an empty table skip the target.
-  *  - Hash-partitioning on `_bucket` satisfies the window's clustered
-  *    distribution on (_bucket, keys) because the partitioning expressions
-  *    are a subset of the window keys, so Catalyst inserts no second shuffle,
-  *    and each task holds whole buckets. Deletes win and persist as
+  *  - Each task holds whole buckets. Deletes win and persist as
   *    tombstones (`_deleted=true`) so replayed or out-of-order pre-delete
   *    events can never resurrect a key ([[Compaction]] GCs them later).
   *  - Every batch statistic rides the same job on one `Observation`: events
@@ -100,8 +98,6 @@ object MergeStats {
   * re-applying any suffix of the stream is idempotent (SURVEY.md §2.9 T5).
   */
 object Merge {
-  private val OpRankCol = "_op_rank"
-  private val TieCol = "_tb"
   private val SrcCol = "_src" // 1 = from batch, 0 = carried from target
   private val ObservationTimeoutSec = 900L
 
@@ -166,7 +162,7 @@ object Merge {
       orderedDelivery: Boolean = false,
       mergeOnRead: Boolean = false,
       keyCols: Seq[String] = CdcModel.KeyCols,
-      metaCols: Set[String] = Set(CdcModel.LsnCol, CdcModel.OpCol, "eventTime")): MergeStats = {
+      metaCols: Set[String] = CdcModel.MetaCols): MergeStats = {
     val t0 = System.nanoTime()
     val spark = events.sparkSession
     val snap = table.currentSnapshot.getOrElse(
@@ -282,19 +278,14 @@ object Merge {
         broadcast(batchB.select(LakeTable.BucketCol).distinct()
           .filter(col(LakeTable.BucketCol) >= 0)),
         Seq(LakeTable.BucketCol), "left_semi")
-    val tieBreak = CdcModel.lwwTieBreak(evolvedSchema.fieldNames.toIndexedSeq)
-    // stored rows re-enter the LWW total order EXACTLY as the event that
-    // produced them would: (their _lsn, their tombstone flag, their content).
-    // This makes redelivery of ANY event subset a no-op — including a
-    // same-LSN losing event alone, which with a lower stored rank or an
-    // empty stored tie-break would wrongly overwrite the stored winner.
-    // Only _src distinguishes the sides pre-union; the LWW order columns
-    // (op rank, content tie-break) are DERIVED AFTER the shuffle from
-    // _deleted/content — materializing the tie-break before it would ship a
-    // second full copy of `content` (the widest column) through shuffle
-    // write+read and the external sort.
-    // both sides carry `_bucket` through the union: the target's is its
-    // file's partition value, the batch's the hash computed above
+    // stored rows re-enter the LWW order EXACTLY as the event that produced
+    // them would: (their _lsn, their tombstone flag, their content). This
+    // makes redelivery of ANY event subset a no-op — including a same-LSN
+    // losing event alone, which with a lower stored rank or an empty stored
+    // tie-break would wrongly overwrite the stored winner. Only _src
+    // distinguishes the sides; both carry `_bucket` through the union: the
+    // target's is its file's partition value, the batch's the hash computed
+    // above.
     val rowSchema = evolvedSchema.add(StructField(LakeTable.BucketCol, IntegerType, nullable = false))
     val target = SchemaEvolution.conform(targetRows, rowSchema)
       .withColumn(CdcModel.DeletedCol, coalesce(col(CdcModel.DeletedCol), lit(false)))
@@ -307,90 +298,40 @@ object Merge {
           rowSchema)
         .withColumn(SrcCol, lit(1L))
 
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Sub-bucket salting (skew): partitioning the merge shuffle on _bucket
-    // alone caps parallelism at the touched-bucket count and makes one hot
-    // bucket a single task. With salt S > 1 the shuffle key becomes
-    // (_bucket, khash mod S): a hot bucket spreads over S tasks while the
-    // per-key grouping the window needs is untouched (khash is a pure
-    // function of the keys that follow it in the partition spec). Cost: up
-    // to S files per touched bucket per batch instead of 1 — size S to the
-    // observed skew, not to the cluster (graft.merge.salt, default 1).
-    val KeyHash = "_khash"
-    val SaltCol = "_salt"
+    // --- the merge + write job: the LWW ranking ([[CdcModel.lwwRank]]) over
+    // the union, one shuffle on `_bucket`. Sub-bucket salting (skew):
+    // partitioning on _bucket alone caps parallelism at the touched-bucket
+    // count and makes one hot bucket a single task; with salt S > 1 a hot
+    // bucket spreads over S tasks. Cost: up to S files per touched bucket
+    // per batch instead of 1 — size S to the observed skew, not to the
+    // cluster (graft.merge.salt, default 1).
     val salt = spark.conf.getOption("graft.merge.salt").map(_.toInt).getOrElse(1)
-    // the salt is a PLAIN pre-projected column, not an inline expression: a
-    // computed expression in the window PARTITION spec gets extracted into a
-    // Project between window nodes, splitting the five window functions into
-    // five WindowExec passes (same CollapseWindow blocker as a computed
-    // window argument — both observed in the real executed plan). Cost: one
-    // int through the shuffle, salted mode only.
-    val shuffleKeys =
-      if (salt <= 1) Seq(col(LakeTable.BucketCol))
-      else Seq(col(LakeTable.BucketCol), col(SaltCol))
-    val unioned = target
-      .select(batchConformed.columns.map(col): _*) // align column order for union
-      .unionByName(batchConformed)
-      .withColumn(KeyHash, xxhash64(keys.map(col): _*))
-    val combined =
-      (if (salt <= 1) unioned
-       else unioned.withColumn(SaltCol, pmod(col(KeyHash), lit(salt))))
-      .repartition(shufflePartitions, shuffleKeys: _*)
-      // LWW order columns derived post-shuffle (see above): both sides'
-      // rank is exactly their tombstone flag, and the tie-break is their
-      // content — identical values to computing them per-side pre-union
-      .withColumn(OpRankCol, col(CdcModel.DeletedCol).cast("int"))
-      .withColumn(TieCol, tieBreak)
-
-    // --- the merge + write job. LWW winner per key via an explicit
-    // sort-within-partitions + row_number window: the sort we provide is
-    // exactly the window's required ordering, so WindowExec adds no extra
-    // sort or shuffle, and every other operator in the stage (scan, union,
-    // project, filter, parquet write) stays in whole-stage codegen. A
-    // max_by(struct) aggregation would instead run on
-    // ObjectHashAggregateExec — interpreted expression eval, measured ~100x
-    // more CPU per row. The same sorted pass also computes per-key
-    // "contains a batch row" (unbounded max over _src) for the summary. ---
-    // the 64-bit key hash leads the sort/partition keys: the external sort's
-    // row comparisons then resolve on (int, long) almost always, instead of
-    // comparing three string key columns byte-by-byte; grouping is unchanged
-    // because the hash is a pure function of the keys that follow it
-    // when salted, the salt expression must appear in the window partition
-    // keys: the shuffle's HashPartitioning(bucket, khash mod S) satisfies
-    // the window's clustered distribution only if both expressions are
-    // among the clustering keys — otherwise Catalyst inserts a SECOND
-    // shuffle (grouping semantics are unchanged: the salt is a pure
-    // function of khash, which already follows it)
-    val partCols =
-      (if (salt <= 1) Seq(col(LakeTable.BucketCol), col(KeyHash))
-       else Seq(col(LakeTable.BucketCol), col(SaltCol), col(KeyHash))) ++ keys.map(col)
-    val sortKeys = partCols ++ Seq(
-      col(CdcModel.RowLsnCol).desc, col(OpRankCol).desc, col(TieCol).desc)
-    val w = Window
-      .partitionBy(partCols: _*)
-      .orderBy(col(CdcModel.RowLsnCol).desc, col(OpRankCol).desc, col(TieCol).desc)
-    val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val (ranked, w) = CdcModel.lwwRank(
+      target.select(batchConformed.columns.map(col): _*) // align column order for union
+        .unionByName(batchConformed),
+      keys, Some(spark.conf.get("spark.sql.shuffle.partitions").toInt), salt)
     // ONE Observation for every batch statistic, in both modes (inside a
     // streaming foreachBatch only ONE of two CollectMetrics nodes on the
     // write job ever reports — a second Observation.get deadlocked the
     // micro-batch in the round-3 design). It sits between the window and the
     // winner filter, where every row of both sides passes: events in and
     // the LSN range over the batch rows; distinctKeys = the winners whose
-    // key group holds a batch row; and the buckets whose TARGET rows this
-    // job read — the files the commit removes (see the class doc for why
-    // not the buckets of the files written).
+    // key group holds a batch row (an unbounded max over _src on the
+    // ranking's own window, so it adds no pass); and the buckets whose
+    // TARGET rows this job read — the files the commit removes (see the
+    // class doc for why not the buckets of the files written).
     val obs = Observation(s"merge-$appId-$batchId-${snap.version}")
     val fromBatch = col(SrcCol) === 1L
-    val winners = combined
-      .sortWithinPartitions(sortKeys: _*)
-      .withColumn("_rn", row_number().over(w))
-      .withColumn("_hasBatch", max(col(SrcCol)).over(wAll))
+    val winner = col(CdcModel.RankCol) === 1
+    val winners = ranked
+      .withColumn("_hasBatch",
+        max(col(SrcCol)).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .observe(obs, sum(col(SrcCol)).as("n"),
         min(when(fromBatch, col(CdcModel.RowLsnCol))).as("mn"),
         max(when(fromBatch, col(CdcModel.RowLsnCol))).as("mx"),
-        sum(when(col("_rn") === 1, col("_hasBatch"))).as("distinctKeys"),
+        sum(when(winner, col("_hasBatch"))).as("distinctKeys"),
         collect_set(when(!fromBatch, col(LakeTable.BucketCol))).as("bucketsRead"))
-      .filter(col("_rn") === 1)
+      .filter(winner)
       .select((col(LakeTable.BucketCol) +: keys.map(col)) ++ payloadCols.map(col): _*)
 
     val added = table.writeDataFiles(winners)

@@ -266,15 +266,16 @@ object CdcPipeline {
   /** Re-merges [[CdcPipeline.applyBatch]] makes before a conflict propagates. */
   private val MaxReMerges = 5
 
-  /** Resolve LWW across file generations: one surviving row per key, ordered
-    * by (_lsn, _deleted, content) — deterministic under duplicate appends
-    * (a replayed event re-appended by a new batchId carries identical
-    * content, so either copy wins identically).
+  /** Resolve LWW across file generations: one surviving row per key, ranked
+    * by the engine's one LWW ranking ([[CdcModel.lwwRank]], clustered on
+    * `_bucket`) — deterministic under duplicate appends (a replayed event
+    * re-appended by a new batchId carries identical content, so either copy
+    * wins identically).
     *
     * GENERATION-AWARE (round 5): the manifest already knows files-per-bucket,
     * and a bucket with ≤1 file cannot hold cross-generation duplicates —
     * every writer that can co-locate two versions of a key in one file
-    * dedups it first (MERGE's LWW window per batch, [[Compaction]]'s fold),
+    * dedups it first (MERGE's ranking per batch, [[Compaction]]'s fold),
     * so multi-generation keys exist only where a bucket has ≥2 files. The
     * LWW window (a full shuffle + sort of everything it reads) therefore
     * runs ONLY over the multi-file buckets; single-file buckets stream
@@ -347,14 +348,14 @@ object CdcPipeline {
       s"not key columns of this table: ${extra.mkString(", ")} (key: ${keys.mkString(", ")})")
     val bucket = table.bucketOf(snap, keys, keyValues)
     val schema = snap.schema
-    val df = table.scan(snap).where(col(LakeTable.BucketCol) === bucket).drop(LakeTable.BucketCol)
+    val df = table.scan(snap).where(col(LakeTable.BucketCol) === bucket)
     val keyed = keys.foldLeft(df) { (d, k) =>
       d.filter(col(k) === lit(keyValues(k)).cast(schema(schema.fieldIndex(k)).dataType))
     }
     val multiGen = snap.files.count(_.bucket == bucket) > 1
     (bucket, liveStateOf(
-      if (!df.columns.contains(CdcModel.RowLsnCol) || !multiGen) keyed
-      else CdcModel.lwwResolve(keyed, keys)))
+      (if (!df.columns.contains(CdcModel.RowLsnCol) || !multiGen) keyed
+       else CdcModel.lwwResolve(keyed, keys)).drop(LakeTable.BucketCol)))
   }
 
   /** The key columns a snapshot's buckets hash: the RECORDED key (round-3+

@@ -530,10 +530,13 @@ final class LakeTable(val root: String, spark: SparkSession) {
 
   /** `df` bucketed on `keyCols` and hash-partitioned by bucket: the input
     * shape [[writeDataFiles]] expects, for writers with no shuffle of their
-    * own (full overwrite, rebucket). */
+    * own (full overwrite, rebucket of a table without `_lsn`). */
   private def bucketed(df: DataFrame, keyCols: Seq[String], numBuckets: Int): DataFrame =
-    withBucket(df, keyCols, numBuckets)
-      .repartition(math.min(numBuckets, spark.sparkContext.defaultParallelism * 2), col(BucketCol))
+    withBucket(df, keyCols, numBuckets).repartition(writeTasks(numBuckets), col(BucketCol))
+
+  /** Tasks of a full rewrite into `numBuckets` buckets. */
+  private def writeTasks(numBuckets: Int): Int =
+    math.min(numBuckets, spark.sparkContext.defaultParallelism * 2)
 
   /** Atomically publish a new snapshot whose parent must be `expectedParent`
     * (optimistic CAS); throws CommitConflictException when the slot is taken.
@@ -767,8 +770,8 @@ final class LakeTable(val root: String, spark: SparkSession) {
   /** Full rewrite into a new bucket count — the escape hatch for a table
     * whose numBuckets was sized wrong (it is otherwise fixed at create; see
     * [[graft.cdc.Merge]]'s sizing rule — a bucket should hold ~0.5-2 GB live).
-    * Merge-on-read generations are FOLDED through the canonical LWW order
-    * ([[graft.model.CdcModel.lwwResolve]] — the same fold compaction runs),
+    * Merge-on-read generations are FOLDED through the engine's one LWW
+    * ranking ([[graft.model.CdcModel.lwwRank]], as compaction folds them),
     * tombstones retained: the rewrite produces one single-GENERATION file
     * per bucket, which is the invariant the generation-aware read path
     * ([[graft.cdc.CdcPipeline]]) presumes of single-file buckets. Writing
@@ -784,11 +787,13 @@ final class LakeTable(val root: String, spark: SparkSession) {
     require(newNumBuckets > 0, "numBuckets must be positive")
     require(keyCols.nonEmpty, "rebucket needs the table's key columns")
     val parent = currentSnapshot.getOrElse(throw new IllegalStateException("create() first"))
-    val rows =
+    // bucket by the new layout first: the fold's exchange on `_bucket` is
+    // then also the writer's, so the rewrite shuffles once
+    val files = writeDataFiles(
       if (parent.schema.fieldNames.contains(graft.model.CdcModel.RowLsnCol))
-        graft.model.CdcModel.lwwResolve(read(), keyCols)
-      else read()
-    val files = writeDataFiles(bucketed(rows, keyCols, newNumBuckets))
+        graft.model.CdcModel.lwwResolve(withBucket(read(), keyCols, newNumBuckets), keyCols,
+          Some(writeTasks(newNumBuckets)))
+      else bucketed(read(), keyCols, newNumBuckets))
     val s = Snapshot(parent.version + 1, parent.version, parent.schemaJson,
       newNumBuckets, files, parent.appId, parent.batchId, parent.watermarkLsn,
       parent.sourceOffsets, keyCols)

@@ -2,7 +2,8 @@ package graft.model
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,6 +32,8 @@ object CdcModel {
   val KeyCols: Seq[String] = Seq("repo", "path", "commit")
   val LsnCol = "lsn"
   val OpCol = "op"
+  /** Event columns that are CDC bookkeeping, not stored payload. */
+  val MetaCols: Set[String] = Set(LsnCol, OpCol, "eventTime")
   /** Internal column persisted in the target table so replayed/late events
     * never regress a row: MERGE keeps the higher-LSN version (LWW across
     * batch ∪ table, not just within a batch). */
@@ -47,36 +50,86 @@ object CdcModel {
     * identical expression over any column order). Without the hash branch, a
     * no-`content` table whose extract carries duplicate primary keys at one
     * LSN would pick its winner by shuffle order — nondeterministic across
-    * runs, breaking replay determinism. Used by the MERGE write path, the
-    * generation-resolving read path and compaction alike. */
-  def lwwTieBreak(cols: Seq[String]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, xxhash64}
-    if (cols.contains("content"))
-      coalesce(col("content").cast(org.apache.spark.sql.types.StringType), lit(""))
-    else xxhash64(cols.filterNot(_.startsWith("_")).sorted.map(col): _*).cast(
-      org.apache.spark.sql.types.StringType)
-  }
+    * runs, breaking replay determinism. [[lwwRank]] is its one user. */
+  private def lwwTieBreak(cols: Seq[String]): Column =
+    if (cols.contains("content")) coalesce(col("content").cast(StringType), lit(""))
+    else xxhash64(cols.filterNot(_.startsWith("_")).sorted.map(col): _*).cast(StringType)
 
-  /** THE LWW resolution window: one surviving row per key by
-    * (`_lsn` desc, tombstone desc, [[lwwTieBreak]] desc) over a frame that
-    * holds whole buckets. The single definition of the cross-generation
-    * total order — the generation-resolving read path
-    * ([[graft.cdc.CdcPipeline]]), [[graft.cdc.Compaction]]'s fold, and
-    * [[graft.lake.LakeTable.rebucket]]'s fold all run THIS function, so
-    * reads and maintenance can never diverge on a tie-break. */
-  def lwwResolve(df: org.apache.spark.sql.DataFrame,
-      keys: Seq[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, row_number}
-    val tie = lwwTieBreak(df.columns.toIndexedSeq)
+  /** [[lwwRank]]'s working columns: key hash, salt, tombstone rank,
+    * tie-break and rank (1 = the key's winner). */
+  private val KeyHashCol = "_khash"
+  private val SaltCol = "_salt"
+  private val DelRankCol = "_op_rank"
+  private val TieCol = "_tb"
+  val RankCol = "_rn"
+
+  /** THE last-writer-wins ranking, the one definition of the order among a
+    * key's versions and of its physical form. Every path that picks winners
+    * runs it: MERGE ([[graft.cdc.Merge]]), the generation-aware read path
+    * and point lookups ([[graft.cdc.CdcPipeline]]), [[graft.cdc.Compaction]]'s
+    * fold, [[graft.lake.LakeTable.rebucket]]'s fold and
+    * [[graft.cdc.Dedup.lastWriterWins]], so no two of them can pick
+    * different winners.
+    *
+    * Order: `_lsn` desc, then tombstone desc (a delete wins an LSN tie),
+    * then [[lwwTieBreak]] over `tieCols` desc. `df` must carry `_lsn` and
+    * `_bucket` (the cluster column: keys hash into buckets, so a bucket
+    * holds every version of its keys); `_deleted` is optional, and null
+    * counts as live. The order is insensitive to I-versus-U (both are
+    * upserts): a stored row re-enters it as (its `_lsn`, its tombstone flag,
+    * its tie-break) and resolves exactly as the event that produced it,
+    * which makes partial redelivery of any subset of events — a same-LSN
+    * loser alone included — a no-op. An op-sensitive rank would need the op
+    * persisted per row (SURVEY.md §7.4#2).
+    *
+    * Shape: a key hash `_khash` (plus `_salt` = `_khash` mod `salt` when
+    * `salt` > 1, which splits a hot bucket over `salt` tasks) is computed,
+    * then ONE exchange hash-partitions the rows on `_bucket` [and `_salt`]
+    * into `numPartitions` (None: the session default, which adaptive
+    * execution may coalesce). The rank columns are derived after that
+    * exchange, so the tie-break never ships a second copy of `content`. A
+    * `sortWithinPartitions` led by (cluster, `_khash`, keys) — the hash makes
+    * the sort's comparisons resolve on two numbers almost always — is
+    * exactly the ordering `row_number` needs over a window partitioned by
+    * (cluster, `_khash`, keys), so the window adds no sort and, the exchange's
+    * columns being a subset of the window's, no second shuffle. (`_salt` is
+    * such a column only because it is a plain projected one inside the
+    * window's partition columns: a computed expression there would split the
+    * window into several passes, and a salt left out of them would cost a
+    * second shuffle.)
+    *
+    * Returns the rows with `_rn` (1 = the key's winner) and the window spec,
+    * so a caller can put per-key aggregates on the same pass. */
+  def lwwRank(df: DataFrame, keys: Seq[String], numPartitions: Option[Int],
+      salt: Int = 1, tieCols: Option[Seq[String]] = None): (DataFrame, WindowSpec) = {
+    val cluster =
+      if (salt <= 1) Seq(graft.lake.LakeTable.BucketCol)
+      else Seq(graft.lake.LakeTable.BucketCol, SaltCol)
+    val hashed = df.withColumn(KeyHashCol, xxhash64(keys.map(col): _*))
+    val salted =
+      if (salt <= 1) hashed else hashed.withColumn(SaltCol, pmod(col(KeyHashCol), lit(salt)))
+    val clustered = numPartitions match {
+      case Some(n) => salted.repartition(n, cluster.map(col): _*)
+      case None => salted.repartition(cluster.map(col): _*)
+    }
     val del =
       if (df.columns.contains(DeletedCol)) coalesce(col(DeletedCol), lit(false))
       else lit(false)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(RowLsnCol).desc, del.cast("int").desc, tie.desc)
-    df.withColumn("_gen_rn", row_number().over(w))
-      .filter(col("_gen_rn") === 1).drop("_gen_rn")
+    val ranked = clustered
+      .withColumn(DelRankCol, del.cast("int"))
+      .withColumn(TieCol, lwwTieBreak(tieCols.getOrElse(df.columns.toIndexedSeq)))
+    val partCols = (cluster :+ KeyHashCol).map(col) ++ keys.map(col)
+    val order = Seq(col(RowLsnCol).desc, col(DelRankCol).desc, col(TieCol).desc)
+    val w = Window.partitionBy(partCols: _*).orderBy(order: _*)
+    (ranked.sortWithinPartitions(partCols ++ order: _*).withColumn(RankCol, row_number().over(w)), w)
   }
+
+  /** [[lwwRank]]'s winners: one row per key, with `df`'s columns. */
+  def lwwResolve(df: DataFrame, keys: Seq[String], numPartitions: Option[Int] = None,
+      tieCols: Option[Seq[String]] = None): DataFrame =
+    lwwRank(df, keys, numPartitions, tieCols = tieCols)._1
+      .filter(col(RankCol) === 1)
+      .drop(KeyHashCol, DelRankCol, TieCol, RankCol)
 
   val eventSchema: StructType = StructType(Seq(
     StructField("lsn", LongType, nullable = false),
@@ -100,31 +153,6 @@ object CdcModel {
     StructField("content", StringType, nullable = true),
     StructField(RowLsnCol, LongType, nullable = false),
     StructField(DeletedCol, BooleanType, nullable = false)))
-
-  /** Total order among events sharing a key: LSN first, then delete-beats-
-    * write, then content bytes. The order is deliberately insensitive to
-    * I-vs-U (both are upserts): a stored row re-enters the order as
-    * (its _lsn, its _deleted, its content) and resolves *identically* to the
-    * original event that produced it — which makes partial redelivery of any
-    * subset of events (including a same-LSN loser alone) a no-op. An
-    * op-sensitive rank would need the op persisted per row; delete-vs-write
-    * is persisted as the tombstone flag. (SURVEY.md §7.4#2.)
-    */
-  def orderKey(df: DataFrame,
-      metaCols: Set[String] = Set(LsnCol, OpCol, "eventTime")): org.apache.spark.sql.Column = {
-    val delRank = when(col(OpCol) === "D", 1).otherwise(0)
-    // tie-break over the PERSISTED view of the event (exclude the CDC
-    // bookkeeping columns — the SAME default meta set the merge excludes
-    // from the stored schema, so on a content-less table this order and the
-    // merge's stored-row order can never diverge on a column like eventTime
-    // that only the event side carries) via the ONE shared lwwTieBreak
-    // definition: content tables break ties on content exactly as before;
-    // a content-less frame hashes its payload columns instead of failing
-    // analysis — and the tie stays op-insensitive, so a stored row
-    // re-enters the order identically to the event that produced it
-    val tb = lwwTieBreak(df.columns.toIndexedSeq.filterNot(metaCols.contains))
-    struct(col(LsnCol), delRank.as("del_rank"), tb.as("tb"))
-  }
 }
 
 /** Deterministic event-stream generators. Two flavors:

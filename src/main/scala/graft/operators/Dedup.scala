@@ -307,41 +307,6 @@ object DedupOps {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     simhashPairsOf(simhashSignaturesPortable(docs, idCol, textCol), maxDist)
 
-  /** Candidate pairs → duplicate CLUSTERS: connected components over the
-    * pair edges, labeling every member with the minimum doc id of its
-    * component (`cluster_id`) — the terminal step every near-dup operator
-    * above feeds: one canonical document (the min id, matching [[exact]]'s
-    * `keep_id` convention) survives per cluster, the rest are dropped.
-    *
-    * Algorithm: iterative min-label propagation over DataFrame joins — no
-    * GraphX, no RDDs. Each round does (1) a neighbor-min step (labels flow
-    * across edges) and (2) a pointer-jumping step (label := label of label),
-    * so label chains halve every round and convergence is O(log diameter)
-    * rounds, not O(diameter) — a 10⁶-long similarity chain resolves in ~20
-    * rounds. Each round is two shuffle joins on the id; edges are persisted
-    * once (2|pairs| rows), labels persist one generation at a time. The
-    * fixpoint test rides the same pass as the label computation (labels only
-    * ever decrease, so an unchanged monotone checksum ⇔ fixpoint — no
-    * row-diff join).
-    *
-    * Output: (id, cluster_id) for every doc appearing in ≥1 pair; docs with
-    * no candidate pair are their own cluster and are simply absent (join
-    * docs with "left" and coalesce to the doc's own id to materialize them).
-    *
-    * Cache lifetime: the returned labeling is backed by the FINAL
-    * generation's persisted RDD (that persistence is what truncates the
-    * per-round plan growth). It cannot be unpersisted here — the caller has
-    * not consumed it yet — and is released by Spark's ContextCleaner once
-    * the result is no longer referenced; a driver looping over many corpora
-    * should drop its reference between iterations.
-    */
-  /** The end-to-end dedup step: drop every document that belongs to a
-    * duplicate cluster but is not its canonical (min-id) member. Singleton
-    * documents (no candidate pair) pass through untouched — [[clusters]]
-    * only emits paired ids, so the left anti-join against the non-canonical
-    * member set is the whole operation: one broadcast-friendly join over
-    * the (small) duplicate-member list, no shuffle of the corpus by content.
-    */
   /** Benchmark decontamination — the training-corpus hygiene pass run
     * before every serious LLM training job: documents sharing ANY word
     * n-gram with an evaluation set are flagged, so benchmark text cannot
@@ -384,6 +349,13 @@ object DedupOps {
         .select(col(idCol)),
       Seq(idCol), "left_anti")
 
+  /** The end-to-end dedup step: drop every document that belongs to a
+    * duplicate cluster but is not its canonical (min-id) member. Singleton
+    * documents (no candidate pair) pass through untouched — [[clusters]]
+    * only emits paired ids, so the left anti-join against the non-canonical
+    * member set is the whole operation: one broadcast-friendly join over
+    * the (small) duplicate-member list, no shuffle of the corpus by content.
+    */
   def canonical(docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id"): DataFrame = {
     // cast the LONG cluster ids back to the caller's id type BEFORE the
@@ -397,6 +369,34 @@ object DedupOps {
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
+  /** Candidate pairs → duplicate CLUSTERS: connected components over the
+    * pair edges, labeling every member with the minimum doc id of its
+    * component (`cluster_id`) — the terminal step every near-dup operator
+    * above feeds: one canonical document (the min id, matching [[exact]]'s
+    * `keep_id` convention) survives per cluster, the rest are dropped.
+    *
+    * Algorithm: iterative min-label propagation over DataFrame joins — no
+    * GraphX, no RDDs. Each round does (1) a neighbor-min step (labels flow
+    * across edges) and (2) a pointer-jumping step (label := label of label),
+    * so label chains halve every round and convergence is O(log diameter)
+    * rounds, not O(diameter) — a 10⁶-long similarity chain resolves in ~20
+    * rounds. Each round is two shuffle joins on the id; edges are persisted
+    * once (2|pairs| rows), labels persist one generation at a time. The
+    * fixpoint test rides the same pass as the label computation (labels only
+    * ever decrease, so an unchanged monotone checksum ⇔ fixpoint — no
+    * row-diff join).
+    *
+    * Output: (id, cluster_id) for every doc appearing in ≥1 pair; docs with
+    * no candidate pair are their own cluster and are simply absent (join
+    * docs with "left" and coalesce to the doc's own id to materialize them).
+    *
+    * Cache lifetime: the returned labeling is backed by the FINAL
+    * generation's persisted RDD (that persistence is what truncates the
+    * per-round plan growth). It cannot be unpersisted here — the caller has
+    * not consumed it yet — and is released by Spark's ContextCleaner once
+    * the result is no longer referenced; a driver looping over many corpora
+    * should drop its reference between iterations.
+    */
   def clusters(pairs: DataFrame, aCol: String = "a", bCol: String = "b",
       maxIters: Int = 50): DataFrame = {
     // try_cast, not cast: under ANSI (the Spark 4 default) a plain cast

@@ -32,6 +32,29 @@ class LakeTableSpec extends SparkSuite {
     assert(t.currentSnapshot.get.appId === "w1")
   }
 
+  test("commit rejects a parent behind the head even when vacuum freed its child's slot") {
+    // the hard link alone would not: vacuum expired snapshot-1.json, so a
+    // writer holding its parent would link into that free slot and publish
+    // a record behind the head (this call, which reads its parent, would
+    // fail on the expired record instead) — the parent check refuses both
+    val t = LakeTable(SparkTestBase.tmpDir("lake-cas-vacuumed"))(spark)
+    t.create(schema, 4, "t")
+    (1 to 5).foreach(v =>
+      t.commit(Snapshot(v, v - 1, schema.json, 4, Nil, "t", v, -1, Map.empty), v - 1))
+    val old = System.currentTimeMillis() - 1000L
+    Seq("meta", "data").foreach { d =>
+      val dir = new org.apache.hadoop.fs.Path(s"${t.root}/$d")
+      if (t.fs.exists(dir)) t.fs.listStatus(dir).foreach(f => t.fs.setTimes(f.getPath, old, -1))
+    }
+    t.vacuum(graceMs = 0L, retainSnapshots = 2)
+    assert(t.versions === List(4L, 5L))
+    intercept[CommitConflictException] {
+      t.commit(Snapshot(1, 0, schema.json, 4, Nil, "stale", 1, -1, Map.empty), 0)
+    }
+    assert(t.versions === List(4L, 5L))
+    assert(t.currentSnapshot.get.appId === "t")
+  }
+
   test("replaceFiles re-applies a change to a newer snapshot only while it is still valid") {
     spark.conf.set("graft.manifest.bucketsPerGroup", "2")
     try {

@@ -380,6 +380,50 @@ class PlanSpec extends SparkSuite {
       s"point lookup must prune by a _bucket partition filter:\n$plan")
   }
 
+  /** The final executed plan of the lake write `body` runs that carries no
+    * merge Observation (a compaction or rebucket rewrite), captured the way
+    * the REAL merge write-job tests capture theirs. */
+  private def rewritePlan(body: => Any): String = {
+    val captured = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "writeDataFiles") captured.add(qe.executedPlan.toString)
+      def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener delivery is async — poll; a straggler merge plan carries
+      // the merge's CollectMetrics
+      var plan: Option[String] = None
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plan.isEmpty && System.nanoTime() < deadline) {
+        import scala.jdk.CollectionConverters._
+        plan = captured.asScala.find(!_.contains("CollectMetrics"))
+        if (plan.isEmpty) Thread.sleep(100)
+      }
+      plan.getOrElse(fail("no rewrite plan captured")).split("== Initial Plan ==")(0)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("REAL compaction and rebucket write jobs: the LWW fold's one exchange is also the writer's") {
+    val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-rewrite"))(spark),
+      "planrewrite", mergeOnRead = true, compactEveryFiles = 0)
+    p.bootstrap(numBuckets = 8)
+    p.replay(graft.model.SyntheticEvents.generate(spark, 4000), numBatches = 4)
+    assert(p.table.currentSnapshot.get.files.size === 32, "4 generations in each of 8 buckets")
+    val live = p.state().collect().toSet
+    val compaction = rewritePlan(graft.cdc.Compaction(p.table, -1L, maxFilesPerBucket = 1))
+    assert("Exchange hashpartitioning".r.findAllIn(compaction).size === 1,
+      s"compaction must shuffle once:\n$compaction")
+    val rebucket = rewritePlan(p.table.rebucket(4, graft.model.CdcModel.KeyCols))
+    assert("Exchange hashpartitioning".r.findAllIn(rebucket).size === 1,
+      s"rebucket must shuffle once:\n$rebucket")
+    assert(p.state().collect().toSet === live)
+  }
+
   test("dedup operators never build a cartesian product") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(100)
     val p1 = planOf(graft.operators.DedupOps.ngramJaccardPairs(docs, 3, 0.5))

@@ -6,14 +6,16 @@ import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.cdc.{CdcPipeline, SchemaEvolution}
+import graft.cdc.{CdcPipeline, Compaction, Dedup, SchemaEvolution}
 import graft.lake.LakeTable
+import graft.model.CdcModel
 
 /** Property tests from SURVEY.md §5: (a) replay from any batch split
   * reproduces an identical final digest (exactly-once), (b) event
-  * permutations preserve the LWW result, (c) schema evolution never loses
-  * columns. ScalaCheck generators sampled with fixed seeds (deterministic,
-  * no scalatestplus bridge needed); small workloads — the point is the
+  * permutations preserve the LWW result, (c) every path that picks LWW
+  * winners picks the same ones, (d) schema evolution never loses columns.
+  * ScalaCheck generators sampled with fixed seeds (deterministic, no
+  * scalatestplus bridge needed); small workloads — the point is the
   * invariant, not scale. */
 case class Ev(lsn: Long, op: String, repo: String, path: String,
     commit: String, lang: String, content: String,
@@ -96,6 +98,29 @@ class PropertySpec extends SparkSuite {
       val d1 = replayDigest(events, 2)
       val shuffled = new scala.util.Random(seed).shuffle(events)
       assert(replayDigest(shuffled, 2) === d1, s"seed=$seed")
+    }
+  }
+
+  test("property: every winner-picking path keeps the same live rows") {
+    (20 to 23).foreach { seed =>
+      val drawn = sample(Gen.listOfN(60, genEvent), seed)
+      // same-LSN, same-content twins that differ only in I-versus-U: a full
+      // tie of the order, which must not depend on the op
+      val twins = drawn.filter(_.op != "D").take(8)
+        .map(e => e.copy(op = if (e.op == "I") "U" else "I"))
+      val events = (drawn ++ twins).toDF()
+      val want = digestOf(Dedup.lastWriterWins(events).filter(col("op") =!= "D"))
+      val t = LakeTable(SparkTestBase.tmpDir("prop-lww"))(spark)
+      val p = new CdcPipeline(t, s"prop-lww-$seed", mergeOnRead = true, compactEveryFiles = 0)
+      p.bootstrap(numBuckets = 8)
+      p.replay(events, 3)
+      assert(t.currentSnapshot.get.files.groupBy(_.bucket).values.exists(_.size > 1),
+        s"seed=$seed: the replay must leave multi-generation buckets")
+      assert(digestOf(CdcPipeline.liveState(t)) === want, s"seed=$seed: merge-on-read replay")
+      Compaction(t, -1L, maxFilesPerBucket = 1)
+      assert(digestOf(CdcPipeline.liveState(t)) === want, s"seed=$seed: compaction")
+      t.rebucket(5, CdcModel.KeyCols)
+      assert(digestOf(CdcPipeline.liveState(t)) === want, s"seed=$seed: rebucket")
     }
   }
 
