@@ -346,16 +346,14 @@ object CdcPipeline {
     val extra = keyValues.keySet -- keys.toSet
     require(extra.isEmpty,
       s"not key columns of this table: ${extra.mkString(", ")} (key: ${keys.mkString(", ")})")
-    val bucket = table.bucketOf(snap, keys, keyValues)
-    val schema = snap.schema
-    val df = table.scan(snap).where(col(LakeTable.BucketCol) === bucket)
-    val keyed = keys.foldLeft(df) { (d, k) =>
-      d.filter(col(k) === lit(keyValues(k)).cast(schema(schema.fieldIndex(k)).dataType))
-    }
+    val (bucket, typed) = table.bucketAndKeys(snap, keys, keyValues)
+    // one filter: the bucket prune and equality on the key values it hashed
+    val keyed = table.scan(snap).where(keys.zip(typed).foldLeft(
+      col(LakeTable.BucketCol) === bucket) { case (p, (k, v)) => p && col(k) === v })
     val multiGen = snap.files.count(_.bucket == bucket) > 1
     (bucket, liveStateOf(
-      (if (!df.columns.contains(CdcModel.RowLsnCol) || !multiGen) keyed
-       else CdcModel.lwwResolve(keyed, keys)).drop(LakeTable.BucketCol)))
+      if (!multiGen || !keyed.columns.contains(CdcModel.RowLsnCol)) keyed
+      else CdcModel.lwwResolve(keyed, keys)))
   }
 
   /** The key columns a snapshot's buckets hash: the RECORDED key (round-3+
@@ -367,10 +365,9 @@ object CdcPipeline {
     if (snap.keyCols.nonEmpty) snap.keyCols.toSeq else CdcModel.KeyCols
 
   private def liveStateOf(df: DataFrame): DataFrame = {
-    val filtered =
-      if (df.columns.contains(CdcModel.DeletedCol))
-        df.filter(!coalesce(col(CdcModel.DeletedCol), lit(false))).drop(CdcModel.DeletedCol)
-      else df
-    filtered.drop(CdcModel.RowLsnCol)
+    val internal = Set(CdcModel.DeletedCol, CdcModel.RowLsnCol, LakeTable.BucketCol)
+    val live = if (!df.columns.contains(CdcModel.DeletedCol)) df
+      else df.where(!coalesce(col(CdcModel.DeletedCol), lit(false)))
+    live.select(df.columns.filterNot(internal).map(col): _*)
   }
 }

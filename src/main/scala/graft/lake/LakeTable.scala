@@ -8,14 +8,17 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
-import org.apache.spark.sql.{AnalysisException, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EqualNullSafe, EvalMode, Expression, Literal, Pmod, Predicate, XxHash64}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileFormatWriter, FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSparkInternals
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 import org.json4s._
@@ -146,8 +149,10 @@ class CommitConflictException(msg: String) extends RuntimeException(msg)
   * Metadata IO goes through the Hadoop `FileSystem` API resolved from
   * `root`'s scheme, so the same table code runs on local disk (`file://`,
   * tests), HDFS and HCFS object stores — the only places a 100 TB table can
-  * actually live. The one exception is the local commit CAS, which
-  * hard-links through `java.nio` because a local rename would replace a
+  * actually live. On local disk two writes bypass it through `java.nio`:
+  * metadata files are written directly, because Hadoop's local filesystem
+  * may fork a `chmod` per file it creates (see `LakeTable.writeMeta`),
+  * and the commit CAS hard-links, because a local rename would replace a
   * racing winner's record (see [[commit]]). Readers resolve the latest
   * snapshot by max N; writers commit with an expected-parent CAS. All data
   * paths in the manifest are relative to `<root>/data`.
@@ -441,15 +446,18 @@ final class LakeTable(val root: String, spark: SparkSession) {
   }
 
   /** The bucket a CONCRETE key hashes to under this snapshot's recorded
-    * layout — the reader-side inverse of [[LakeTable.bucketExpr]]. Evaluated
-    * by running the writer's OWN expression over a one-row local relation
-    * (each value first cast to its key column's recorded type), so reader
-    * and writer can never disagree on the hash — the same exact-types rule
-    * the merge's key-layout guard enforces on the write side. Point lookups
-    * use this to prune a keyed read to ONE bucket's files:
-    * O(table/numBuckets) IO instead of a full scan.
+    * layout — the reader-side inverse of [[LakeTable.bucketExpr]], computed
+    * with no query: `eval()` of the writer's OWN [[LakeTable.bucketHash]]
+    * over the key values cast to their columns' recorded types, the same
+    * exact-types rule the merge's key-layout guard enforces on the write
+    * side. Point lookups use it to prune a keyed read to ONE bucket's files.
     */
-  def bucketOf(s: Snapshot, keyCols: Seq[String], keyValues: Map[String, Any]): Int = {
+  def bucketOf(s: Snapshot, keyCols: Seq[String], keyValues: Map[String, Any]): Int =
+    bucketAndKeys(s, keyCols, keyValues)._1
+
+  /** [[bucketOf]] with the typed key literals it hashed, for a lookup's filter. */
+  private[graft] def bucketAndKeys(s: Snapshot, keyCols: Seq[String],
+      keyValues: Map[String, Any]): (Int, Seq[Column]) = {
     require(keyCols.nonEmpty, "bucketOf needs the table's key columns")
     val missing = keyCols.filterNot(keyValues.contains)
     require(missing.isEmpty,
@@ -465,44 +473,33 @@ final class LakeTable(val root: String, spark: SparkSession) {
         throw new IllegalArgumentException(
           s"key column $k is not in the snapshot schema (${schema.fieldNames.mkString(", ")})"))
     }.toMap
-    // resolve the INPUT value types first: this is also the guard that turns
-    // an unsupported value type into a diagnostic naming the key column —
-    // it must run before any other lit(keyValues(k)) call, which would
-    // throw Spark's raw 'Unsupported literal type' past the friendly path
-    val inType = keyCols.map { k =>
-      k -> (try org.apache.spark.sql.catalyst.expressions.Literal(keyValues(k)).dataType
-      catch { case e: RuntimeException => throw new IllegalArgumentException(
-        s"unsupported value type for key column $k: ${keyValues(k).getClass.getName}", e) })
-    }.toMap
-    // try_cast: null on a bad value under EVERY ansi mode (a plain cast
-    // throws a raw CAST_INVALID_INPUT under ansi=true and silently nulls
-    // under ansi=false — and xxhash64 SKIPS null children, so an unchecked
-    // null would hash to a wrong-but-plausible bucket: a silent miss)
-    val typed = keyCols.map(k => lit(keyValues(k)).try_cast(fieldOf(k).dataType).as(k))
-    // …and a cast that SUCCEEDS but changes the value (42.9 passed for a
-    // long key truncates to 42) would silently return ANOTHER key's row:
-    // require the typed value to round-trip back to the input, in the
-    // input's own type domain
-    val roundtrip = keyCols.map(k =>
-      (col(k).cast(inType(k)) <=> lit(keyValues(k))).as(s"_rt_$k"))
-    import spark.implicits._
-    // a true LocalRelation — NOT spark.range(1), which is a Range exec and
-    // would launch a real one-task job per lookup; this folds to a
-    // LocalTableScan evaluated driver-side
-    val row = Seq(1).toDF("one").select(typed: _*)
-      .select((keyCols.map(col) ++ roundtrip :+
-        bucketExpr(keyCols, s.numBuckets).as("_b")): _*)
-      .head()
-    keyCols.zipWithIndex.foreach { case (k, i) =>
-      require(!row.isNullAt(i),
-        s"value '${keyValues(k)}' for key column $k does not cast to its recorded " +
-        s"type (${fieldOf(k).dataType.simpleString}) — no stored row can match it")
-      require(row.getBoolean(keyCols.length + i),
-        s"value '${keyValues(k)}' for key column $k does not round-trip through its " +
-        s"recorded type (${fieldOf(k).dataType.simpleString}) — the cast is lossy, " +
-        "so the lookup would silently hit a DIFFERENT key")
+    // the table's session conf sets the casts' time zone and ansi mode
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    SQLConf.withExistingConf(spark.sessionState.conf) {
+      val typed = keyCols.map { k =>
+        val in = try Literal(keyValues(k)) catch { case e: RuntimeException =>
+          throw new IllegalArgumentException(
+            s"unsupported value type for key column $k: ${keyValues(k).getClass.getName}", e) }
+        val recorded = fieldOf(k).dataType
+        // try_cast: null on a bad value under EVERY ansi mode — xxhash64 SKIPS
+        // null children, so a null would hash to a wrong bucket: a silent miss
+        val cast = Cast(in, recorded, tz, EvalMode.TRY)
+        val v = if (cast.checkInputDataTypes().isSuccess) cast.eval() else null
+        require(v != null,
+          s"value '${keyValues(k)}' for key column $k does not cast to its recorded " +
+          s"type (${recorded.simpleString}) — no stored row can match it")
+        // …and a cast that SUCCEEDS but changes the value (42.9 passed for a
+        // long key truncates to 42) would silently return ANOTHER key's row:
+        // the typed value must round-trip to the input, in the input's type
+        val key = Literal(v, recorded)
+        require(EqualNullSafe(Cast(key, in.dataType, tz), in).eval() == true,
+          s"value '${keyValues(k)}' for key column $k does not round-trip through its " +
+          s"recorded type (${recorded.simpleString}) — the cast is lossy, " +
+          "so the lookup would silently hit a DIFFERENT key")
+        key
+      }
+      (bucketHash(typed, s.numBuckets).eval().asInstanceOf[Int], typed.map(GraftSparkInternals.column))
     }
-    row.getInt(2 * keyCols.length)
   }
 
   /** Write `df`'s rows as new immutable data files, one group per key bucket.
@@ -614,10 +611,10 @@ final class LakeTable(val root: String, spark: SparkSession) {
     writeString(fs, tmp,
       Snapshot.toJson(s.copy(files = Nil, manifests = refs, bucketsPerGroup = bpg)))
     try {
-      if (isLocalFs) {
+      if (isLocal(fs)) {
         // atomic-exclusive on posix: hard-link the temp file onto the slot
         try {
-          java.nio.file.Files.createLink(localNio(target), localNio(tmp))
+          java.nio.file.Files.createLink(localNio(fs, target), localNio(fs, tmp))
         } catch {
           case _: java.nio.file.FileAlreadyExistsException =>
             throw new CommitConflictException(s"snapshot ${s.version} already committed")
@@ -654,14 +651,6 @@ final class LakeTable(val root: String, spark: SparkSession) {
       fs.delete(tmp, false)
     }
   }
-
-  private def isLocalFs: Boolean = {
-    val scheme = fs.getUri.getScheme
-    scheme == null || scheme == "file"
-  }
-
-  private def localNio(p: HPath): java.nio.file.Path =
-    java.nio.file.Paths.get(p.toUri.getPath)
 
   /** Create the table with an initial (possibly empty) snapshot. */
   def create(schema: StructType, numBuckets: Int, appId: String,
@@ -1069,12 +1058,15 @@ object LakeTable {
   }
 
   /** Deterministic key bucket: non-negative xxhash64 of the key columns mod
-    * numBuckets. Both the table writer and the MERGE batch side compute it
-    * with the same expression, so bucket-equality joins never shuffle the big
-    * side by anything other than this.
-    */
-  def bucketExpr(keyCols: Seq[String], numBuckets: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast("int")
+    * numBuckets, as an int: THE one definition, for the writer, the MERGE
+    * batch side ([[bucketExpr]]) and [[LakeTable.bucketOf]]'s `eval()` (hence
+    * the long modulus: no analyzer coerces an evaluated `Pmod`'s operands). */
+  private[graft] def bucketHash(keys: Seq[Expression], numBuckets: Int): Expression =
+    Cast(Pmod(new XxHash64(keys), Literal(numBuckets.toLong)), IntegerType)
+
+  /** [[bucketHash]] over the named key columns. */
+  def bucketExpr(keyCols: Seq[String], numBuckets: Int): Column =
+    GraftSparkInternals.column(bucketHash(keyCols.map(UnresolvedAttribute.quotedString), numBuckets))
 
   def withBucket(df: DataFrame, keyCols: Seq[String], numBuckets: Int): DataFrame =
     df.withColumn(BucketCol, bucketExpr(keyCols, numBuckets))
@@ -1092,27 +1084,58 @@ object LakeTable {
   }
 
   /** Write a small metadata file (overwrite allowed — used for temp paths). */
-  private[graft] def writeString(fs: FileSystem, p: HPath, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private[graft] def writeString(fs: FileSystem, p: HPath, s: String): Unit =
+    writeMeta(fs, p, s, overwrite = true)
 
   /** Create-exclusive write of a small metadata file: returns false if the
-    * path already exists (atomic on HDFS; checked on local). Used for
-    * side-metadata where the first writer wins, such as a monotone marker
+    * path already exists (atomic on HDFS and local). Used for side-metadata
+    * where the first writer wins, such as a monotone marker
     * ([[MonotoneMarkers]]) or a stream source's pinned start version. */
-  private[graft] def writeStringExclusive(fs: FileSystem, p: HPath, s: String): Boolean = {
-    try {
-      val out = fs.create(p, false)
-      try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      true
-    } catch {
+  private[graft] def writeStringExclusive(fs: FileSystem, p: HPath, s: String): Boolean =
+    try { writeMeta(fs, p, s, overwrite = false); true }
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException => false
       case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
       case _: java.io.IOException if fs.exists(p) => false
     }
+
+  /** One small metadata write. On a local filesystem it goes through
+    * `java.nio`, because Hadoop's local filesystem without its native
+    * library forks a `chmod` for each file it creates and for its `.crc`.
+    * That path writes no checksum, deletes one Hadoop wrote for an earlier
+    * version of the file (the next checksummed read would fail on it), and
+    * creates missing parent directories, as Hadoop's `create` does. */
+  private def writeMeta(fs: FileSystem, p: HPath, s: String, overwrite: Boolean): Unit = {
+    import java.nio.file.{Files, NoSuchFileException, StandardOpenOption => Opt}
+    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    if (!isLocal(fs)) {
+      val out = fs.create(p, overwrite)
+      try out.write(bytes)
+      finally out.close()
+    } else {
+      fs match {
+        case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+          Files.deleteIfExists(localNio(fs, c.getChecksumFile(p)))
+        case _ =>
+      }
+      val path = localNio(fs, p)
+      val opts = if (overwrite) Seq(Opt.CREATE, Opt.TRUNCATE_EXISTING) else Seq(Opt.CREATE_NEW)
+      try Files.write(path, bytes, opts: _*)
+      catch {
+        case _: NoSuchFileException =>
+          Files.createDirectories(path.getParent)
+          Files.write(path, bytes, opts: _*)
+      }
+    }
   }
+
+  private def isLocal(fs: FileSystem): Boolean = {
+    val scheme = fs.getUri.getScheme
+    scheme == null || scheme == "file"
+  }
+
+  private def localNio(fs: FileSystem, p: HPath): java.nio.file.Path =
+    java.nio.file.Paths.get(fs.makeQualified(p).toUri)
 
   /** Local-scratch recursive delete (bench/test temp trees — NOT table IO). */
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {

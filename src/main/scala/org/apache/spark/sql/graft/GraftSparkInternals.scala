@@ -1,9 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic.{ExpressionUtils, SparkSession => ClassicSession}
 import org.apache.spark.sql.types.StructType
 
 /** The one `private[sql]` bridge the streaming source needs, isolated in the
@@ -29,4 +30,7 @@ object GraftSparkInternals {
         .queryExecution.toRdd
     classic.internalCreateDataFrame(rdd, schema, isStreaming = true)
   }
+
+  /** `e` as a `Column`: the lake's bucket hash is a Catalyst expression. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
 }

@@ -257,6 +257,44 @@ class LakeTableSpec extends SparkSuite {
     // …while a lossless widening of the same shape still resolves
     assert(t.bucketOf(snap, Seq("id"), Map("id" -> 42.0)) ===
       t.bucketOf(snap, Seq("id"), Map("id" -> 42L)))
+    // the reader's hash equals the writer's bucket for each key type — the
+    // CDC string triple, int, long, decimal, date, timestamp — in both ansi
+    // modes: rows are read back with the bucket of the file that holds them
+    val n = 64
+    val keyed = Seq(
+      Seq("repo", "path", "commit") -> spark.range(n).select(
+        concat(lit("r"), col("id") % 5).as("repo"), concat(lit("p"), col("id")).as("path"),
+        concat(lit("c"), col("id") % 3).as("commit"), col("id").as("v")),
+      Seq("i") -> spark.range(n).select(col("id").cast("int").as("i"), col("id").as("v")),
+      Seq("l") -> spark.range(n).select((col("id") * 1000003L).as("l"), col("id").as("v")),
+      Seq("d") -> spark.range(n).select((col("id") * 1.5).cast("decimal(12,3)").as("d"),
+        col("id").as("v")),
+      Seq("dt") -> spark.range(n).select(date_add(lit("2024-01-01").cast("date"),
+        col("id").cast("int")).as("dt"), col("id").as("v")),
+      Seq("ts") -> spark.range(n).select(timestamp_seconds(col("id") * 3607L + 1700000000L)
+        .as("ts"), col("id").as("v")))
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      for ((keys, df) <- keyed) {
+        val kt = LakeTable(SparkTestBase.tmpDir(s"lake-bucketof-${keys.head}"))(spark)
+        kt.create(df.schema, 8, "t", keyCols = keys)
+        kt.overwrite(df, keys, "t")
+        val ks = kt.currentSnapshot.get
+        // each key as the typed value Spark returns and as the string the
+        // CLI passes
+        val rows = kt.scan(ks).select(
+          (col(LakeTable.BucketCol) +: keys.map(col) ++: keys.map(k => col(k).cast("string"))): _*)
+          .collect()
+        assert(rows.map(_.getInt(0)).distinct.length > 1, s"$keys: one bucket only")
+        for (mode <- Seq("true", "false"); r <- rows) {
+          spark.conf.set("spark.sql.ansi.enabled", mode)
+          val typed = keys.zipWithIndex.map { case (k, i) => k -> r.get(1 + i) }.toMap
+          val text = keys.zipWithIndex.map { case (k, i) => k -> r.get(1 + keys.size + i) }.toMap
+          assert(kt.bucketOf(ks, keys, typed) === r.getInt(0), s"$keys ansi=$mode: $typed")
+          assert(kt.bucketOf(ks, keys, text) === r.getInt(0), s"$keys ansi=$mode: $text")
+        }
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("commit writes O(changed groups) manifest bytes and vacuum bounds meta/") {
@@ -615,6 +653,33 @@ class LakeTableSpec extends SparkSuite {
     // and the next commit repairs the hint
     t.overwrite(Seq(("b", 2L)).toDF("k", "v"), Seq("k"), "t")
     assert(LakeTable.readString(fs, hint).trim === "5")
+  }
+
+  test("local metadata is written without checksum files; a hint Hadoop wrote is replaced readably") {
+    val t = LakeTable(SparkTestBase.tmpDir("lake-nio-meta"))(spark)
+    val fs = t.fs
+    val meta = new org.apache.hadoop.fs.Path(s"${t.root}/meta")
+    val hint = new org.apache.hadoop.fs.Path(meta, "version-hint.text")
+    val hintCrc = new org.apache.hadoop.fs.Path(meta, ".version-hint.text.crc")
+    t.create(schema, 4, "t")
+    t.overwrite(Seq(("a", 1L)).toDF("k", "v"), Seq("k"), "t")
+    assert(!fs.listStatus(meta).exists(_.getPath.getName.endsWith(".crc")))
+    // a hint written through Hadoop's checksummed local filesystem, as an
+    // older writer left it: its .crc no longer matches once the hint changes
+    val out = fs.create(hint, true)
+    try out.write("1".getBytes("UTF-8")) finally out.close()
+    assert(fs.exists(hintCrc))
+    t.overwrite(Seq(("b", 2L)).toDF("k", "v"), Seq("k"), "t")
+    assert(!fs.exists(hintCrc))
+    // the hint reads back (a stale .crc would fail this read, and with it
+    // every hint probe of latestVersion)
+    assert(LakeTable.readString(fs, hint).trim === "2")
+    assert(t.latestVersion === 2L)
+    // create-exclusive: the first writer wins, and missing parents are made
+    val marker = new org.apache.hadoop.fs.Path(s"${t.root}/markers/m-1")
+    assert(LakeTable.writeStringExclusive(fs, marker, "x"))
+    assert(!LakeTable.writeStringExclusive(fs, marker, "y"))
+    assert(LakeTable.readString(fs, marker) === "x")
   }
 
   private def fsckTable(prefix: String, rows: Int = 500): LakeTable = {

@@ -380,6 +380,28 @@ class PlanSpec extends SparkSuite {
       s"point lookup must prune by a _bucket partition filter:\n$plan")
   }
 
+  test("point lookup cost: bucketOf runs no query, a single-generation lookup one, none compiles") {
+    withActionCounter { counter =>
+      def executions(f: => Any): Int = counter.during(f)._2
+      val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-lookup-cost"))(spark),
+        "planlkc")
+      p.bootstrap(numBuckets = 8)
+      p.applyBatch(graft.model.SyntheticEvents.generate(spark, 400), 0L) // CoW: single-file
+      val snap = p.table.currentSnapshot.get
+      val keys = p.state().select("repo", "path", "commit").orderBy("repo", "path", "commit")
+        .limit(5).collect().map(r => Map("repo" -> r.get(0), "path" -> r.get(1),
+          "commit" -> r.get(2))).toSeq
+      def lookup(k: Map[String, Any]) = CdcPipeline.lookupAt(p.table, snap, k)._2.collect()
+      assert(executions(p.table.bucketOf(snap, snap.keyCols, keys(0))) === 0,
+        "bucketOf hashes the key without a query")
+      assert(executions(assert(lookup(keys(0)).length === 1)) === 1,
+        "a single-generation lookup is one SQL execution, its bucket read")
+      lookup(keys(1))
+      assert(keys.drop(2).map(k => SparkTestBase.compilesDuring(lookup(k))) === Seq(0L, 0L, 0L),
+        "steady-state lookups compiled generated code")
+    }
+  }
+
   /** The final executed plan of the lake write `body` runs that carries no
     * merge Observation (a compaction or rebucket rewrite), captured the way
     * the REAL merge write-job tests capture theirs. */
