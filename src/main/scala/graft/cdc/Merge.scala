@@ -1,7 +1,6 @@
 package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -52,11 +51,14 @@ object MergeStats {
   * staging+transaction atomicity (load.go:158-168) as an atomic snapshot
   * commit.
   *
-  * Physical plan (deliberate, for 10^10-event scale — ONE job per batch,
-  * the write, with ONE shuffle): the engine's one LWW ranking
-  * ([[CdcModel.lwwRank]]) over union(target, batch) — one exchange on
-  * `_bucket`, a sort the window needs no second sort for — picks each key's
-  * winner, and the writer emits one file per touched bucket.
+  * Physical plan (deliberate, for 10^10-event scale — ONE SQL execution per
+  * batch, the write, with ONE shuffle; adaptive execution runs it as 2 Spark
+  * jobs, 4 with a copy-on-write target): the engine's one LWW ranking
+  * ([[CdcModel.lwwRank]]) over the batch, unioned with the target on
+  * copy-on-write — one exchange on `_bucket`, a sort the window needs no
+  * second sort for — picks each key's winner, and the writer emits one file
+  * per touched bucket. Each side is ONE projection: planning is a fixed cost
+  * of every batch.
   *  - The target side is the snapshot's manifest-backed relation
   *    ([[LakeTable.scan]]), whose partition column is `_bucket`,
   *    left-semi-joined to the batch's distinct buckets. That join is a
@@ -254,78 +256,71 @@ object Merge {
     val schemaEvolved = evolvedSchema != tableSchema
     val payloadCols = evolvedSchema.fieldNames.filterNot(keys.contains).toSeq // incl _lsn, _deleted
 
-    // --- LSN watermark guard (ordered sources only) + bucket the batch ---
+    // --- the batch side: the LSN watermark guard (ordered sources only),
+    // then ONE projection onto the row schema, `_bucket` hashed over the
+    // batch's own key columns ---
     val fresh =
       if (orderedDelivery) Dedup.aboveWatermark(events, snap.watermarkLsn)
       else events
-    val batchB = LakeTable.withBucket(fresh, keys, numBuckets)
+    val rowSchema = evolvedSchema
+      .add(StructField(LakeTable.BucketCol, IntegerType, nullable = false))
+      .add(StructField(SrcCol, LongType, nullable = false))
+    val batch = SchemaEvolution.conform(fresh, rowSchema, Map(
+      LakeTable.BucketCol -> LakeTable.bucketExpr(keys, numBuckets),
+      CdcModel.RowLsnCol -> col(CdcModel.LsnCol),
+      CdcModel.DeletedCol -> (col(CdcModel.OpCol) === "D"),
+      SrcCol -> lit(1L)))
 
-    // --- the target side: the stored rows of the buckets this batch touches.
-    // `_bucket` is the manifest relation's partition value, so the left-semi
-    // join against the batch's distinct buckets is a broadcast join on the
-    // partition column and dynamic partition pruning cuts the target scan to
-    // the touched buckets' files at run time, inside this one write job — no
-    // pre-pass learns the bucket set first. `_bucket >= 0` is always true
-    // (pmod is non-negative) but is load-bearing: DPP only prunes when the
+    // --- the target side (copy-on-write, non-empty table only): the stored
+    // rows of the touched buckets. `_bucket` is the manifest relation's
+    // partition value, so the left-semi join against the batch's distinct
+    // buckets is a broadcast join on the partition column, and dynamic
+    // partition pruning cuts the target scan to the touched buckets' files at
+    // run time inside this one write — no pre-pass. `_bucket >= 0` is always
+    // true (pmod is non-negative) but load-bearing: DPP only prunes when the
     // broadcast side carries a predicate Catalyst deems selective
-    // (PartitionPruning.hasSelectivePredicate); without it every target file
-    // is read. Merge-on-read never reads the target and an empty table has
-    // nothing to read: a false filter lets the optimizer drop that side.
-    val stored = table.scan(snap)
-    val targetRows =
-      if (mergeOnRead || snap.files.isEmpty) stored.where(lit(false))
-      else stored.join(
-        broadcast(batchB.select(LakeTable.BucketCol).distinct()
-          .filter(col(LakeTable.BucketCol) >= 0)),
-        Seq(LakeTable.BucketCol), "left_semi")
-    // stored rows re-enter the LWW order EXACTLY as the event that produced
-    // them would: (their _lsn, their tombstone flag, their content). This
-    // makes redelivery of ANY event subset a no-op — including a same-LSN
-    // losing event alone, which with a lower stored rank or an empty stored
-    // tie-break would wrongly overwrite the stored winner. Only _src
-    // distinguishes the sides; both carry `_bucket` through the union: the
-    // target's is its file's partition value, the batch's the hash computed
-    // above.
-    val rowSchema = evolvedSchema.add(StructField(LakeTable.BucketCol, IntegerType, nullable = false))
-    val target = SchemaEvolution.conform(targetRows, rowSchema)
-      .withColumn(CdcModel.DeletedCol, coalesce(col(CdcModel.DeletedCol), lit(false)))
-      .withColumn(SrcCol, lit(0L))
-
-    val batchConformed =
-      SchemaEvolution.conform(
-          batchB.withColumn(CdcModel.RowLsnCol, col(CdcModel.LsnCol))
-            .withColumn(CdcModel.DeletedCol, col(CdcModel.OpCol) === "D"),
-          rowSchema)
-        .withColumn(SrcCol, lit(1L))
+    // (PartitionPruning.hasSelectivePredicate). Stored rows re-enter the LWW
+    // order EXACTLY as the event that produced them would (their _lsn,
+    // tombstone flag and content), so redelivering ANY event subset — a
+    // same-LSN loser alone included — is a no-op. Only _src tells the sides
+    // apart.
+    val rows =
+      if (mergeOnRead || snap.files.isEmpty) batch
+      else {
+        val touched = table.scan(snap).join(
+          broadcast(batch.select(LakeTable.BucketCol).distinct()
+            .filter(col(LakeTable.BucketCol) >= 0)),
+          Seq(LakeTable.BucketCol), "left_semi")
+        val del = if (tableFields.contains(CdcModel.DeletedCol)) col(CdcModel.DeletedCol) else lit(null)
+        SchemaEvolution.conform(touched, rowSchema,
+          Map(CdcModel.DeletedCol -> coalesce(del, lit(false)), SrcCol -> lit(0L))).union(batch)
+      }
 
     // --- the merge + write job: the LWW ranking ([[CdcModel.lwwRank]]) over
-    // the union, one shuffle on `_bucket`. Sub-bucket salting (skew):
+    // the rows, one shuffle on `_bucket`. Sub-bucket salting (skew):
     // partitioning on _bucket alone caps parallelism at the touched-bucket
     // count and makes one hot bucket a single task; with salt S > 1 a hot
     // bucket spreads over S tasks. Cost: up to S files per touched bucket
     // per batch instead of 1 — size S to the observed skew, not to the
     // cluster (graft.merge.salt, default 1).
-    val salt = spark.conf.getOption("graft.merge.salt").map(_.toInt).getOrElse(1)
-    val (ranked, w) = CdcModel.lwwRank(
-      target.select(batchConformed.columns.map(col): _*) // align column order for union
-        .unionByName(batchConformed),
-      keys, Some(spark.conf.get("spark.sql.shuffle.partitions").toInt), salt)
     // ONE Observation for every batch statistic, in both modes (inside a
     // streaming foreachBatch only ONE of two CollectMetrics nodes on the
     // write job ever reports — a second Observation.get deadlocked the
     // micro-batch in the round-3 design). It sits between the window and the
     // winner filter, where every row of both sides passes: events in and
     // the LSN range over the batch rows; distinctKeys = the winners whose
-    // key group holds a batch row (an unbounded max over _src on the
+    // key group holds a batch row (`_hasBatch`, a max over _src on the
     // ranking's own window, so it adds no pass); and the buckets whose
     // TARGET rows this job read — the files the commit removes (see the
     // class doc for why not the buckets of the files written).
+    val salt = spark.conf.getOption("graft.merge.salt").map(_.toInt).getOrElse(1)
+    val ranked = CdcModel.lwwRank(rows, keys,
+      Some(spark.conf.get("spark.sql.shuffle.partitions").toInt), salt,
+      perKey = Seq("_hasBatch" -> max(col(SrcCol))))
     val obs = Observation(s"merge-$appId-$batchId-${snap.version}")
     val fromBatch = col(SrcCol) === 1L
     val winner = col(CdcModel.RankCol) === 1
     val winners = ranked
-      .withColumn("_hasBatch",
-        max(col(SrcCol)).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .observe(obs, sum(col(SrcCol)).as("n"),
         min(when(fromBatch, col(CdcModel.RowLsnCol))).as("mn"),
         max(when(fromBatch, col(CdcModel.RowLsnCol))).as("mx"),

@@ -80,19 +80,15 @@ object SchemaEvolution {
     StructType(widened ++ added)
   }
 
-  /** True if applying `incoming` on top of `table` changes the table schema. */
-  def evolves(table: StructType, incoming: StructType): Boolean =
-    merge(table, incoming) != table
-
-  /** Project `df` onto `target` schema: cast shared columns, fill missing
-    * ones with null. Keeps column order of `target`.
+  /** Project `df` onto `target` schema in ONE select: a `derived` column is
+    * computed from its expression, a shared one cast, a missing one null.
+    * Keeps column order of `target`.
     */
-  def conform(df: DataFrame, target: StructType): DataFrame = {
+  def conform(df: DataFrame, target: StructType, derived: Map[String, Column] = Map.empty): DataFrame = {
     val have = df.columns.map(_.toLowerCase).toSet
-    val cols: Seq[Column] = target.fields.toSeq.map { f =>
-      if (have.contains(f.name.toLowerCase)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }
-    df.select(cols: _*)
+    df.select(target.fields.toSeq.map { f =>
+      derived.getOrElse(f.name, if (have.contains(f.name.toLowerCase)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*)
   }
 }

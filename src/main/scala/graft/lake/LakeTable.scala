@@ -20,7 +20,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSparkInternals
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
-import org.apache.spark.util.SerializableConfiguration
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -516,7 +515,7 @@ final class LakeTable(val root: String, spark: SparkSession) {
     val plan = qe.executedPlan
     val bucket = plan.output.filter(_.name == BucketCol)
     require(bucket.nonEmpty, s"writeDataFiles needs a $BucketCol column")
-    val write = new LakeWrite(dataDir, new SerializableConfiguration(hconf))
+    val write = new LakeWrite(dataDir)
     SQLExecution.withNewExecutionId(qe, Some("writeDataFiles")) {
       FileFormatWriter.write(spark.asInstanceOf[ClassicSession], plan, new ParquetFileFormat,
         write, FileFormatWriter.OutputSpec(dataDir.toString, Map.empty, plan.output), hconf,
@@ -934,14 +933,16 @@ private final class ManifestFileIndex(dataDir: HPath, files: List[DataFile]) ext
 }
 
 /** [[LakeTable.writeDataFiles]]'s commit protocol and stats tracker. Tasks
-  * write each file at its final name `data/<bucket>-<uuid>.parquet` and
-  * report its (bucket, rows, bytes). Safe in `data/`: readers find data files
-  * only through manifests, and vacuum collects an orphan after its grace
-  * window. A failed job deletes its committed tasks' files; a successful one
-  * touches them, so an early-closed file's grace clock starts at publication. */
-private final class LakeWrite(dataDir: HPath, conf: SerializableConfiguration)
+  * write each file at its final name `data/<bucket>-<uuid>.parquet`, track
+  * its (bucket, rows) and, at task commit, stat its bytes through the task's
+  * own Hadoop configuration (this object ships none). Safe in `data/`:
+  * readers find data files only through manifests, and vacuum collects an
+  * orphan after its grace window. A failed job deletes its committed tasks'
+  * files; a successful one touches them, so an early-closed file's grace
+  * clock starts at publication. */
+private[graft] final class LakeWrite(dataDir: HPath)
     extends FileCommitProtocol with WriteJobStatsTracker with Serializable {
-  @transient private var committed: List[String] = Nil // driver side
+  @transient private var committed: Map[String, Long] = Map.empty // driver side: path -> bytes
   @transient private var attemptFiles: List[String] = Nil // task side
   @transient var files: List[DataFile] = Nil // the job's result, driver side
 
@@ -956,16 +957,20 @@ private final class LakeWrite(dataDir: HPath, conf: SerializableConfiguration)
     attemptFiles.head
   }
 
-  def commitTask(task: TaskAttemptContext): TaskCommitMessage = new TaskCommitMessage(attemptFiles)
+  // the task's files are closed by now
+  def commitTask(task: TaskAttemptContext): TaskCommitMessage = {
+    val fs = dataDir.getFileSystem(task.getConfiguration)
+    new TaskCommitMessage(attemptFiles.map(p => p -> fs.getFileStatus(new HPath(p)).getLen).toMap)
+  }
   def abortTask(task: TaskAttemptContext): Unit = delete(attemptFiles, task.getConfiguration)
   override def onTaskCommit(msg: TaskCommitMessage): Unit =
-    committed :::= msg.obj.asInstanceOf[List[String]]
-  def abortJob(job: JobContext): Unit = delete(committed, job.getConfiguration)
+    committed ++= msg.obj.asInstanceOf[Map[String, Long]]
+  def abortJob(job: JobContext): Unit = delete(committed.keys.toList, job.getConfiguration)
 
   def commitJob(job: JobContext, msgs: Seq[TaskCommitMessage]): Unit = {
     val fs = dataDir.getFileSystem(job.getConfiguration)
     // a filesystem that refuses setTimes keeps the close time
-    LakeTable.inParallel(committed) { p =>
+    LakeTable.inParallel(committed.keys.toList) { p =>
       try fs.setTimes(new HPath(p), System.currentTimeMillis(), -1)
       catch { case _: UnsupportedOperationException | _: java.io.IOException => }
     }
@@ -983,16 +988,15 @@ private final class LakeWrite(dataDir: HPath, conf: SerializableConfiguration)
     def newFile(path: String): Unit =
       open(path) = new Open(new HPath(path).getName.takeWhile(_ != '-').toInt)
     def newRow(path: String, row: InternalRow): Unit = open(path).rows += 1
-    def closeFile(path: String): Unit = {
-      val (p, f) = (new HPath(path), open.remove(path).get)
-      val bytes = p.getFileSystem(conf.value).getFileStatus(p).getLen
-      closed ::= DataFile(p.getName, f.bucket, f.rows, bytes)
-    }
+    def closeFile(path: String): Unit = open.remove(path).foreach(f => // bytes: at task commit
+      closed ::= DataFile(new HPath(path).getName, f.bucket, f.rows, 0L))
     def getFinalStats(taskCommitTime: Long): WriteTaskStats = LakeWritten(closed.reverse)
   }
 
+  // runs after commitJob, so every task commit's bytes are in
   def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
     files = stats.toList.flatMap { case LakeWritten(f) => f }
+      .map(f => f.copy(bytes = committed(new HPath(dataDir, f.path).toString)))
 }
 
 private final case class LakeWritten(files: List[DataFile]) extends WriteTaskStats

@@ -2,8 +2,10 @@ package graft.model
 
 import java.sql.Timestamp
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -98,36 +100,39 @@ object CdcModel {
     * window into several passes, and a salt left out of them would cost a
     * second shuffle.)
     *
-    * Returns the rows with `_rn` (1 = the key's winner) and the window spec,
-    * so a caller can put per-key aggregates on the same pass. */
+    * Returns the rows with `_rn` (1 = the key's winner) and, on the same
+    * window pass, a column per `perKey` (name, aggregate): the aggregate over
+    * the key's whole group. Three projections build it. */
   def lwwRank(df: DataFrame, keys: Seq[String], numPartitions: Option[Int],
-      salt: Int = 1, tieCols: Option[Seq[String]] = None): (DataFrame, WindowSpec) = {
+      salt: Int = 1, tieCols: Option[Seq[String]] = None,
+      perKey: Seq[(String, Column)] = Nil): DataFrame = {
     val cluster =
       if (salt <= 1) Seq(graft.lake.LakeTable.BucketCol)
       else Seq(graft.lake.LakeTable.BucketCol, SaltCol)
-    val hashed = df.withColumn(KeyHashCol, xxhash64(keys.map(col): _*))
-    val salted =
-      if (salt <= 1) hashed else hashed.withColumn(SaltCol, pmod(col(KeyHashCol), lit(salt)))
+    val keyHash = xxhash64(keys.map(col): _*)
+    val hashed = df.withColumns(ListMap(KeyHashCol -> keyHash) ++
+      (if (salt <= 1) Nil else Seq(SaltCol -> pmod(keyHash, lit(salt)))))
     val clustered = numPartitions match {
-      case Some(n) => salted.repartition(n, cluster.map(col): _*)
-      case None => salted.repartition(cluster.map(col): _*)
+      case Some(n) => hashed.repartition(n, cluster.map(col): _*)
+      case None => hashed.repartition(cluster.map(col): _*)
     }
     val del =
       if (df.columns.contains(DeletedCol)) coalesce(col(DeletedCol), lit(false))
       else lit(false)
-    val ranked = clustered
-      .withColumn(DelRankCol, del.cast("int"))
-      .withColumn(TieCol, lwwTieBreak(tieCols.getOrElse(df.columns.toIndexedSeq)))
+    val ranked = clustered.withColumns(ListMap(DelRankCol -> del.cast("int"),
+      TieCol -> lwwTieBreak(tieCols.getOrElse(df.columns.toIndexedSeq))))
     val partCols = (cluster :+ KeyHashCol).map(col) ++ keys.map(col)
     val order = Seq(col(RowLsnCol).desc, col(DelRankCol).desc, col(TieCol).desc)
     val w = Window.partitionBy(partCols: _*).orderBy(order: _*)
-    (ranked.sortWithinPartitions(partCols ++ order: _*).withColumn(RankCol, row_number().over(w)), w)
+    val group = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked.sortWithinPartitions(partCols ++ order: _*).withColumns(ListMap(RankCol -> row_number().over(w)) ++
+      perKey.map { case (n, agg) => n -> agg.over(group) })
   }
 
   /** [[lwwRank]]'s winners: one row per key, with `df`'s columns. */
   def lwwResolve(df: DataFrame, keys: Seq[String], numPartitions: Option[Int] = None,
       tieCols: Option[Seq[String]] = None): DataFrame =
-    lwwRank(df, keys, numPartitions, tieCols = tieCols)._1
+    lwwRank(df, keys, numPartitions, tieCols = tieCols)
       .filter(col(RankCol) === 1)
       .drop(KeyHashCol, DelRankCol, TieCol, RankCol)
 

@@ -604,6 +604,37 @@ class LakeTableSpec extends SparkSuite {
     }
   }
 
+  test("the data-file write ships no Hadoop configuration; task commits report exact bytes") {
+    // every write task deserializes what the commit protocol and the stats
+    // tracker serialize: a session Hadoop configuration is over 100 KB
+    val dataDir = new org.apache.hadoop.fs.Path(SparkTestBase.tmpDir("lake-ship"), "data")
+    val write = new graft.lake.LakeWrite(dataDir)
+    def serializedBytes(o: AnyRef): Int = {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(o)
+      out.close()
+      bytes.size
+    }
+    val asProtocol: org.apache.spark.internal.io.FileCommitProtocol = write
+    val asTracker: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker = write
+    Seq("commit protocol" -> asProtocol, "stats tracker" -> asTracker).foreach { case (what, o) =>
+      val n = serializedBytes(o)
+      assert(n < 4096, s"the write's $what serializes to $n bytes")
+    }
+    // the bytes a task commit stats are the bytes on disk
+    val t = LakeTable(SparkTestBase.tmpDir("lake-bytes"))(spark)
+    t.create(schema, 4, "t")
+    val files = t.writeDataFiles(spark.range(0, 400, 1, 2)
+      .select((col("id") % 4).cast("int").as(LakeTable.BucketCol), col("id").as("v"))
+      .repartition(2, col(LakeTable.BucketCol)))
+    assert(files.map(_.bucket).sorted === Seq(0, 1, 2, 3) && files.map(_.rows).sum === 400)
+    files.foreach { f =>
+      assert(f.bytes === t.fs.getFileStatus(
+        new org.apache.hadoop.fs.Path(t.root, s"data/${f.path}")).getLen, f.path)
+    }
+  }
+
   test("vacuum sweeps staging directories a crashed writer left behind") {
     val t = LakeTable(SparkTestBase.tmpDir("lake-stagegc"))(spark)
     t.create(schema, 4, "t")

@@ -324,6 +324,53 @@ class PlanSpec extends SparkSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("REAL merge write plan size: operators above the batch relation, per mode") {
+    // building and analysing the merge's plan is a fixed cost of every batch
+    // that grows with its operators: pin their number in the analyzed plan
+    // of the real write. The batch is one Parquet relation and the target
+    // one manifest relation, both leaves, so every other node is one the
+    // merge built.
+    import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+    import org.apache.spark.sql.execution.QueryExecution
+    val captured = new java.util.concurrent.CopyOnWriteArrayList[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = captured.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val dir = SparkTestBase.tmpDir("plan-size") + "/events"
+    graft.model.SyntheticEvents.generate(spark, 2 * 300L, seed = 3L)
+      .withColumn("b", floor(col("lsn") / 300)).write.partitionBy("b").parquet(dir)
+    def batch(i: Int) = spark.read.parquet(s"$dir/b=$i")
+    spark.listenerManager.register(listener)
+    try {
+      // (merge-on-read, ordered delivery) -> operators of the second batch's write
+      val operators = Seq((true, true), (true, false), (false, false)).map { case (mor, ordered) =>
+        val appId = s"plan-size-$mor-$ordered"
+        val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir(appId))(spark), appId,
+          mergeOnRead = mor, compactEveryFiles = 0)
+        p.bootstrap(numBuckets = 8)
+        def merge(i: Int) = graft.cdc.Merge(p.table, batch(i), appId, i.toLong,
+          orderedDelivery = ordered, mergeOnRead = mor)
+        merge(0)
+        val tag = s"merge-$appId-1-${p.table.currentSnapshot.get.version}"
+        merge(1)
+        // listener delivery is async — poll for this batch's write
+        def write = {
+          import scala.jdk.CollectionConverters._
+          captured.asScala.find(_.analyzed.exists {
+            case c: CollectMetrics => c.name == tag
+            case _ => false
+          })
+        }
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (write.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+        val plan = write.getOrElse(fail(s"no write plan captured for $tag")).analyzed
+        (mor, ordered) -> plan.collect { case n if n.children.nonEmpty => n }.size
+      }.toMap
+      assert(operators === Map((true, true) -> 13, (true, false) -> 12, (false, false) -> 21))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("generation-aware reads: single-generation tables plan no shuffle and no window") {
     val ev = DerivedEvents.fromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
     // copy-on-write: every bucket holds exactly one file after a merge —

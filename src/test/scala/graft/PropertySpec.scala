@@ -121,6 +121,14 @@ class PropertySpec extends SparkSuite {
       assert(digestOf(CdcPipeline.liveState(t)) === want, s"seed=$seed: compaction")
       t.rebucket(5, CdcModel.KeyCols)
       assert(digestOf(CdcPipeline.liveState(t)) === want, s"seed=$seed: rebucket")
+      // a salted merge splits each bucket's keys over several tasks
+      val salted = LakeTable(SparkTestBase.tmpDir("prop-lww-salt"))(spark)
+      val sp = new CdcPipeline(salted, s"prop-lww-salt-$seed")
+      sp.bootstrap(numBuckets = 8)
+      spark.conf.set("graft.merge.salt", "3")
+      try sp.replay(events, 3)
+      finally spark.conf.unset("graft.merge.salt")
+      assert(digestOf(CdcPipeline.liveState(salted)) === want, s"seed=$seed: salted merge")
     }
   }
 
